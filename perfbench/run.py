@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
 """Run one benchmark workload against the engine in this checkout.
 
-    python3 perfbench/run.py --workload tile_reads --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload merge_bot --seed 1 --seconds 8 --trace 0
 
-Builds the engine's sources together with the benchmark driver (sbt, in
-perfbench/), then runs the driver in one JVM without sbt. The last line
+Builds the engine's sources together with the benchmark program (sbt, in
+perfbench/), then runs it in one JVM without sbt. The last line
 of stdout is the result JSON; BENCHMARK.json names its metrics.
 """
 import argparse
