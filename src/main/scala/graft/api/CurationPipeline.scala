@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Dedup, TextAnalysis}
+import graft.util.Checkpoints
 
 /** End-to-end corpus curation: composes the `graft.pipeline` operators in
   * the order a production pretraining-data pipeline applies them, as ONE
@@ -72,7 +73,12 @@ object CurationPipeline {
     * every signal that fed the decision (cluster id, contaminated
     * fraction, lang, quality score, token count), `drop_reason` = the
     * FIRST failing stage in funnel order (null when kept), and
-    * `keep = drop_reason IS NULL`. One row per input document. */
+    * `keep = drop_reason IS NULL`. One row per input document; `idCol`
+    * must be unique, as every stage keys on it.
+    *
+    * Unless `graft.curation.eagerStages` is false, the call runs the
+    * funnel and returns the verdict as a local checkpoint; every
+    * intermediate it materialized is freed before it returns. */
   def curate(corpus: DataFrame, benchmark: DataFrame, idCol: String,
              textCol: String, cfg: Config = Config()): DataFrame = {
     val base = corpus.select(col(idCol).as("doc_id"), col(textCol).as("text"))
@@ -80,68 +86,71 @@ object CurationPipeline {
     // textCol are read with the same names as the corpus's
     val bench = benchmark.select(col(idCol).as("doc_id"), col(textCol).as("text"))
 
-    // Stage outputs below are EAGERLY materialized (cache + count), not
-    // lazily cached: AQE runs the downstream consumers' exchange jobs
-    // concurrently (CompletableFuture), and concurrent first-readers of a
-    // lazy cache STAMPEDE — each recomputes the full lineage before any
-    // partition lands (the round-6 p17 shingle-cache lesson; measured
-    // here: exactKept's corpus-wide build executed 3x, exactDrop's md5
-    // window 2x, ~25 s of duplicated CPU per funnel run).
+    // Stage outputs below are EAGERLY materialized as local checkpoints:
+    // each is computed once, before any consumer runs — AQE submits the
+    // downstream exchange jobs concurrently, and concurrent first-readers
+    // of a lazy cache STAMPEDE, each recomputing the full lineage (the
+    // round-6 p17 shingle-cache lesson) — and each cuts the lineage, so
+    // later plans scan a LogicalRDD instead of re-planning and re-printing
+    // the nested cached plans of every earlier stage.
     // Plan-only consumers (Explain, PlanAuditSpec) opt out via the session
     // conf below — they build the frame purely to inspect its plan and
-    // must not pay the funnel's execution at construction time. The lazy
-    // fallback still marks the cache so an opted-out frame that IS later
-    // executed remains correct (it merely risks the stampede recompute).
-    val materialize = corpus.sparkSession.conf
+    // must not pay the funnel's execution at construction time. The opt-out
+    // keeps a lazy cache, so the plan still shows the whole dataflow and
+    // an opted-out frame that IS later executed remains correct.
+    val eagerStages = corpus.sparkSession.conf
       .get("graft.curation.eagerStages", "true").toBoolean
-    def eager(df: DataFrame): DataFrame =
-      { val c = df.cache(); if (materialize) c.count(); c }
+    // what this call materializes, freed once the verdict is (below)
+    val made = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def stage(df: DataFrame): DataFrame =
+      if (!eagerStages) df.cache()
+      else { val c = df.localCheckpoint(true); made ++= Seq(df, c); c }
 
     // 1. exact duplicates: only non-canonical members of >1 groups
-    val exactDrop = eager(Dedup.exactDuplicates(base, "doc_id", "text")
+    val exactDrop = stage(Dedup.exactDuplicates(base, "doc_id", "text")
       .where(col("doc_id") =!= col("canonical_id"))
       .select(col("doc_id"), lit(true).as("exact_dup")))
 
     // 2. near-dup clusters over the exact-canonical survivors (running it
     // on the full set would re-find every exact group as a near cluster).
-    // Both id-frames are referenced twice below (survivor filter + final
-    // assembly); they carry ids and flags only — never text — so caching
-    // them is bounded by the dup subset, not the corpus.
-    // exactKept feeds three consumers (pair generation, the CC node
-    // universe, the survivor filter) — cache it like `survivors` below:
-    // both are the materialized stage outputs a production funnel
-    // checkpoints anyway
-    val exactKept = eager(base.join(exactDrop, Seq("doc_id"), "left_anti"))
-    val resolved = Dedup.resolveByComponents(exactKept, "doc_id",
-        Dedup.minhashLshPairs(exactKept, "doc_id", "text",
-          cfg.ngram, cfg.numHashes, cfg.bandRows, cfg.minSim)
-          .select(col("a_id"), col("b_id")))
-      .select(col("doc_id"), col("cluster_id"), col("keep").as("near_keep"))
-      .cache()
+    // exactKept (id, text) feeds three consumers: pair generation, the CC
+    // node universe and the survivor filter. resolved (id, cluster, flag)
+    // feeds the survivor filter and the final assembly. Both are stage
+    // outputs a production funnel checkpoints anyway.
+    val exactKept = stage(base.join(exactDrop, Seq("doc_id"), "left_anti"))
+    // the pair list is a checkpoint of its own, and the component forest
+    // built from it cuts it out of resolved's lineage: track it directly
+    val pairs = Dedup.minhashLshPairs(exactKept, "doc_id", "text",
+      cfg.ngram, cfg.numHashes, cfg.bandRows, cfg.minSim)
+    made += pairs
+    val resolved = stage(Dedup.resolveByComponents(exactKept, "doc_id",
+        pairs.select(col("a_id"), col("b_id")))
+      .select(col("doc_id"), col("cluster_id"), col("keep").as("near_keep")))
 
     // 3-5. map-side signals — over the stage-1/2 SURVIVORS only: at a
     // realistic 30-50% dup rate, scoring the full corpus would pay
     // 1.5-2x for documents already dropped. Dropped rows surface NULL
     // signals (their drop_reason is decided before these stages run).
-    // The survivor corpus feeds three signal passes; cache it — this is
-    // the in-session stand-in for the materialization a production run
-    // does anyway (the dedup output IS the pipeline's checkpoint artifact).
-    val survivors = eager(exactKept.join(
+    // The survivor corpus feeds the contamination and signal passes —
+    // the dedup output IS the pipeline's checkpoint artifact.
+    val survivors = stage(exactKept.join(
         resolved.where(col("near_keep")).select("doc_id"), Seq("doc_id"), "left_semi"))
     val contam = Dedup.contaminationFlags(survivors, bench, "doc_id", "text",
         cfg.decontamNgram, cfg.maxContamFrac)
       .select(col("doc_id"), col("contaminated_frac"),
         col("flagged").as("contaminated"))
     // lang / token-count / quality are all map-side expressions — ONE
-    // projection pass over the survivor cache, one join back
+    // projection pass over the survivor checkpoint, one join back
     val signals = survivors.select(col("doc_id"),
       TextAnalysis.langId(col("text")).as("lang"),
       TextAnalysis.bpeishTokenCount(col("text")).as("n_tokens"),
       TextAnalysis.qualityScore(col("text")).as("quality_score"))
 
-    base.select("doc_id")
-      .join(exactDrop, Seq("doc_id"), "left")
-      .join(resolved, Seq("doc_id"), "left")
+    // one row per document without a join back to the corpus: the exact
+    // drops plus the exact-kept documents, which resolveByComponents
+    // keeps one-for-one
+    val verdict = resolved.withColumn("exact_dup", lit(false))
+      .unionByName(exactDrop, allowMissingColumns = true)
       .join(contam, Seq("doc_id"), "left")
       .join(signals, Seq("doc_id"), "left")
       .withColumn("drop_reason",
@@ -156,5 +165,18 @@ object CurationPipeline {
         col("contaminated_frac"),
         col("lang"), col("n_tokens"), col("quality_score"),
         col("drop_reason"), col("drop_reason").isNull.as("keep"))
+    if (!eagerStages) verdict
+    else {
+      // materialize the narrow verdict, then free every checkpoint the
+      // stages created — their own and those their operators left behind
+      // (the pair list, the component forest). clearCache() reaches none
+      // of them. The inputs' checkpoints, if any, are the caller's.
+      val out = verdict.localCheckpoint(true)
+      val inputs = (Checkpoints.rdds(corpus) ++ Checkpoints.rdds(benchmark))
+        .map(_.id).toSet
+      made.flatMap(Checkpoints.rdds).filterNot(r => inputs(r.id))
+        .foreach(_.unpersist(blocking = false))
+      out
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints
+
 /** HITS (Kleinberg 1999) — hubs and authorities by mutual reinforcement:
   * a node is a good AUTHORITY when good hubs point at it, a good HUB
   * when it points at good authorities. The directional companion to
@@ -43,14 +45,6 @@ import org.apache.spark.sql.functions._
   * convention), freed when the caller drops caches.
   */
 object Hits {
-
-  /** The persisted-RDD id behind a checkpointed Dataset — lets the round
-    * loop free exactly the checkpoints it created (a blanket registry
-    * diff would unpersist concurrent jobs' caches on a shared session). */
-  private def checkpointRddId(df: DataFrame): Option[Int] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
 
   /** `rounds` full hub↔authority iterations over the directed `edges`.
     * Returns (node, authority, hub) in float units, rounded to 6. */
@@ -94,7 +88,7 @@ object Hits {
       // round's checkpoints are unreferenced from here on
       val persisted = sc.getPersistentRDDs
       prevIds.foreach(id => persisted.get(id).foreach(_.unpersist(false)))
-      prevIds = (checkpointRddId(a) ++ checkpointRddId(h)).toSeq
+      prevIds = (Checkpoints.rdds(a) ++ Checkpoints.rdds(h)).map(_.id)
     }
     nodes.join(a, Seq("node"), "left").join(h, Seq("node"), "left")
       .select(col("node"),

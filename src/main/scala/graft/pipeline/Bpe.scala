@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints
+
 /** Distributed BPE-merge tokenizer induction (Sennrich et al. 2016,
   * arXiv:1508.07909) — the iterative pair-merging that [[TextAnalysis.vocabTopK]]'s
   * whole-word ranking is not: each round finds the globally most frequent
@@ -55,14 +57,6 @@ object Bpe {
     df.select(explode(filter(split(col(textCol), " "),
         x => x =!= "" && !x.contains(Sep))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
-
-  /** The persisted-RDD id behind a checkpointed Dataset (its analyzed
-    * plan is a single LogicalRDD) — lets [[train]] free exactly the
-    * checkpoints it created, never a concurrent job's. */
-  private def checkpointRddId(df: DataFrame): Option[Int] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
 
   /** BATCHED merge selection with an EXACT-equivalence guarantee: from
     * the round's top-`batchK` pairs (sorted (freq desc, pair-string asc),
@@ -228,7 +222,7 @@ object Bpe {
         col("cnt"))
       .where(size(col("syms")) > 0)
       .localCheckpoint()
-    ownCheckpoints ++= checkpointRddId(st)
+    ownCheckpoints ++= Checkpoints.rdds(st).map(_.id)
     val merges = Seq.newBuilder[Merge]
     // all merge outputs so far: selectBatch's alias rule needs to know
     // every multi-code-point symbol that can exist in the state (original
@@ -283,7 +277,7 @@ object Bpe {
         // instead of costing a separate job per round (2x fewer jobs —
         // round overhead dominates when the histogram is small)
         st = st.withColumn("syms", mergeUdf(col("syms"))).localCheckpoint(false)
-        ownCheckpoints ++= checkpointRddId(st)
+        ownCheckpoints ++= Checkpoints.rdds(st).map(_.id)
         rounds += 1
       }
     }

@@ -421,119 +421,129 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate pairs, verified with exact n-gram Jaccard.
     * numHashes must be divisible by bandRows. Pipeline:
-    * shingle → signature (map-only) → band explode → bucket join on band
-    * key → distinct candidate pairs → Jaccard verify against re-joined
-    * shingle sets. Only (id, band_key) and (id, grams-of-candidates)
-    * shuffle. Hashing is [[PortableHash]] (mod-1e9+7 integer math), so the
-    * DuckDB oracle reproduces signatures and band keys exactly. */
+    * shingle → signature (map-only) → exact-equal collapse → band explode
+    * → bucket join on band key → distinct candidate pairs → Jaccard verify
+    * against re-joined shingle sets → member expansion. Only (id,
+    * band_key) and (id, grams-of-candidates) shuffle. Hashing is
+    * [[PortableHash]] (mod-1e9+7 integer math), so the DuckDB oracle
+    * reproduces signatures and band keys exactly. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int, numHashes: Int, bandRows: Int,
                       minSim: Double): DataFrame = {
     require(numHashes % bandRows == 0, "numHashes must divide into bands")
-    // barrier + cache: g feeds signature generation and both verify joins;
-    // see ngramJaccardPairs for why both exchanges are load-bearing
-    val par2 = df.sparkSession.sparkContext.defaultParallelism
-    // both per-document arrays come from native kernels over the words
-    // array — no gram string is ever materialized, no interpreted UDF:
-    // band keys from minhash_band_keys (bit-identical to the former
-    // string-gram + ScalaUDF path, reproduced by the DuckDB oracle),
-    // verify intersections on ngram_hashes' sorted 64-bit hashes
-    // (codegen'd merge walk; distinct counts unchanged w.h.p. — same
-    // trade as ngramJaccardPairs)
     graft.functions.SortedIntersectSize.register(df.sparkSession)
-    graft.functions.NgramHashes.register(df.sparkSession)
-    graft.functions.MinhashBandKeys.register(df.sparkSession)
-    val g0 = df.repartition(par2)
-      .select(col(idCol).as("id"),
-        filter(split(col(textCol), " "), w => w =!= "").as("words"))
-      .repartition(par2, col("id"))
-      .select(col("id"),
-        call_function("ngram_hashes", col("words"), lit(n)).as("hgrams"),
-        call_function("minhash_band_keys", col("words"),
-          lit(n), lit(numHashes), lit(bandRows)).as("bands"))
-      .withColumn("sz", size(col("hgrams")))
-      // collapse key INSIDE the cache: md5 over the stringified gram-hash
-      // array is the expensive expression of the collapse, and as a
-      // derived column below the cache every downstream reference (rep
-      // table, membership, within-group pairs) re-ran the transform +
-      // array_join + md5 pass — measured 5 full passes at sf0.1 (guide
-      // §1.2 step 2: make the per-task work run once)
-      .withColumn("gk",
-        md5(array_join(transform(col("hgrams"), _.cast("string")), ",")))
-      .cache()
-    // materialized before fan-out — same stampede trade as
-    // ngramJaccardPairs: the band leg and both verify-join legs would
-    // otherwise each recompute the signature pipeline on a time-shared host
-    g0.count()
-    // gram-less docs can never pair. The guard sits ABOVE the cache barrier:
-    // pushed below it, the size filter re-derives the shingling pipeline
-    // inside the single-file parquet scan and runs it serially (measured
-    // 14 s of p3's 21 s at sf0.1 — same trap as ngramJaccardPairs' guard).
-    val g = g0.where(size(col("hgrams")) > 0)
     // exact-equal collapse BEFORE banding (the round-11 hot-bucket fix):
     // documents with identical distinct-gram sets — byte-identical texts,
     // trivially — band once through a representative, so an m-item
     // identical cluster contributes ONE signature per band bucket instead
     // of m (candidate generation O(m), never m²/2 before any verify).
-    // Collapse key = md5 of the sorted gram-hash array (computed once in
-    // the g0 cache above): equal key ⇔ equal gram set (w.h.p., the
-    // documented gram-hash trade). Jaccard depends only on the gram set,
-    // so every member pair inherits its representatives' verified
-    // similarity EXACTLY, and same-set pairs are Jaccard 1 ≥ minSim by
-    // definition — the expanded pair list is bit-identical to the
-    // uncollapsed one.
+    // Jaccard depends only on the gram set, so every member pair inherits
+    // its representatives' verified similarity EXACTLY, and same-set pairs
+    // are Jaccard 1 ≥ minSim by definition — the expanded pair list is
+    // bit-identical to the uncollapsed one.
     //
-    // membership (id → rep = min id of its gram-set group) via ONE
-    // narrow (id, gk) window shuffle instead of groupBy + join-back (two
-    // exchanges over the same rows — guide §2.4); persisted because the
-    // rep filter, the within-group pairs, and both expansion joins read
-    // it (freed after the eager materialization of the result below)
-    val memb = g.select(col("id"), col("gk"))
-      .select(col("id"),
-        min("id").over(Window.partitionBy("gk")).as("rep_id"))
-      .persist()
-    // persisted: the two band-explode legs of the candidate self-join and
-    // both verify joins each re-derived this join (exchange reuse does not
-    // cover self-join legs here — the p2 prefix-join lesson, confirmed in
-    // the p23 stage profile: four ~12 s-CPU recomputes at sf0.1)
-    val reps = g.join(
-      memb.where(col("id") === col("rep_id")).select(col("id")), "id")
-      .persist()
-    val candidates = repBandCandidates(reps)
-    val repPairs = candidates
-      .join(reps.select(col("id").as("a_id"), col("hgrams").as("a_grams"),
-        col("sz").as("a_sz")), "a_id")
-      .join(reps.select(col("id").as("b_id"), col("hgrams").as("b_grams"),
-        col("sz").as("b_sz")), "b_id")
+    // Materialized before fan-out: the two band legs of the candidate
+    // self-join, both verify joins and the within-set explode all read it.
+    // A local checkpoint, not a cache: the pair plan below scans one
+    // LogicalRDD per leg instead of re-planning (and re-printing, on every
+    // AQE update) the collapse's full cached plan at each of the five
+    // references.
+    val reps = gramSetReps(
+        minhashSignatures(df, idCol, textCol, n, numHashes, bandRows))
+      .localCheckpoint(true)
+    def side(p: String) = reps.select(col("id").as(s"${p}_id"),
+      col("hgrams").as(s"${p}_grams"), col("sz").as(s"${p}_sz"),
+      col("members").as(s"${p}_members"))
+    val repPairs = repBandCandidates(reps)
+      .join(side("a"), "a_id")
+      .join(side("b"), "b_id")
       .withColumn("inter",
         expr("sorted_intersect_size(a_grams, b_grams)").cast("double"))
-      .select(col("a_id"), col("b_id"),
+      .select(col("a_members"), col("b_members"),
         round(col("inter") / (col("a_sz") + col("b_sz") - col("inter")), 6)
           .as("jaccard"))
       .where(col("jaccard") >= minSim)
-    // expansion: same-set member pairs (Jaccard exactly 1), then every
-    // cross-set member pair under its representatives' verified score.
-    // rep_id (a long) stands in for gk (32-char string) as the group key:
-    // min-id-per-group is unique per group, so equality is equivalent —
-    // and the self-join shuffles 16 bytes/row instead of ~48 (guide §2.3)
-    val within = memb.as("a").join(memb.as("b"),
-        col("a.rep_id") === col("b.rep_id") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
-        lit(1.0).as("jaccard"))
+    // expansion without joins: the member arrays rode through the verify
+    // joins, so a verified rep pair explodes into its a-members × b-members
+    // (least/greatest restores a_id < b_id — the sets are disjoint), and a
+    // set's own pairs are the i < j slices of its sorted member array,
+    // Jaccard exactly 1
     val cross = repPairs
-      .join(memb.select(col("rep_id").as("a_id"), col("id").as("ma")), "a_id")
-      .join(memb.select(col("rep_id").as("b_id"), col("id").as("mb")), "b_id")
+      .select(explode(col("a_members")).as("ma"), col("b_members"),
+        col("jaccard"))
+      .select(col("ma"), explode(col("b_members")).as("mb"), col("jaccard"))
       .select(least(col("ma"), col("mb")).as("a_id"),
         greatest(col("ma"), col("mb")).as("b_id"), col("jaccard"))
-    // eager materialization of the (narrow) pair list so the working set
-    // can be freed here instead of accumulating in the session cache
-    // across invocations (the Multimodal convention)
+    val within = reps.where(size(col("members")) > 1)
+      .select(col("members"), posexplode(col("members")).as(Seq("i", "a_id")))
+      .select(col("a_id"),
+        explode(slice(col("members"), col("i") + 2,
+          size(col("members")) - col("i") - 1)).as("b_id"),
+        lit(1.0).as("jaccard"))
+    // eager materialization of the (narrow) pair list so the collapse can
+    // be freed here instead of accumulating across invocations (the
+    // Multimodal convention)
     val pairs = within.unionByName(cross).localCheckpoint(true)
-    g0.unpersist()
-    memb.unpersist()
-    reps.unpersist()
+    graft.util.Checkpoints.free(reps)
     pairs
   }
+
+  /** Per-document MinHash inputs (id, hgrams, bands, sz, gk) of
+    * [[minhashLshPairs]]. Both per-document arrays come from native kernels
+    * over the words array — no gram string is ever materialized, no
+    * interpreted UDF: band keys from minhash_band_keys (bit-identical to
+    * the former string-gram + ScalaUDF path, reproduced by the DuckDB
+    * oracle), verify intersections on ngram_hashes' sorted 64-bit hashes
+    * (codegen'd merge walk; distinct counts unchanged w.h.p. — same trade
+    * as ngramJaccardPairs). `gk`, the collapse key, is the md5 of the
+    * sorted gram-hash array: equal key ⇔ equal gram set (w.h.p., the
+    * documented gram-hash trade). */
+  private def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
+                                n: Int, numHashes: Int,
+                                bandRows: Int): DataFrame = {
+    graft.functions.NgramHashes.register(df.sparkSession)
+    graft.functions.MinhashBandKeys.register(df.sparkSession)
+    // spread raw rows BEFORE the per-row kernels (see ngramJaccardPairs);
+    // no id-keyed barrier after the words projection: both kernels read
+    // `words`, so CollapseProject keeps it one projection, and the
+    // collapse's groupBy(gk) exchange follows anyway
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    df.repartition(par)
+      .select(col(idCol).as("id"),
+        filter(split(col(textCol), " "), w => w =!= "").as("words"))
+      .select(col("id"),
+        call_function("ngram_hashes", col("words"), lit(n)).as("hgrams"),
+        call_function("minhash_band_keys", col("words"),
+          lit(n), lit(numHashes), lit(bandRows)).as("bands"))
+      .withColumn("sz", size(col("hgrams")))
+      .withColumn("gk",
+        md5(array_join(transform(col("hgrams"), _.cast("string")), ",")))
+  }
+
+  /** The exact-equal collapse: ONE `groupBy(gk)` emits each distinct gram
+    * set's representative row — the min-id member's (id, hgrams, bands,
+    * sz), via `min_by` — plus the set's ascending member ids. Gram-less
+    * documents can never pair and are dropped.
+    *
+    * Skew: a hot identical group's ids land in one array built by one
+    * task — the same bound as the membership window this replaced, which
+    * put the whole group in one window partition; only the representative
+    * row ever reaches the band join.
+    *
+    * The gram-less guard filters the AGGREGATE's output: below it, the
+    * size predicate would be pushed through the repartition into the
+    * parquet scan and run the shingling kernel there, serially (measured
+    * 14 s of p3's 21 s at sf0.1). Gram-less documents therefore group by
+    * their own id (`lone`) so they never pile into one shared group. */
+  private def gramSetReps(sigs: DataFrame): DataFrame =
+    sigs.groupBy(col("gk"),
+        when(col("sz") > 0, lit(null)).otherwise(col("id")).as("lone"))
+      .agg(min_by(struct(col("id"), col("hgrams"), col("bands"), col("sz")),
+          col("id")).as("rep"),
+        sort_array(collect_list(col("id"))).as("members"))
+      .select(col("rep.id").as("id"), col("rep.hgrams").as("hgrams"),
+        col("rep.bands").as("bands"), col("rep.sz").as("sz"), col("members"))
+      .where(col("sz") > 0)
 
   /** The rep-level LSH band self-join [[minhashLshPairs]] verifies:
     * (a_id, b_id) pairs of representatives sharing at least one band key.
@@ -549,29 +559,12 @@ object Dedup {
   }
 
   /** [[minhashLshPairs]]'s collapse front end, exposed for the hot-bucket
-    * fixture: one representative row (id, hgrams, bands, sz) per DISTINCT
-    * gram set in `df`. */
+    * fixture: one representative row (id, hgrams, bands, sz, members) per
+    * DISTINCT gram set in `df`, members ascending, id = the smallest. */
   private[graft] def minhashReps(df: DataFrame, idCol: String,
                                  textCol: String, n: Int, numHashes: Int,
-                                 bandRows: Int): DataFrame = {
-    graft.functions.NgramHashes.register(df.sparkSession)
-    graft.functions.MinhashBandKeys.register(df.sparkSession)
-    val g = df
-      .select(col(idCol).as("id"),
-        filter(split(col(textCol), " "), w => w =!= "").as("words"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("id"))
-      .select(col("id"),
-        call_function("ngram_hashes", col("words"), lit(n)).as("hgrams"),
-        call_function("minhash_band_keys", col("words"),
-          lit(n), lit(numHashes), lit(bandRows)).as("bands"))
-      .withColumn("sz", size(col("hgrams")))
-      .where(col("sz") > 0)
-      .withColumn("gk",
-        md5(array_join(transform(col("hgrams"), _.cast("string")), ",")))
-    val uniq = g.groupBy("gk").agg(min("id").as("rep_id"))
-    g.join(uniq.select(col("rep_id").as("id")), "id")
-      .select("id", "hgrams", "bands", "sz")
-  }
+                                 bandRows: Int): DataFrame =
+    gramSetReps(minhashSignatures(df, idCol, textCol, n, numHashes, bandRows))
 
   /** SimHash near-dup pairs with Hamming distance <= maxDist, blocked by
     * 15-bit signature chunks (a pair within distance d <= 3 shares at least

@@ -185,9 +185,7 @@ object Unigram {
     // returned DataFrame reads the histogram lazily), train can free its
     // checkpoint immediately (at this operator's claimed scale the
     // histogram of a 100 TB corpus is billions of rows)
-    em.hist.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
+    graft.util.Checkpoints.free(em.hist)
     val total = em.vocab.values.sum
     em.vocab.toSeq.map { case (t, f) =>
       (t, em.rawCnt(t), centiNll(total, f))

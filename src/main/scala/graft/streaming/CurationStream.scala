@@ -77,12 +77,20 @@ object CurationStream {
     val bandIdx = s"$stateRoot/band_idx"
     val docIdx = s"$stateRoot/doc_idx"
 
-    def readPruned(dir: String, buckets: Array[Long], schema: String): DataFrame =
-      try spark.read.parquet(dir).where(col("bucket").isin(buckets: _*))
-      catch { case _: Throwable =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType.fromDDL(schema))
+    // An index that does not exist yet (no batch has kept a document) is
+    // empty state; any other read failure — a corrupt or unreadable index
+    // file — fails the batch, because treating it as empty would silently
+    // keep every duplicate of the lost history. The schema is given, not
+    // inferred: an index directory holding no data files yet reads as
+    // empty instead of failing inference.
+    def readPruned(dir: String, buckets: Array[Long], schema: String): DataFrame = {
+      val st = org.apache.spark.sql.types.StructType.fromDDL(schema)
+      try spark.read.schema(st).parquet(dir).where(col("bucket").isin(buckets: _*))
+      catch { case e: org.apache.spark.sql.AnalysisException
+                if e.getCondition == "PATH_NOT_FOUND" =>
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), st)
       }
+    }
 
     graft.functions.MinhashBandKeys.register(spark)
     val prep = batch0.select(col("doc_id"), col("text"))

@@ -71,9 +71,7 @@ object SketchStream {
           // free THIS batch's checkpoint once written — an indefinitely
           // running stream would otherwise accumulate one persisted RDD
           // per micro-batch (the Bpe.train leak, streaming edition)
-          merged.queryExecution.analyzed.collectFirst {
-            case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-          }.foreach(_.unpersist(false))
+          graft.util.Checkpoints.free(merged)
         }
         ()
       }

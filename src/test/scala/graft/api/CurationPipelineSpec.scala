@@ -22,9 +22,10 @@ class CurationPipelineSpec extends AnyFunSuite {
       "sang of summer and the wind moved to the north over a quiet field " +
       "where the farmer walked to his barn and the day went on in peace"
 
-  test("each funnel stage drops its known positive; keepers survive") {
-    import spark.implicits._
-    val corpus = Seq(
+  // every funnel stage has a known positive
+  private def funnelCorpus(s: SparkSession) = {
+    import s.implicits._
+    (Seq(
       (1L, good),                                  // keep
       (2L, good),                                  // exact dup of 1
       (3L, good.replace("quiet field", "green field")), // near dup of 1
@@ -33,10 +34,12 @@ class CurationPipelineSpec extends AnyFunSuite {
       // detected as English (stopword hit) but short + symbol-heavy →
       // fails quality, not language
       (6L, "the $$ ## @@ :: ;; !! ^^ && **")
-    ).toDF("id", "text")
-    val bench = Seq((100L, "key alpha beta gamma delta epsilon zeta eta"))
-      .toDF("id", "text")
+    ).toDF("id", "text"),
+      Seq((100L, "key alpha beta gamma delta epsilon zeta eta")).toDF("id", "text"))
+  }
 
+  test("each funnel stage drops its known positive; keepers survive") {
+    val (corpus, bench) = funnelCorpus(spark)
     val got = CurationPipeline.curate(corpus, bench, "id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getAs[String]("drop_reason"), r.getAs[Boolean]("keep")))).toMap
@@ -86,5 +89,60 @@ class CurationPipelineSpec extends AnyFunSuite {
     assert(rows(2L)._1 === 1L)                 // same cluster as doc 1
     assert(rows(2L)._2 === "near_duplicate")
     assert(rows(5L) === ((5L, null)))          // French kept when lang=null
+  }
+
+  test("repeated curate calls free their checkpoints; the cache manager stays empty") {
+    val (corpus, bench) = funnelCorpus(spark)
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    val outs = (1 to 3).map { _ =>
+      val out = CurationPipeline.curate(corpus, bench, "id", "text")
+      assert(out.collect().length === 6)
+      out
+    }
+    // clearCache() does not release local checkpoints, so anything curate
+    // leaves behind would pile up here; only each returned frame's own
+    // checkpoint may remain
+    val grown = sc.getPersistentRDDs.keySet -- before
+    val own = outs.flatMap(graft.util.Checkpoints.rdds).map(_.id).toSet
+    assert(grown.subsetOf(own), s"leaked RDDs ${grown -- own}")
+    assert(grown.size <= outs.size)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("no curate plan description exceeds 64 KB") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+    val (corpus, bench) = funnelCorpus(spark)
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val started, ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          started.incrementAndGet()
+          sizes.add(s.description -> s.physicalPlanDescription.length)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          sizes.add(s"AQE update of ${u.executionId}" -> u.physicalPlanDescription.length)
+        case _: SparkListenerSQLExecutionEnd => ended.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      CurationPipeline.curate(corpus, bench, "id", "text").collect()
+      // events arrive asynchronously, in order: wait for every started
+      // execution's end event
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((started.get == 0 || ended.get < started.get) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      assert(started.get > 0 && ended.get >= started.get, "listener events missing")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val (what, largest) = sizes.asScala.maxBy(_._2)
+    // the checkpointed stages keep every plan small; re-embedding cached
+    // stage plans printed ~700 KB per AQE update of the pair execution
+    assert(largest < 64 * 1024, s"$what printed a $largest-byte plan")
   }
 }

@@ -89,4 +89,33 @@ class HotBucketSpec extends AnyFunSuite {
         (for (a <- 1L to 20L; b <- (a + 1) to 20L) yield (a, b)).toSet)
     }
   }
+
+  test("collapse expansion: exact within-set and cross-set pair list") {
+    withSpark { spark =>
+      import spark.implicits._
+      // two multi-member gram sets, ids interleaved so the expansion must
+      // re-order cross pairs: b swaps a's last word, so they share 8 of
+      // 10 distinct bigrams (Jaccard 0.8)
+      val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+      val b = a.replace("kappa", "lambda")
+      val docs = Seq(1L -> a, 2L -> b, 4L -> a, 5L -> b, 6L -> a,
+          9L -> "nothing here overlaps with the greek letter sequence at all")
+        .toDF("doc_id", "text")
+
+      val reps = Dedup.minhashReps(docs, "doc_id", "text",
+          n = 2, numHashes = 64, bandRows = 4)
+        .collect().map(r => r.getAs[Long]("id") -> r.getAs[Seq[Long]]("members"))
+        .toMap
+      assert(reps === Map(1L -> Seq(1L, 4L, 6L), 2L -> Seq(2L, 5L), 9L -> Seq(9L)))
+
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
+          n = 2, numHashes = 64, bandRows = 4, minSim = 0.5)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sorted.toSeq
+      val within = Seq((1L, 4L, 1.0), (1L, 6L, 1.0), (4L, 6L, 1.0), (2L, 5L, 1.0))
+      val cross = for (x <- Seq(1L, 4L, 6L); y <- Seq(2L, 5L))
+        yield (math.min(x, y), math.max(x, y), 0.8)
+      assert(pairs === (within ++ cross).sorted)
+    }
+  }
 }

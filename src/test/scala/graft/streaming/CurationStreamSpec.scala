@@ -112,4 +112,29 @@ class CurationStreamSpec extends AnyFunSuite {
       assert(second === first)
     }
   }
+
+  test("a corrupt state index fails the batch instead of reading as empty") {
+    withSpark { spark =>
+      import spark.implicits._
+      val tmp = java.nio.file.Files.createTempDirectory("curation-corrupt").toFile
+      val state = new java.io.File(tmp, "state")
+      val out = new java.io.File(tmp, "out").getAbsolutePath
+      // every bucket holds a corrupt file, so whichever buckets the
+      // batch's hashes prune to, the exact-dup probe reads one
+      for (b <- 0 until 64) {
+        val bucket = new java.io.File(state, s"hash_idx/bucket=$b")
+        bucket.mkdirs()
+        java.nio.file.Files.write(new java.io.File(bucket, "part-00000.parquet").toPath,
+          "not a parquet file".getBytes("UTF-8"))
+      }
+      val bench = Seq(100L -> benchText).toDF("doc_id", "text")
+      val batch = corpus.filter(_._1 <= 3).toDF("doc_id", "text")
+      val e = intercept[org.apache.spark.SparkException] {
+        CurationStream.curateBatch(batch, bench, state.getAbsolutePath, out,
+          CurationPipeline.Config(), 64, batchId = 0L)
+      }
+      assert(e.getMessage.contains("hash_idx"), e.getMessage)
+      assert(!new java.io.File(out).exists(), "a verdict was written over lost state")
+    }
+  }
 }

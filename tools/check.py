@@ -2,16 +2,33 @@
 """Local replica of the driver's correctness gate: run graft.Verify, then
 execute each oracle SQL in DuckDB over the same parquet tables and compare
 row counts, column names, and values (exact, after sorting columns by name
-and rows by all columns). Usage: tools/check.py [sfDir] [outDir] [--skip-verify]
+and rows by all columns).
+
+Usage: tools/check.py [sfDir] [outDir] [--skip-verify] [--only q1,q2,...]
+
+--only forwards the query subset to graft.Verify and compares only those
+queries. Without --skip-verify, outDir is emptied first, so no output of an
+earlier run is compared as if it were this run's.
 """
-import json, subprocess, sys, glob, os
+import argparse, json, shutil, subprocess, sys, glob, os
 
-sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+ap = argparse.ArgumentParser()
+ap.add_argument("sf", nargs="?", default="/root/testdata/sf0.01")
+ap.add_argument("out", nargs="?", default="/tmp/verify_out")
+ap.add_argument("--skip-verify", action="store_true")
+ap.add_argument("--only", help="comma-separated query names")
+a = ap.parse_args()
+sf, out = a.sf, a.out
+only = set(a.only.split(",")) if a.only else None
 
-if "--skip-verify" not in sys.argv:
-    cp = subprocess.run(["bash", "tools/run.sh", "graft.Verify", sf, out],
-                        capture_output=True, text=True)
+if not a.skip_verify:
+    if os.path.isdir(out) and os.listdir(out):
+        # refuse to wipe a directory that is not an earlier Verify output
+        if not os.path.exists(os.path.join(out, "oracle_sql.json")):
+            sys.exit(f"{out} is not empty and holds no oracle_sql.json; not removing it")
+        shutil.rmtree(out)
+    cmd = ["bash", "tools/run.sh", "graft.Verify", sf, out] + ([a.only] if only else [])
+    cp = subprocess.run(cmd, capture_output=True, text=True)
     if cp.returncode != 0:
         print(cp.stdout[-3000:]); print(cp.stderr[-3000:]); sys.exit(1)
     for line in cp.stderr.splitlines():
@@ -25,8 +42,13 @@ for t in ["region","nation","customer","supplier","part","orders",
 
 oracle = json.load(open(f"{out}/oracle_sql.json"))
 declared = [os.path.basename(p) for p in sorted(glob.glob(f"{out}/*")) if os.path.isdir(p)]
-
 ok = fail = 0
+if only:
+    for name in sorted(only - set(declared)):
+        print(f"FAIL {name}: no spark output"); fail += 1
+    declared = [n for n in declared if n in only]
+    oracle = {k: v for k, v in oracle.items() if k in only}
+
 for name in declared:
     files = glob.glob(f"{out}/{name}/*.parquet")
     if not files:
