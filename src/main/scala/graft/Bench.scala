@@ -18,9 +18,17 @@ object Bench {
     Tables.customer(spark, sfDir).count()
     // deterministic name order: Map hash order shifts when queries are
     // added, which silently reshuffles warm-up effects between rounds
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a query that throws is recorded as failed, never timed as if it ran.
+    // StackOverflowError is caught too: Catalyst overflows the stack on
+    // deep or iterative plans, and one such query must not end the run
+    // before any result is printed
+    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok = try { fn(spark, sfDir).count(); true } catch {
+        case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
+          System.err.println(s"[bench] $name failed: $e")
+          false
+      }
       val dt = (System.nanoTime() - t0) / 1e9
       // Queries may cache intermediates; nothing unpersists them once the
       // result is counted. Drop them so 70+ queries in one session don't
@@ -29,7 +37,7 @@ object Bench {
       // the next timed run and charges it the cleanup cost.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      dt
+      if (ok) Some(dt) else None
     }
     // one UNTIMED warmup execution, then three timed ones, headline =
     // MEDIAN: single-shot timings swung 3-5x between rounds with no code
@@ -55,12 +63,15 @@ object Bench {
     }
     val calibBefore = Seq.fill(3)(calibrate())
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    // a query counts only if its warm-up and all three timed runs complete;
+    // otherwise it is listed as failed. A failed warm-up skips the timed runs
+    val (results, failed) = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
+      .partitionMap { case (name, fn) =>
       val warm = timed(name, fn)
-      val runs = Seq.fill(3)(timed(name, fn))
-      (name, runs.sorted.apply(1), warm +: runs)
+      val runs = if (warm.isEmpty) Nil else Seq.fill(3)(timed(name, fn))
+      if (warm.isEmpty || runs.exists(_.isEmpty)) Right(name)
+      else Left((name, runs.flatten.sorted.apply(1), (warm +: runs).flatten))
     }
     // ONE compact JSON line: the driver captures only a bounded tail of
     // stdout, and r01/r02 proved a full-precision cold+warm dump (~6 KB)
@@ -70,6 +81,7 @@ object Bench {
     def r3(v: Double) = math.rint(v * 1000) / 1000
     def toJson(xs: Seq[(String, Double)]) =
       xs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = toJson(results.map(r => (r._1, r._2)))
     val qsAll = results.map { case (k, _, runs) =>
       s"\"" + k + "\":[" + runs.map(r3).mkString(",") + "]" }
@@ -87,42 +99,43 @@ object Bench {
       s""""calib_before":[${calibBefore.map(r3).mkString(",")}],""" +
       s""""calib_after":[${calibAfter.map(r3).mkString(",")}],""" +
       s""""queries_median":$qs,"sf_dir":"$sfDir"}"""
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("target/bench_detail.json"),
-        detail.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    def writeFile(path: String, text: String): Unit =
+      try java.nio.file.Files.write(java.nio.file.Paths.get(path), text.getBytes("UTF-8"))
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] could not write $path: $e") }
+    writeFile("target/bench_detail.json", detail)
     // Headline FIRST and LAST, queries in the middle: the driver records
     // a bounded window of stdout and r10's single fat line came back
     // "parsed": null — the per-query map pushed the headline scalars past
     // the cut, and the recorded artifact shows the window is a TAIL
-    // (front-truncated). A ~130-byte complete-JSON headline line printed
+    // (front-truncated). A ~150-byte complete-JSON headline line printed
     // both before and after the query map survives either cut: a
     // front-truncated capture still ends with a parseable headline line,
     // a tail-truncated one still starts with one.
     val headline =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"calib":$calib,"sf":$sfNum}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
+      s""""calib":$calib,"sf":$sfNum,"failed":$failedJson}"""
     println(headline)
     // The per-query map (~4.7 KB at 191 queries) exceeds the driver's stdout
     // tail window (~3 KB): r11 and r12 both captured it mid-truncated and the
     // driver's per-query comparison came back empty (PERF n_common: 0, two
-    // rounds running blind). Measurement-output fix per the r12 verdict:
-    // (a) print the map as ~15 SELF-CONTAINED complete JSON lines so any
-    // stdout tail window contains parseable complete lines, and (b) write
-    // the full map to BENCH_queries.json in the repo root (cwd of
-    // `sbt "runMain graft.Bench"`). Timing methodology (warmup + median of
-    // 3 timed count() runs, blocking cache clear between runs) is UNCHANGED.
+    // rounds running blind). So the map goes out three ways: (a) ~15
+    // SELF-CONTAINED complete JSON chunk lines, so any stdout tail window
+    // holds parseable complete lines; (b) the single {"queries":{…}} line,
+    // for a capture wide enough to hold it; (c) the full map, stamped with
+    // the core count, in BENCH_queries_c<cpus>.json in the working
+    // directory. Timing methodology (warmup + median of 3 timed count()
+    // runs, blocking cache clear between runs) is UNCHANGED.
     val medians = results.map(r => (r._1, r._2))
     val chunks = medians.grouped(13).toSeq
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       println(s"""{"queries_part":${i + 1},"of":${chunks.size},"q":${toJson(chunk)}}""")
     }
+    println(s"""{"queries":$qs}""")
     val fullMap = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""n_queries":${results.size},"calib":$calib,"sf":$sfNum,""" +
-      s""""cpus":$cpus,"queries":$qs}"""
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_queries.json"),
-        fullMap.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+      s""""cpus":$cpus,"failed":$failedJson,"queries":$qs}"""
+    writeFile(s"BENCH_queries_c$cpus.json", fullMap)
     println(headline)
     spark.stop()
   }

@@ -3,6 +3,8 @@ package graft.geo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints
+
 /** Connected components as pure DataFrame iteration — the scalable label
   * assignment behind history clustering (reference:
   * openplacereviews-core/src/main/java/org/openplacereviews/api/
@@ -101,13 +103,8 @@ object ConnectedComponents {
 
   private def starContraction(spark: SparkSession, edges0: DataFrame): DataFrame = {
     import spark.implicits._
-    val sc = spark.sparkContext
-    var before = sc.getPersistentRDDs.keySet
     var e = edges0 // canonical (u, v), v < u — contract() guarantees it
     var stats = checksum(e)
-    // this round's checkpoint RDDs — unpersisted once the NEXT round is
-    // materialized (a truncated round never recomputes, so this is safe)
-    var prevRoundRdds: scala.collection.Set[Int] = Set.empty[Int]
     var converged = false
     var round = 0
     // log2(n)-ish bound; the checksum test exits far earlier in practice
@@ -133,7 +130,6 @@ object ConnectedComponents {
       // ---- small-star: edges are now oriented child u → parent v < u;
       //      point every parent (and u itself) at m = min of u's parents ----
       val minNbr2 = large.groupBy("u").agg(min("v").as("m"))
-      before = sc.getPersistentRDDs.keySet
       val small = large.join(minNbr2, "u")
         .where($"v" =!= $"m")
         .select($"v".as("u"), $"m".as("v")) // re-parent non-min parents (v > m)
@@ -146,9 +142,10 @@ object ConnectedComponents {
       val next = checksum(small)
       converged = next == stats
       stats = next
-      val thisRound = sc.getPersistentRDDs.keySet -- before
-      prevRoundRdds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      prevRoundRdds = thisRound
+      // the previous round's checkpoint (in round 1, the stage-1 forest) is
+      // read by no later plan once this round is materialized — a truncated
+      // round never recomputes — so free it
+      Checkpoints.free(e)
       e = small
       round += 1
       if (sys.env.contains("GRAFT_CC_DEBUG"))

@@ -135,7 +135,10 @@ object Eval {
         struct(col("pred").as("cls"), lit(0L).as("tp"),
           (lit(1L) - hit).as("fp"), lit(0L).as("fn")))).as("e"))
       .groupBy(col("e.cls").as("cls"))
-      .agg(sum("e.tp").as("tp"), sum("e.fp").as("fp"), sum("e.fn").as("fn"))
+      // a null truth or pred leaves a class only null contributions: 0, not null
+      .agg(coalesce(sum("e.tp"), lit(0L)).as("tp"),
+        coalesce(sum("e.fp"), lit(0L)).as("fp"),
+        coalesce(sum("e.fn"), lit(0L)).as("fn"))
     val p = when(col("tp") + col("fp") > 0,
       col("tp").cast("double") / (col("tp") + col("fp"))).otherwise(0.0)
     val r = when(col("tp") + col("fn") > 0,

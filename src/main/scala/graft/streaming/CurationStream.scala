@@ -2,10 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.api.CurationPipeline
 import graft.geo.ConnectedComponents
 import graft.pipeline.{Dedup, TextAnalysis}
+import graft.util.PartitionedState
 
 /** Incremental form of [[graft.api.CurationPipeline]]: new documents
   * arrive as a stream and each micro-batch is curated against the
@@ -77,21 +79,6 @@ object CurationStream {
     val bandIdx = s"$stateRoot/band_idx"
     val docIdx = s"$stateRoot/doc_idx"
 
-    // An index that does not exist yet (no batch has kept a document) is
-    // empty state; any other read failure — a corrupt or unreadable index
-    // file — fails the batch, because treating it as empty would silently
-    // keep every duplicate of the lost history. The schema is given, not
-    // inferred: an index directory holding no data files yet reads as
-    // empty instead of failing inference.
-    def readPruned(dir: String, buckets: Array[Long], schema: String): DataFrame = {
-      val st = org.apache.spark.sql.types.StructType.fromDDL(schema)
-      try spark.read.schema(st).parquet(dir).where(col("bucket").isin(buckets: _*))
-      catch { case e: org.apache.spark.sql.AnalysisException
-                if e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), st)
-      }
-    }
-
     graft.functions.MinhashBandKeys.register(spark)
     val prep = batch0.select(col("doc_id"), col("text"))
       .withColumn("text_hash", md5(col("text")))
@@ -104,11 +91,13 @@ object CurationStream {
       .drop("words")
       .cache()
 
+    // Only a missing index is empty state: reading a corrupt one as empty
+    // would silently keep every duplicate of the lost history.
     // ---- stage 1: exact dedup vs state ∪ within-batch ----
     val hb = prep.select(pmod(xxhash64(col("text_hash")), lit(B)).as("bucket"))
       .distinct().collect().map(_.getLong(0))
-    val stateHash = readPruned(hashIdx, hb,
-      "bucket BIGINT, text_hash STRING, doc_id BIGINT")
+    val stateHash = PartitionedState.readPruned(spark, hashIdx,
+      StructType.fromDDL("bucket BIGINT, text_hash STRING, doc_id BIGINT"), "bucket", hb.toSeq)
     val wHash = org.apache.spark.sql.expressions.Window.partitionBy("text_hash")
     // self-matches (state entry with the doc's OWN id) are excluded so a
     // checkpoint replay — whose kept docs are already in the indexes —
@@ -133,8 +122,8 @@ object CurationStream {
       .select(col("doc_id"), explode(col("bands")).as("band_key"))
     val bb = bandRel.select(pmod(col("band_key"), lit(B)).as("bucket"))
       .distinct().collect().map(_.getLong(0))
-    val stateBands = readPruned(bandIdx, bb,
-      "bucket BIGINT, band_key BIGINT, doc_id BIGINT")
+    val stateBands = PartitionedState.readPruned(spark, bandIdx,
+      StructType.fromDDL("bucket BIGINT, band_key BIGINT, doc_id BIGINT"), "bucket", bb.toSeq)
     val within = bandRel.as("a")
       .join(bandRel.select(col("doc_id").as("b_id"), col("band_key")), "band_key")
       .where(col("doc_id") < col("b_id"))
@@ -147,8 +136,8 @@ object CurationStream {
       .select(col("a_id"), col("doc_id").as("b_id")).distinct()
     val db = cross.select(pmod(col("a_id"), lit(B)).as("bucket"))
       .distinct().collect().map(_.getLong(0))
-    val stateDocs = readPruned(docIdx, db,
-      "bucket BIGINT, doc_id BIGINT, hgrams ARRAY<BIGINT>, sz INT")
+    val stateDocs = PartitionedState.readPruned(spark, docIdx,
+      StructType.fromDDL("bucket BIGINT, doc_id BIGINT, hgrams ARRAY<BIGINT>, sz INT"), "bucket", db.toSeq)
       .select(col("doc_id").as("a_id"), col("hgrams").as("a_grams"),
         col("sz").as("a_sz"))
     val batchSide = prep.select(col("doc_id").as("b_id"),

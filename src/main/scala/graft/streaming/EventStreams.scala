@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+
+import graft.util.{Checkpoints, PartitionedState}
 
 /** Structured-Streaming re-expression of the reference's micro-batch
   * incremental semantics (SURVEY §2 J): the OsmSyncBot diff-window loop
@@ -291,41 +293,31 @@ object EventStreams {
     * invalidate-and-recompute the reference does per dirty tile, as
     * dynamic partition overwrite.
     *
+    * The upsert is [[lastWinsUpsert]]: one aggregate per key over the
+    * touched tiles' state ∪ the raw batch keeps the highest `version`
+    * (the within-batch dedup and the state merge are the same pass), one
+    * eager local checkpoint feeds both the state overwrite and the
+    * summary, and the checkpoint is freed before the batch returns.
+    *
     * Scale shape: a batch's cost is proportional to the state living in
     * its touched tiles, never the whole table; untouched tile partitions
     * are not read or rewritten. Replaying a batch rewrites the same
-    * partitions to the same bytes (idempotent), so checkpoint recovery is
-    * safe. The touched-tile list is the only driver-side artifact and is
-    * bounded by the batch's distinct tiles. */
+    * partitions to the same rows (idempotent: a version tie keeps the
+    * greatest row, and a replayed row equals the stored one), so
+    * checkpoint recovery is safe. The touched-tile list is the only
+    * driver-side artifact and is bounded by the batch's distinct tiles.
+    *
+    * A state read fails loudly: only a state directory that does not
+    * exist yet reads as empty. A corrupt or unreadable file in a touched
+    * tile fails the batch, and so the query, instead of silently
+    * resetting that tile. */
   def tileSummaryStream(ops: DataFrame, stateDir: String, summaryDir: String,
                         checkpointDir: String) = {
     ops.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("key").orderBy(col("version").desc)
-        val deduped = batch
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).drop("rn")
-          .cache() // two consumers: touched-tile list + merge
-        // ≤ the batch's distinct tiles — a driver-side list, never the data
-        val touched = deduped.select("tile4").distinct()
-          .collect().map(_.getString(0))
-        val existing = try {
-          spark.read.parquet(stateDir).where(col("tile4").isin(touched: _*))
-        } catch { case _: Throwable => spark.emptyDataFrame }
-        val merged = (if (existing.isEmpty) deduped
-          else existing.unionByName(deduped, allowMissingColumns = true)
-            .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1).drop("rn"))
-          // materialize BEFORE the write: the plan reads stateDir and
-          // Spark refuses to overwrite a path it is reading from
-          .localCheckpoint(true)
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("tile4").parquet(stateDir)
+        val merged = lastWinsUpsert(batch, stateDir, "key", "version", "tile4")
         // invalidate-and-rebuild: summaries of exactly the touched tiles,
         // recomputed from the merged (complete) state of those tiles
         merged.groupBy("tile4")
@@ -335,7 +327,7 @@ object EventStreams {
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("tile4").parquet(summaryDir)
-        deduped.unpersist(false)
+        Checkpoints.free(merged)
         ()
       }
       .start()
@@ -347,11 +339,14 @@ object EventStreams {
     *
     * The state table is hash-bucketed on the entity key
     * (`bucket = pmod(xxhash64(user_id), numBuckets)`) and each micro-batch
-    * touches ONLY the buckets its keys hash into: read those partitions,
-    * merge last-wins, rewrite them with dynamic partition overwrite. At
-    * 100 TB of state a batch's write cost is proportional to the touched
-    * key range, not the table — and replaying a batch rewrites the same
-    * buckets to the same bytes (idempotent).
+    * touches ONLY the buckets its keys hash into: [[lastWinsUpsert]] reads
+    * those partitions, keeps the highest `event_id` per `user_id` in one
+    * aggregate over state ∪ batch, and rewrites them with dynamic
+    * partition overwrite. At 100 TB of state a batch's write cost is
+    * proportional to the touched key range, not the table — and replaying
+    * a batch rewrites the same buckets to the same rows (idempotent).
+    * As in [[tileSummaryStream]], only a missing state directory reads as
+    * empty; any other state-read error fails the query.
     *
     * `numBuckets` must stay constant for the lifetime of a state dir. */
   def applyOpsStream(edits: DataFrame, stateDir: String, checkpointDir: String,
@@ -360,36 +355,49 @@ object EventStreams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy(col("event_id").desc)
-        val deduped = batch
+        val bucketed = batch
           .withColumn("bucket", pmod(xxhash64(col("user_id")), lit(numBuckets.toLong)))
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).drop("rn")
-          .cache() // two consumers: bucket list + merge
-        // ≤ numBuckets values — a driver-side list, never the data
-        val touched = deduped.select("bucket").distinct()
-          .collect().map(_.getLong(0))
-        val existing = try {
-          spark.read.parquet(stateDir).where(col("bucket").isin(touched: _*))
-        } catch { case _: Throwable => spark.emptyDataFrame }
-        val merged = (if (existing.isEmpty) deduped
-          else existing.unionByName(deduped, allowMissingColumns = true)
-            .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1).drop("rn"))
-          // materialize BEFORE the write: the merge plan reads stateDir,
-          // and Spark (correctly) refuses to overwrite a path it is
-          // reading from in the same plan
-          .localCheckpoint(true)
-        merged.write.mode("overwrite")
-          // per-write option, not session config: only the buckets present
-          // in `merged` are replaced
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("bucket").parquet(stateDir)
-        deduped.unpersist(false)
+        Checkpoints.free(lastWinsUpsert(bucketed, stateDir, "user_id", "event_id", "bucket"))
         ()
       }
       .start()
+  }
+
+  /** Last-wins upsert of one micro-batch into a `part`-partitioned parquet
+    * state table: per `key`, the row with the greatest `order` among the
+    * stored rows of the batch's `part` values and the batch itself
+    * survives; those partitions are then overwritten.
+    *
+    * The state is read with the batch's own schema and pruned to the
+    * touched partitions by [[PartitionedState.readPruned]]: only a missing
+    * table counts as empty state. The winner is
+    * `max(struct(order, rest…))` in one aggregate, so a tie on `order`
+    * keeps the greatest row deterministically; every non-key column must
+    * therefore be orderable (no maps). The merged rows are materialized
+    * once, BEFORE the write — the merge plan reads `stateDir`, and Spark
+    * refuses to overwrite a path it is reading from in the same plan.
+    *
+    * @return the merged rows of the touched partitions, as an eager local
+    *         checkpoint the caller frees with [[Checkpoints.free]]
+    */
+  private def lastWinsUpsert(batch: DataFrame, stateDir: String, key: String,
+                             order: String, part: String): DataFrame = {
+    val spark = batch.sparkSession
+    // ≤ the batch's distinct partition values — a driver-side list, never the data
+    val touched = batch.select(part).distinct().collect().map(_.get(0)).toSeq
+    val state = PartitionedState.readPruned(spark, stateDir, batch.schema, part, touched)
+    val fields = order +: batch.columns.filterNot(c => c == key || c == order).toSeq
+    val merged = state.unionByName(batch)
+      .groupBy(key)
+      .agg(max(struct(fields.map(col): _*)).as("w"))
+      .select(batch.columns.toSeq.map(c =>
+        if (c == key) col(c) else col("w").getField(c).as(c)): _*)
+      .localCheckpoint(eager = true)
+    merged.write.mode("overwrite")
+      // per-write option, not session config: only the partitions present
+      // in `merged` are replaced
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(part).parquet(stateDir)
+    merged
   }
 }

@@ -116,4 +116,22 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       }
     } finally spark.stop()
   }
+
+  test("star path: no persisted RDD outlives label once its result is counted") {
+    val spark = session()
+    import spark.implicits._
+    try {
+      val sc = spark.sparkContext
+      // a 200-node chain: several star rounds after the stage-1 forest
+      val edges = (0L until 199L).map(i => (i, i + 1)).toDF("a", "b")
+      val out = ConnectedComponents.label(spark, edges, localThreshold = 0L)
+      assert(out.count() == 200)
+      // only the checkpoints the result itself reads may remain
+      val own = graft.util.Checkpoints.rdds(out).map(_.id).toSet
+      val left = sc.getPersistentRDDs.keySet.toSet
+      assert(left.subsetOf(own), s"leaked RDDs ${left -- own}")
+      graft.util.Checkpoints.free(out)
+      assert(sc.getPersistentRDDs.isEmpty)
+    } finally spark.stop()
+  }
 }

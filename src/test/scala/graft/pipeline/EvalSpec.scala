@@ -116,4 +116,20 @@ class EvalSpec extends AnyFunSuite {
       assert(out("d") == ((0L, 1L, 0L, 0.0, 0.0, 0.0)))
     } finally spark.stop()
   }
+
+  test("classifierEval: a null truth or pred class counts 0, never null") {
+    val spark = session()
+    import spark.implicits._
+    try {
+      // the null-truth row has no hit value, so every contribution it makes
+      // is null; its classes still sum to 0
+      val t = Seq((null, "a"), ("a", "a"), ("b", null)).toDF("truth", "pred")
+      val out = Eval.classifierEval(t, "truth", "pred")
+        .collect().map(r => Option(r.getString(0)) ->
+          ((r.get(1), r.get(2), r.get(3)))).toMap
+      assert(out(Some("a")) == ((1L, 0L, 0L)))
+      assert(out(Some("b")) == ((0L, 0L, 0L)))
+      assert(out(None) == ((0L, 0L, 0L)))
+    } finally spark.stop()
+  }
 }

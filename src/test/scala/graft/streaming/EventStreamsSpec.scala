@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 import java.sql.Timestamp
 
 class EventStreamsSpec extends AnyFunSuite {
@@ -188,6 +188,151 @@ class EventStreamsSpec extends AnyFunSuite {
           .collect().map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("event_id")).toMap
         assert(state() == batchState)
       } finally q.stop()
+    }
+  }
+
+  private def tmpDirs(prefix: String, names: String*): Seq[String] = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
+    names.map(n => new java.io.File(tmp, n).getAbsolutePath)
+  }
+
+  /** Every row of a parquet table, sorted, as strings. */
+  private def rows(spark: SparkSession, dir: String): Seq[String] =
+    spark.read.parquet(dir).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Writes non-parquet bytes into every partition directory of `dir`. */
+  private def corrupt(dir: String): Unit =
+    new java.io.File(dir).listFiles().filter(_.isDirectory).foreach { p =>
+      java.nio.file.Files.write(new java.io.File(p, "part-00000-corrupt.parquet").toPath,
+        "not a parquet file".getBytes("UTF-8"))
+    }
+
+  test("a corrupt state file fails the batch for both upsert streams, never reads as empty") {
+    withSpark { spark =>
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val Seq(tState, tSummary, tCkpt, oState, oCkpt) =
+        tmpDirs("corrupt-state", "ts", "tsum", "tckpt", "os", "ockpt")
+      val tiles = MemoryStream[(Long, String, Long, Boolean)]
+      val edits = MemoryStream[EventStreams.Event]
+      val streams = Seq(
+        EventStreams.tileSummaryStream(tiles.toDF().toDF("key", "tile4", "version", "closed"),
+          tState, tSummary, tCkpt) -> tState,
+        EventStreams.applyOpsStream(edits.toDF(), oState, oCkpt, numBuckets = 4) -> oState)
+      try {
+        tiles.addData((1L, "8FVC", 1L, false), (2L, "9GXX", 1L, false))
+        edits.addData(EventStreams.Event(1, ts(0), 10, "view", 1.0),
+          EventStreams.Event(2, ts(1), 20, "view", 2.0))
+        streams.foreach(_._1.processAllAvailable())
+        streams.foreach { case (_, dir) => corrupt(dir) }
+        // the next batches touch the same partitions: their state reads hit
+        // the corrupt files
+        tiles.addData((1L, "8FVC", 2L, true), (2L, "9GXX", 2L, false))
+        edits.addData(EventStreams.Event(3, ts(2), 10, "click", 1.0),
+          EventStreams.Event(4, ts(3), 20, "click", 2.0))
+        streams.foreach { case (q, dir) =>
+          intercept[StreamingQueryException](q.processAllAvailable())
+          assert(q.exception.isDefined, dir)
+          assert(!q.isActive, dir)
+        }
+      } finally streams.foreach(_._1.stop())
+    }
+  }
+
+  test("tileSummaryStream: a replayed batch leaves the state and summary rows unchanged") {
+    withSpark { spark =>
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val Seq(stateDir, summaryDir, ckpt) = tmpDirs("tile-replay", "state", "summary", "ckpt")
+      val mem = MemoryStream[(Long, String, Long, Boolean)]
+      def start() = EventStreams.tileSummaryStream(
+        mem.toDF().toDF("key", "tile4", "version", "closed"), stateDir, summaryDir, ckpt)
+      val q = start()
+      try {
+        mem.addData((1L, "8FVC", 1L, false), (2L, "8FVC", 1L, false), (3L, "9GXX", 1L, false))
+        q.processAllAvailable()
+        // batch 1: a key edited twice within the batch, a close, a new tile
+        mem.addData((1L, "8FVC", 3L, false), (1L, "8FVC", 2L, true),
+          (2L, "8FVC", 2L, true), (4L, "7CXX", 1L, false))
+        q.processAllAvailable()
+      } finally q.stop()
+      val state = rows(spark, stateDir)
+      val summary = rows(spark, summaryDir)
+      assert(summary == Seq("1|0|1|7CXX", "2|1|3|8FVC", "1|0|1|9GXX").sorted)
+      // drop batch 1's commit: the restarted query runs batch 1 again, as
+      // recovery after a crash between the state write and the commit would
+      val commits = new java.io.File(ckpt, "commits")
+      commits.listFiles().filter(f => f.getName == "1" || f.getName == ".1.crc").foreach(_.delete())
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        assert(q2.recentProgress.exists(_.batchId == 1), "batch 1 was not replayed")
+      } finally q2.stop()
+      assert(rows(spark, stateDir) == state)
+      assert(rows(spark, summaryDir) == summary)
+    }
+  }
+
+  test("the upsert streams leave no persisted RDD behind") {
+    withSpark { spark =>
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      val Seq(tState, tSummary, tCkpt, oState, oCkpt) =
+        tmpDirs("upsert-rdds", "ts", "tsum", "tckpt", "os", "ockpt")
+      val tiles = MemoryStream[(Long, String, Long, Boolean)]
+      val edits = MemoryStream[EventStreams.Event]
+      val qs = Seq(
+        EventStreams.tileSummaryStream(tiles.toDF().toDF("key", "tile4", "version", "closed"),
+          tState, tSummary, tCkpt),
+        EventStreams.applyOpsStream(edits.toDF(), oState, oCkpt, numBuckets = 4))
+      try {
+        (1 to 4).foreach { b =>
+          tiles.addData((b.toLong, "8FVC", b.toLong, false), (1L, "9GXX", b.toLong, b % 2 == 0))
+          edits.addData(EventStreams.Event(b, ts(b), b % 3, "view", b.toDouble))
+          qs.foreach(_.processAllAvailable())
+        }
+        assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+          spark.sparkContext.getPersistentRDDs.values.mkString(", "))
+      } finally qs.foreach(_.stop())
+    }
+  }
+
+  test("tileSummaryStream runs at most 8 Spark jobs per steady-state batch") {
+    withSpark { spark =>
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      val Seq(stateDir, summaryDir, ckpt) = tmpDirs("tile-jobs", "state", "summary", "ckpt")
+      val mem = MemoryStream[(Long, String, Long, Boolean)]
+      val q = EventStreams.tileSummaryStream(
+        mem.toDF().toDF("key", "tile4", "version", "closed"), stateDir, summaryDir, ckpt)
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      val rnd = new scala.util.Random(7)
+      val tiles = Seq("8FVC", "9GXX", "7CXX", "6FRR")
+      def batch(b: Int) = (1 to 200).map { i =>
+        val key = rnd.nextInt(300).toLong
+        (key, tiles((key % tiles.size).toInt), b * 1000L + i, rnd.nextInt(10) == 0)
+      }
+      try {
+        // warm batches first: the first ones create the state directory
+        (0 until 3).foreach { b => mem.addData(batch(b): _*); q.processAllAvailable() }
+        spark.sparkContext.addSparkListener(listener)
+        val perBatch = (3 until 8).map { b =>
+          org.apache.spark.ListenerBusDrain(spark.sparkContext)
+          val before = jobs.get
+          mem.addData(batch(b): _*)
+          q.processAllAvailable()
+          org.apache.spark.ListenerBusDrain(spark.sparkContext)
+          jobs.get - before
+        }
+        assert(perBatch.forall(_ <= 8), s"jobs per batch: $perBatch")
+      } finally {
+        spark.sparkContext.removeSparkListener(listener)
+        q.stop()
+      }
     }
   }
 
