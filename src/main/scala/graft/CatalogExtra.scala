@@ -33,7 +33,7 @@ object CatalogExtra {
     s.udf.register("graft_first_non_empty",
       (xs: Seq[String]) => graft.text.TextFunctions.firstNonEmpty(xs))
     // native Catalyst expressions are part of the same SQL surface
-    graft.functions.OlcEncodeExpr.register(s)
+    graft.functions.Native.register(s)
     Tables.part(s, d).createOrReplaceTempView("part_v")
     // D-suffixed literals keep the arithmetic in DOUBLE like the Column
     // API (plain 100.0 parses as DECIMAL in Spark SQL and would round

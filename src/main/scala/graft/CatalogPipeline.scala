@@ -973,7 +973,6 @@ object CatalogPipeline {
     * as (length, md5, changed) so the oracle hashes the normalized bytes
     * themselves. */
   private def p42(s: SparkSession, d: String): DataFrame = {
-    graft.functions.NfcNormalize.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"), col("text"),
         graft.pipeline.TextAnalysis.normalizeText(col("text")).as("norm"))

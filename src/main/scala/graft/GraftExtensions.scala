@@ -2,10 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
-import graft.functions.{CosineSim, GeoBandKeyExprs, HaversineM, MinhashBandKeys, NfcNormalize, NgramHashes, OlcEncodeExpr, OlcRing, PassJoinIndexKeys, PassJoinKeys, PassJoinProbeKeys, Poly31Hash, SortedIntersectSize}
+import graft.functions.Native
 import graft.plans.HaversineJoinRule
 
 /** Session-extension injector for the engine's native SQL functions, so a
@@ -16,58 +14,15 @@ import graft.plans.HaversineJoinRule
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * Injects the same builders the per-session `register(spark)` helpers use;
-  * the helpers remain for library callers that own their session. */
+  * Injects every row of the [[graft.functions.Native]] table — the same
+  * arity-checked builders `Native.register(spark)` adds to a single
+  * session — plus the distance-join rule and the as-of join strategy.
+  * Library operators need none of this: they build their expressions
+  * directly through `Native(name, args*)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("olc_encode"),
-      new ExpressionInfo(classOf[OlcEncodeExpr].getName, "olc_encode"),
-      // coerce SQL-side DECIMAL arithmetic / int literals to the codec's
-      // exact input types (Cast is a no-op when types already match)
-      (exprs: Seq[Expression]) => OlcEncodeExpr(
-        Cast(exprs.head, DoubleType), Cast(exprs(1), DoubleType),
-        Cast(exprs(2), IntegerType))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "sorted_intersect_size"),
-      (exprs: Seq[Expression]) => SortedIntersectSize(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("haversine_m"), HaversineM.info, HaversineM.builder))
-    ext.injectFunction((
-      FunctionIdentifier("olc_ring"), OlcRing.info,
-      (exprs: Seq[Expression]) => OlcRing(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_hashes"), NgramHashes.info,
-      (exprs: Seq[Expression]) => NgramHashes(exprs.head,
-        Cast(exprs(1), IntegerType))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_band_keys"), MinhashBandKeys.info,
-      (exprs: Seq[Expression]) => MinhashBandKeys(exprs.head,
-        Cast(exprs(1), IntegerType), Cast(exprs(2), IntegerType),
-        Cast(exprs(3), IntegerType))))
-    ext.injectFunction((
-      FunctionIdentifier("passjoin_index_keys"), PassJoinKeys.indexInfo,
-      (exprs: Seq[Expression]) => PassJoinIndexKeys(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("passjoin_probe_keys"), PassJoinKeys.probeInfo,
-      (exprs: Seq[Expression]) => PassJoinProbeKeys(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("poly31_hash"), Poly31Hash.info,
-      (exprs: Seq[Expression]) => Poly31Hash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"), NfcNormalize.info,
-      (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("geo_band_key"), GeoBandKeyExprs.keyInfo,
-      GeoBandKeyExprs.keyBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("geo_band_keys"), GeoBandKeyExprs.keysInfo,
-      GeoBandKeyExprs.keysBuilder))
+    Native.table.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
     // naive `haversine_m(...) < r` join conditions → tile-bucketed equi-joins
     ext.injectOptimizerRule(_ => HaversineJoinRule)
     // the native as-of join physical operator (AsofJoinPlan → AsofJoinExec)

@@ -2,11 +2,9 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -125,30 +123,4 @@ case class BottomKDistinct(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object BottomKDistinct {
-
-  val info = new ExpressionInfo(classOf[BottomKDistinct].getName,
-    "bottom_k_distinct")
-
-  /** Registry builder: a wrong argument count is an analysis error that
-    * names the signature, not an index-out-of-bounds from inside it. */
-  def builder(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 2)
-      throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
-        "functionName" -> "`bottom_k_distinct`(value BIGINT, k INT)",
-        "expectedNum" -> "2", "actualNum" -> exprs.length.toString,
-        "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
-    BottomKDistinct(exprs.head, exprs(1))
-  }
-
-  /** Idempotently register `bottom_k_distinct` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("bottom_k_distinct")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name, info, builder _)
-    }
-  }
 }

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -69,17 +67,4 @@ case class CosineSim(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object CosineSim {
-  /** Idempotently register `cosine_sim` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("cosine_sim")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name,
-        new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-        (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1)))
-    }
-  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -73,26 +71,4 @@ object GeoBandKeyExprs {
     UnsafeArrayData.fromPrimitiveArray(
       graft.geo.GeoBands.probeKeys(lat, lon, radiusM))
 
-  val keyInfo = new ExpressionInfo(classOf[GeoBandKey].getName, "geo_band_key")
-  val keysInfo = new ExpressionInfo(classOf[GeoBandKeys].getName, "geo_band_keys")
-
-  def keyBuilder(exprs: Seq[Expression]): Expression =
-    GeoBandKey(Cast(exprs.head, DoubleType), Cast(exprs(1), DoubleType),
-      Cast(exprs(2), DoubleType))
-
-  def keysBuilder(exprs: Seq[Expression]): Expression =
-    GeoBandKeys(Cast(exprs.head, DoubleType), Cast(exprs(1), DoubleType),
-      Cast(exprs(2), DoubleType))
-
-  /** Idempotently register both functions with a session. */
-  def register(spark: SparkSession): Unit = {
-    val key = FunctionIdentifier("geo_band_key")
-    if (!spark.sessionState.functionRegistry.functionExists(key)) {
-      spark.sessionState.functionRegistry.registerFunction(key, keyInfo, keyBuilder _)
-    }
-    val keys = FunctionIdentifier("geo_band_keys")
-    if (!spark.sessionState.functionRegistry.functionExists(keys)) {
-      spark.sessionState.functionRegistry.registerFunction(keys, keysInfo, keysBuilder _)
-    }
-  }
 }

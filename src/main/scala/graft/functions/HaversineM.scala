@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -47,22 +45,4 @@ case class HaversineM(first: Expression, second: Expression,
       newFirst: Expression, newSecond: Expression,
       newThird: Expression, newFourth: Expression): Expression =
     copy(newFirst, newSecond, newThird, newFourth)
-}
-
-object HaversineM {
-  val info = new ExpressionInfo(classOf[HaversineM].getName, "haversine_m")
-
-  /** Builder with the same numeric coercion the SQL path needs (Cast is a
-    * no-op when inputs are already doubles). */
-  def builder(exprs: Seq[Expression]): Expression =
-    HaversineM(Cast(exprs.head, DoubleType), Cast(exprs(1), DoubleType),
-      Cast(exprs(2), DoubleType), Cast(exprs(3), DoubleType))
-
-  /** Idempotently register `haversine_m` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("haversine_m")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(name, info, builder _)
-    }
-  }
 }

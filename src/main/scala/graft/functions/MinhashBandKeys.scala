@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, QuaternaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -150,17 +148,5 @@ object MinhashBandKeys {
       bi += 1
     }
     out
-  }
-
-  val info = new ExpressionInfo(classOf[MinhashBandKeys].getName, "minhash_band_keys")
-
-  /** Idempotently register `minhash_band_keys` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("minhash_band_keys")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name, info, (exprs: Seq[Expression]) =>
-          MinhashBandKeys(exprs.head, exprs(1), exprs(2), exprs(3)))
-    }
   }
 }

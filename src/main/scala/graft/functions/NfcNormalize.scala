@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -46,16 +44,5 @@ object NfcNormalize {
     if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
     else UTF8String.fromString(
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
-  }
-
-  val info = new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize")
-
-  /** Idempotently register `nfc_normalize` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("nfc_normalize")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name, info, (exprs: Seq[Expression]) => NfcNormalize(exprs.head))
-    }
   }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -87,16 +85,5 @@ object NgramHashes {
       i += 1
     }
     new GenericArrayData(if (out == g.length) g else java.util.Arrays.copyOf(g, out))
-  }
-
-  val info = new ExpressionInfo(classOf[NgramHashes].getName, "ngram_hashes")
-
-  /** Idempotently register `ngram_hashes` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("ngram_hashes")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name, info, (exprs: Seq[Expression]) => NgramHashes(exprs.head, exprs(1)))
-    }
   }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -49,21 +47,4 @@ case class OlcEncodeExpr(first: Expression, second: Expression, third: Expressio
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object OlcEncodeExpr {
-  /** Idempotently register `olc_encode` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("olc_encode")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name,
-        new ExpressionInfo(classOf[OlcEncodeExpr].getName, "olc_encode"),
-        // coerce SQL-side DECIMAL arithmetic / int literals to the codec's
-        // exact input types (Cast is a no-op when types already match)
-        (exprs: Seq[Expression]) => OlcEncodeExpr(
-          Cast(exprs.head, DoubleType), Cast(exprs(1), DoubleType),
-          Cast(exprs(2), IntegerType)))
-    }
-  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -43,16 +41,5 @@ object OlcRing {
     val c = code.toString
     val cells = (c +: graft.geo.Olc.neighbors(c)).distinct
     new GenericArrayData(cells.map(UTF8String.fromString).toArray[Any])
-  }
-
-  val info = new ExpressionInfo(classOf[OlcRing].getName, "olc_ring")
-
-  /** Idempotently register `olc_ring` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("olc_ring")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name, info, (exprs: Seq[Expression]) => OlcRing(exprs.head))
-    }
   }
 }

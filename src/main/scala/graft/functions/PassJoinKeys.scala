@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -116,24 +114,6 @@ object PassJoinKeys {
   def indexKeysData(w: UTF8String): ArrayData = toArrayData(indexKeys(w.toString))
   def probeKeysData(w: UTF8String): ArrayData = toArrayData(probeKeys(w.toString))
 
-  val indexInfo = new ExpressionInfo(
-    classOf[PassJoinIndexKeys].getName, "passjoin_index_keys")
-  val probeInfo = new ExpressionInfo(
-    classOf[PassJoinProbeKeys].getName, "passjoin_probe_keys")
-
-  /** Idempotently register both key generators with a session. */
-  def register(spark: SparkSession): Unit = {
-    val idx = FunctionIdentifier("passjoin_index_keys")
-    if (!spark.sessionState.functionRegistry.functionExists(idx)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        idx, indexInfo, (exprs: Seq[Expression]) => PassJoinIndexKeys(exprs.head))
-    }
-    val prb = FunctionIdentifier("passjoin_probe_keys")
-    if (!spark.sessionState.functionRegistry.functionExists(prb)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        prb, probeInfo, (exprs: Seq[Expression]) => PassJoinProbeKeys(exprs.head))
-    }
-  }
 }
 
 sealed trait PassJoinKeyExpr extends UnaryExpression {

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -44,14 +42,4 @@ object Poly31Hash {
     * the hash family has exactly one definition. */
   def kernel(s: UTF8String): Long = graft.pipeline.PortableHash.poly31Cp(s.toString)
 
-  val info = new ExpressionInfo(classOf[Poly31Hash].getName, "poly31_hash")
-
-  /** Idempotently register `poly31_hash` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("poly31_hash")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name, info, (exprs: Seq[Expression]) => Poly31Hash(exprs.head))
-    }
-  }
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
@@ -88,17 +86,5 @@ object RollingAnchors {
     }
     new GenericArrayData(
       if (nOut == out.length) out else java.util.Arrays.copyOf(out, nOut))
-  }
-
-  val info = new ExpressionInfo(classOf[RollingAnchors].getName, "rolling_anchors")
-
-  /** Idempotently register `rolling_anchors` with a session. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("rolling_anchors")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name, info,
-        (exprs: Seq[Expression]) => RollingAnchors(exprs.head, exprs(1), exprs(2)))
-    }
   }
 }

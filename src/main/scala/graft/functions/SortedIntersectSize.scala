@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -84,18 +82,4 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object SortedIntersectSize {
-  /** Idempotently register `sorted_intersect_size` with a session so it is
-    * usable from both the Column API (via expr) and plain SQL. */
-  def register(spark: SparkSession): Unit = {
-    val name = FunctionIdentifier("sorted_intersect_size")
-    if (!spark.sessionState.functionRegistry.functionExists(name)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        name,
-        new ExpressionInfo(classOf[SortedIntersectSize].getName, "sorted_intersect_size"),
-        (exprs: Seq[Expression]) => SortedIntersectSize(exprs.head, exprs(1)))
-    }
-  }
 }

@@ -3,6 +3,8 @@ package graft.geo
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Geo primitives used across the engine.
   *
   * Scalar math (haversine, bbox, normalization, mercator tiles) is expressed
@@ -22,20 +24,11 @@ object GeoFunctions {
     * (OsmMapUtils.java:99-110). Native codegen expression
     * (graft.functions.HaversineM) — same doubles as the previous
     * builtin-composed Column, but a single compact node that
-    * graft.plans.HaversineJoinRule can pattern-match in join conditions. */
-  def haversineM(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column = {
-    // Best-effort convenience registration only — never throws when no
-    // session is active (Column construction needs none), and operators
-    // that own a DataFrame register on ITS session (e.g. GeoJoins), which
-    // is the one that analyzes the plan in multi-session apps. Sessions
-    // built with spark.sql.extensions=graft.GraftExtensions always have
-    // the function regardless.
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.functions.HaversineM.register)
-    call_function("haversine_m", lat1.cast("double"), lon1.cast("double"),
-      lat2.cast("double"), lon2.cast("double"))
-  }
+    * graft.plans.HaversineJoinRule can pattern-match in join conditions.
+    * Built directly through [[graft.functions.Native]], like [[olcEncode]]:
+    * no session needs the function registered. */
+  def haversineM(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
+    Native("haversine_m", lat1, lon1, lat2, lon2)
 
   /** Scalar form of [[haversineM]] for row-local kernels (same formula and
     * constant — OsmMapUtils.java:99-110). */
@@ -54,14 +47,8 @@ object GeoFunctions {
     * as the DuckDB oracle's SQL formulation — the earlier builtin-composed
     * Column expanded to a multi-KB tree per call site, and predicate
     * pushdown duplicated it into single-task scan filters. */
-  def olcEncode(lat: Column, lon: Column, codeLength: Int = 6): Column = {
-    // same session-resolution policy as haversineM above
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.functions.OlcEncodeExpr.register)
-    call_function("olc_encode",
-      lat.cast("double"), lon.cast("double"), lit(codeLength))
-  }
+  def olcEncode(lat: Column, lon: Column, codeLength: Int = 6): Column =
+    Native("olc_encode", lat, lon, lit(codeLength))
 
   /** Cell-center latitude/longitude of a pair-section OLC code (UDF — string
     * decode is row-local). */

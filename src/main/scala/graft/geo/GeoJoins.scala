@@ -3,6 +3,8 @@ package graft.geo
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Distance self-join: all point pairs within `radiusM` meters, as a
   * bucketed equi-join (never a cross join).
   *
@@ -34,10 +36,6 @@ object GeoJoins {
                   lonCol: String, radiusM: Double): DataFrame = {
     require(radiusM >= GeoBands.MinRadiusM,
       s"radius $radiusM below packing bound ${GeoBands.MinRadiusM}")
-    // register on the session that OWNS the frame (not SparkSession.active:
-    // in multi-session apps they can differ, and analysis would miss the fn)
-    graft.functions.GeoBandKeyExprs.register(points.sparkSession)
-    graft.functions.HaversineM.register(points.sparkSession)
     val bandDeg = GeoBands.bandDeg(radiusM)
     // repartition BEFORE the per-row key encode so it runs at full
     // parallelism (a single-file parquet scan is 1-2 tasks), and cache so
@@ -49,11 +47,11 @@ object GeoJoins {
       .cache()
     val probe = pts.select(col("k").as("a_key"), col("lat").as("a_lat"),
       col("lon").as("a_lon"),
-      explode(call_function("geo_band_keys",
+      explode(Native("geo_band_keys",
         col("lat"), col("lon"), lit(radiusM))).as("gk"))
     val build = pts.select(col("k").as("b_key"), col("lat").as("b_lat"),
       col("lon").as("b_lon"),
-      call_function("geo_band_key",
+      Native("geo_band_key",
         col("lat"), col("lon"), lit(radiusM)).as("gk"))
     // probe keys are distinct and the build row has one key, so a pair can
     // match at most once — no post-join dedup needed

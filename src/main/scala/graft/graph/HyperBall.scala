@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** HyperBall (Boldi–Vigna 2013) — the neighborhood function at graph
   * scale: per node, the (approximate) number of nodes within ≤ r hops,
   * for every radius r up to a bound. The classic inputs to effective-
@@ -74,7 +76,6 @@ object HyperBall {
           .otherwise(expr(s"${(k - 1).toLong * M} div element_at(arr, -1)"))
           .as("ball_est"))
     var out = est(0, sketch)
-    graft.functions.BottomKDistinct.register(edges.sparkSession)
     for (r <- 1 to rounds) {
       // HUB-SAFE bottom-k rebuild (round 13). The round-12 shape — ONE
       // groupBy(node) with slice(array_sort(collect_set), 1, k) — was the
@@ -99,7 +100,7 @@ object HyperBall {
         .select(col("dst").as("node"), explode(col("arr")).as("ih"))
         .unionByName(sketch.select(col("node"), explode(col("arr")).as("ih")))
         .groupBy("node")
-        .agg(call_function("bottom_k_distinct", col("ih"), lit(k)).as("arr"))
+        .agg(Native("bottom_k_distinct", col("ih"), lit(k)).as("arr"))
         // localCheckpoint, not persist: round r+1 references sketch_r
         // twice (edge join + self union) and every round's estimate row
         // references its sketch again — un-truncated, the analyzed plan

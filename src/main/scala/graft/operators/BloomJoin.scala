@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** Bloom-filter semi-join pre-pruning — the runtime-filter pattern
@@ -24,29 +23,12 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   * The blob is a driver artifact bounded by the filter's bit budget
   * (like the IVF centroids), reusable across queries via [[buildFilter]];
   * keys hash through `xxhash64` exactly as Spark's own injected runtime
-  * filters do. The two Catalyst expressions behind SPARK-32268 are
-  * surfaced through the session function registry (the engine's
-  * registered-native-expression convention) because Spark keeps them
-  * internal-only.
+  * filters do. Spark keeps the two Catalyst expressions behind SPARK-32268
+  * internal-only, so they are built directly into columns (through
+  * [[org.apache.spark.sql.GraftSqlShims]]) — no session function registry
+  * is involved.
   */
 object BloomJoin {
-
-  /** Idempotently register the bloom aggregate + probe expressions. */
-  def register(spark: SparkSession): Unit = {
-    val agg = FunctionIdentifier("graft_bloom_agg")
-    if (!spark.sessionState.functionRegistry.functionExists(agg)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        agg, new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-        (exprs: Seq[Expression]) => new BloomFilterAggregate(exprs(0), exprs(1)))
-    }
-    val mc = FunctionIdentifier("graft_bloom_might_contain")
-    if (!spark.sessionState.functionRegistry.functionExists(mc)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        mc, new ExpressionInfo(classOf[BloomFilterMightContain].getName,
-          "graft_bloom_might_contain"),
-        (exprs: Seq[Expression]) => BloomFilterMightContain(exprs(0), exprs(1)))
-    }
-  }
 
   private def keyHash(cols: Seq[Column]): Column = xxhash64(cols: _*)
 
@@ -59,10 +41,9 @@ object BloomJoin {
   def buildFilter(build: DataFrame, keys: Seq[String],
                   expectedItems: Long): Option[Array[Byte]] = {
     require(keys.nonEmpty, "need at least one key column")
-    register(build.sparkSession)
-    Option(build
-      .select(call_function("graft_bloom_agg",
-        keyHash(keys.map(col)), lit(expectedItems)).as("bf"))
+    val agg = new BloomFilterAggregate(
+      GraftSqlShims.expression(keyHash(keys.map(col))), Literal(expectedItems))
+    Option(build.select(GraftSqlShims.column(agg.toAggregateExpression()).as("bf"))
       .head().getAs[Array[Byte]](0))
   }
 
@@ -70,9 +51,8 @@ object BloomJoin {
     * filter (superset of true matches — no false negatives). */
   def prefilter(probe: DataFrame, filter: Array[Byte],
                 keys: Seq[String]): DataFrame = {
-    register(probe.sparkSession)
-    probe.where(call_function("graft_bloom_might_contain",
-      lit(filter), keyHash(keys.map(col))))
+    probe.where(GraftSqlShims.column(BloomFilterMightContain(
+      Literal(filter), GraftSqlShims.expression(keyHash(keys.map(col))))))
   }
 
   /** Exact semi-join with Bloom pre-pruning: rows of `probe` whose

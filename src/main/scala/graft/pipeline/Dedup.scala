@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.Native
+
 /** Document deduplication operators for large-scale corpus curation:
   * exact (hash groupBy), n-gram Jaccard verify, MinHash+LSH candidate
   * generation, and SimHash. Generalizes the reference's fuzzy-merge idea
@@ -126,7 +128,6 @@ object Dedup {
                         bucketCol: String, n: Int, minSim: Double): DataFrame = {
     // sorted grams → the pair similarity is a codegen'd merge walk
     // (graft.functions.SortedIntersectSize) — no per-pair Scala conversion
-    graft.functions.SortedIntersectSize.register(df.sparkSession)
     // Two explicit exchanges, both load-bearing:
     //  1. spread raw rows BEFORE the per-row tokenize/corpus expressions —
     //     otherwise they run at the scan's parallelism (often 1-2 tasks for
@@ -148,13 +149,12 @@ object Dedup {
     // exactness only needs SOME fixed global gram order — sorted 64-bit
     // combine-hashes serve as well as sorted string-hashes, and Jaccard
     // depends only on distinct-gram identities)
-    graft.functions.NgramHashes.register(df.sparkSession)
     val g0 = df.repartition(par)
       .select(col(idCol).as("id"), col(bucketCol).as("bucket"),
         filter(split(col(textCol), " "), w => w =!= "").as("words"))
       .repartition(par, col("id"))
       .select(col("id"), col("bucket"),
-        call_function("ngram_hashes", col("words"), lit(n)).as("grams"))
+        Native("ngram_hashes", col("words"), lit(n)).as("grams"))
       .withColumn("sz", size(col("grams")))
       .cache()
     // Materialize the shingle cache BEFORE fan-out: the prefix leg, the
@@ -249,7 +249,7 @@ object Dedup {
       .join(g.select(col("id").as("b_id"), col("grams").as("b_grams"),
         col("sz").as("b_sz")), "b_id")
       .withColumn("inter",
-        expr("sorted_intersect_size(a_grams, b_grams)").cast("double"))
+        Native("sorted_intersect_size", col("a_grams"), col("b_grams")).cast("double"))
       .select(col("a_id"), col("b_id"),
         round(col("inter") / (col("a_sz") + col("b_sz") - col("inter")), 6)
           .as("jaccard"))
@@ -290,9 +290,6 @@ object Dedup {
                        minSim: Double): DataFrame = {
     require(numHashes % bandRows == 0, "numHashes must divide into bands")
     import org.apache.spark.sql.expressions.Window
-    graft.functions.SortedIntersectSize.register(newDf.sparkSession)
-    graft.functions.NgramHashes.register(newDf.sparkSession)
-    graft.functions.MinhashBandKeys.register(newDf.sparkSession)
     val par = newDf.sparkSession.sparkContext.defaultParallelism
     // same two load-bearing exchanges + eager cache as minhashLshPairs
     def prep(df: DataFrame): DataFrame = {
@@ -301,8 +298,8 @@ object Dedup {
           filter(split(col(textCol), " "), w => w =!= "").as("words"))
         .repartition(par, col("id"))
         .select(col("id"), col("h"),
-          call_function("ngram_hashes", col("words"), lit(n)).as("grams"),
-          call_function("minhash_band_keys", col("words"),
+          Native("ngram_hashes", col("words"), lit(n)).as("grams"),
+          Native("minhash_band_keys", col("words"),
             lit(n), lit(numHashes), lit(bandRows)).as("bands"))
         .withColumn("sz", size(col("grams")))
         .cache()
@@ -327,7 +324,7 @@ object Dedup {
       .join(od.select(col("id").as("o_id"), col("grams").as("b_grams"),
         col("sz").as("b_sz")), "o_id")
       .withColumn("inter",
-        expr("sorted_intersect_size(a_grams, b_grams)").cast("double"))
+        Native("sorted_intersect_size", col("a_grams"), col("b_grams")).cast("double"))
       .withColumn("jaccard",
         round(col("inter") / (col("a_sz") + col("b_sz") - col("inter")), 6))
       .where(col("jaccard") >= minSim)
@@ -374,15 +371,13 @@ object Dedup {
   def containmentJoin(queries: DataFrame, corpus: DataFrame, idCol: String,
                       textCol: String, n: Int, minCont: Double): DataFrame = {
     require(minCont > 0 && minCont <= 1, s"minCont=$minCont")
-    graft.functions.SortedIntersectSize.register(queries.sparkSession)
-    graft.functions.NgramHashes.register(queries.sparkSession)
     val par = queries.sparkSession.sparkContext.defaultParallelism
     def shingle(df: DataFrame): DataFrame = df
       .repartition(par)
       .select(col(idCol).as("id"),
         filter(split(col(textCol), " "), w => w =!= "").as("words"))
       .select(col("id"),
-        call_function("ngram_hashes", col("words"), lit(n)).as("grams"))
+        Native("ngram_hashes", col("words"), lit(n)).as("grams"))
       .withColumn("sz", size(col("grams")))
       .where(col("sz") > 0)
     val q = shingle(queries).persist()
@@ -413,7 +408,7 @@ object Dedup {
         col("sz").as("q_sz")), "q_id")
       .join(c.select(col("id").as("c_id"), col("grams").as("c_grams")), "c_id")
       .withColumn("inter",
-        expr("sorted_intersect_size(q_grams, c_grams)").cast("double"))
+        Native("sorted_intersect_size", col("q_grams"), col("c_grams")).cast("double"))
       .select(col("q_id"), col("c_id"),
         round(col("inter") / col("q_sz"), 6).as("containment"))
       .where(col("containment") >= minCont)
@@ -431,7 +426,6 @@ object Dedup {
                       n: Int, numHashes: Int, bandRows: Int,
                       minSim: Double): DataFrame = {
     require(numHashes % bandRows == 0, "numHashes must divide into bands")
-    graft.functions.SortedIntersectSize.register(df.sparkSession)
     // exact-equal collapse BEFORE banding (the round-11 hot-bucket fix):
     // documents with identical distinct-gram sets — byte-identical texts,
     // trivially — band once through a representative, so an m-item
@@ -458,7 +452,7 @@ object Dedup {
       .join(side("a"), "a_id")
       .join(side("b"), "b_id")
       .withColumn("inter",
-        expr("sorted_intersect_size(a_grams, b_grams)").cast("double"))
+        Native("sorted_intersect_size", col("a_grams"), col("b_grams")).cast("double"))
       .select(col("a_members"), col("b_members"),
         round(col("inter") / (col("a_sz") + col("b_sz") - col("inter")), 6)
           .as("jaccard"))
@@ -501,8 +495,6 @@ object Dedup {
   private def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                                 n: Int, numHashes: Int,
                                 bandRows: Int): DataFrame = {
-    graft.functions.NgramHashes.register(df.sparkSession)
-    graft.functions.MinhashBandKeys.register(df.sparkSession)
     // spread raw rows BEFORE the per-row kernels (see ngramJaccardPairs);
     // no id-keyed barrier after the words projection: both kernels read
     // `words`, so CollapseProject keeps it one projection, and the
@@ -512,8 +504,8 @@ object Dedup {
       .select(col(idCol).as("id"),
         filter(split(col(textCol), " "), w => w =!= "").as("words"))
       .select(col("id"),
-        call_function("ngram_hashes", col("words"), lit(n)).as("hgrams"),
-        call_function("minhash_band_keys", col("words"),
+        Native("ngram_hashes", col("words"), lit(n)).as("hgrams"),
+        Native("minhash_band_keys", col("words"),
           lit(n), lit(numHashes), lit(bandRows)).as("bands"))
       .withColumn("sz", size(col("hgrams")))
       .withColumn("gk",
@@ -668,11 +660,10 @@ object Dedup {
     * relations. */
   private def contentAnchors(d: DataFrame, k: Int, stride: Int): DataFrame = {
     val par = d.sparkSession.sparkContext.defaultParallelism
-    graft.functions.RollingAnchors.register(d.sparkSession)
     d.where(length(col("text")) >= k)
       .repartition(par)
       .select(col("doc_id"), col("text"),
-        explode(call_function("rolling_anchors", col("text"), lit(k),
+        explode(Native("rolling_anchors", col("text"), lit(k),
           lit(stride))).as("pos"))
       .select(col("doc_id"), col("pos"),
         expr(s"substring(text, pos + 1, $k)").as("gram"))
@@ -911,7 +902,6 @@ object Dedup {
                          idCol: String, textCol: String,
                          n: Int, minFrac: Double): DataFrame = {
     val par = corpus.sparkSession.sparkContext.defaultParallelism
-    graft.functions.NgramHashes.register(corpus.sparkSession)
     def grams(df: DataFrame) = df.repartition(par)
       .select(col(idCol).as("doc_id"),
         filter(split(col(textCol), " "), w => w =!= "").as("words"))
@@ -919,7 +909,7 @@ object Dedup {
       // both sides hash grams with the same native kernel, so membership
       // is preserved without materializing gram strings
       .select(col("doc_id"),
-        call_function("ngram_hashes", col("words"), lit(n)).as("grams"))
+        Native("ngram_hashes", col("words"), lit(n)).as("grams"))
     val benchGrams = grams(benchmark)
       .select(explode(col("grams")).as("gram")).distinct()
     // explode_outer: a doc shorter than n words keeps its row (null gram,

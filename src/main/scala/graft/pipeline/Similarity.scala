@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.Native
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (Array[Float]). Brute-force cosine top-k as the exact baseline; a
   * random-hyperplane LSH-bucketed variant as the scale path.
@@ -18,9 +20,9 @@ object Similarity {
 
   /** Cosine similarity of two float-array columns, computed in double with
     * a deterministic left-to-right fold. Native codegen expression
-    * (graft.functions.CosineSim) — callers must have it registered; every
-    * entry point in this object registers it on its input's session. */
-  def cosine(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
+    * (graft.functions.CosineSim), built directly through
+    * [[graft.functions.Native]], so no session needs it registered. */
+  def cosine(a: Column, b: Column): Column = Native("cosine_sim", a, b)
 
   /** Exact top-k by cosine: for each row of `queries`, the k nearest rows
     * of `corpus` (excluding the query row itself when ids collide).
@@ -28,7 +30,6 @@ object Similarity {
     * results are reproducible across engines and partitionings. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec")))
     val scored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       .crossJoin(q)
@@ -51,7 +52,6 @@ object Similarity {
     * Hamming distance 1, to cut the miss rate at plane boundaries). */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int, numPlanes: Int): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val sigUdf = udf((v: Seq[Float]) => rhSignature(v, numPlanes))
     val probeUdf = udf((sig: Int) => sig +: (0 until numPlanes).map(j => sig ^ (1 << j)))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
@@ -148,7 +148,6 @@ object Similarity {
     * only the probed cells' inverted lists. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nlist: Int, nprobe: Int): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val (c, q) = ivfAssign(corpus, queries, idCol, vecCol, nlist, nprobe)
     topK(c.join(q, "cell")
       .where(col("query_id") =!= col("neighbor_id"))
@@ -351,7 +350,6 @@ object Similarity {
     * scale. */
   def cosineNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          minSim: Double, numPlanes: Int): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val sigUdf = udf((v: Seq[Float]) => rhSignature(v, numPlanes))
     val expandUdf = udf((sig: Int) => sig +: (0 until numPlanes).map(j => sig ^ (1 << j)))
     val g = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
@@ -416,7 +414,6 @@ object Similarity {
               lambda: Double = 0.7): DataFrame = {
     require(k >= 1 && candK >= k, s"candK=$candK k=$k")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda=$lambda")
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val lam = lit(lambda)
     val oneMinusLam = lit(1.0) - lit(lambda)
     val cand = bruteForceTopK(corpus, queries, idCol, vecCol, candK)
@@ -476,7 +473,6 @@ object Similarity {
 
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
                     nlist: Int, minSim: Double): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
     val centroids = trainQuantizer(corpus, idCol, vecCol, nlist)
     val assign = udf((v: Seq[Float]) => nearestCells(centroids, v, 1).head)
     val par = corpus.sparkSession.sparkContext.defaultParallelism

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Count-Min sketch (Cormode & Muthukrishnan 2005, "An improved data
   * stream summary: the count-min sketch and its applications") — the
   * approximate-counting member of the sketch family (x1 HLL distinct,
@@ -41,9 +43,8 @@ object Sketches {
       lit(width.toLong))
 
   private def hashed(df: DataFrame, itemCol: String): DataFrame = {
-    graft.functions.Poly31Hash.register(df.sparkSession)
     df.where(col(itemCol).isNotNull)
-      .select(call_function("poly31_hash", col(itemCol).cast("string")).as("ih"))
+      .select(Native("poly31_hash", col(itemCol).cast("string")).as("ih"))
   }
 
   /** Build the sketch over `df(itemCol)` (one occurrence per row):
@@ -64,12 +65,11 @@ object Sketches {
     * exactly the sketch's zero-initialized counters. */
   def estimate(sketch: DataFrame, probes: DataFrame, itemCol: String,
                depth: Int, width: Int): DataFrame = {
-    graft.functions.Poly31Hash.register(probes.sparkSession)
     val cells = (0 until depth).map(j =>
       struct(lit(j).as("j"), cmsBucket(col("ih"), j, width).as("bucket")))
     val probeCells = probes.select(col(itemCol).as("item")).distinct()
       .select(col("item"),
-        call_function("poly31_hash", col("item").cast("string")).as("ih"))
+        Native("poly31_hash", col("item").cast("string")).as("ih"))
       .select(col("item"), explode(array(cells: _*)).as("c"))
       .select(col("item"), col("c.j").as("j"), col("c.bucket").as("bucket"))
     probeCells
@@ -102,12 +102,11 @@ object Sketches {
     * Returns (key, ih, rn), ≤ k rows per key, `rn` the 1-based rank. */
   def kmv(df: DataFrame, keyCol: String, itemCol: String, k: Int): DataFrame = {
     require(k >= 2, s"k=$k")
-    graft.functions.Poly31Hash.register(df.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("key").orderBy("ih")
     df.where(col(itemCol).isNotNull)
       .select(col(keyCol).as("key"),
-        pmod(call_function("poly31_hash", col(itemCol).cast("string"))
+        pmod(Native("poly31_hash", col(itemCol).cast("string"))
           * lit(1103515245L) + lit(12345L), lit(M)).as("ih"))
       .distinct()
       .withColumn("rn", row_number().over(w))

@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Text-analysis operators for corpus curation: language ID (stopword
   * n-gram heuristic), quality scoring, token counting (whitespace + a
   * BPE-ish regex), and document fingerprinting. All are map-only column
@@ -29,11 +31,10 @@ object TextAnalysis {
     * Case-folding note: Spark `lower` and DuckDB `lower` agree on the
     * simple (non-locale, non-full) mapping — the contract here; text in
     * locales with special casing (e.g. dotted/dotless I) normalizes
-    * consistently WITHIN each engine either way. Callers must register
-    * [[graft.functions.NfcNormalize]] on the session first. */
+    * consistently WITHIN each engine either way. */
   def normalizeText(text: Column): Column =
     lower(trim(regexp_replace(
-      regexp_replace(call_function("nfc_normalize", text),
+      regexp_replace(Native("nfc_normalize", text),
         "[\\x00-\\x1F\\x7F]", " "),
       " +", " ")))
 
@@ -471,9 +472,8 @@ object TextAnalysis {
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
                 k: Int, stride: Int): DataFrame = {
     require(k >= 1 && stride >= 1, s"k=$k stride=$stride")
-    graft.functions.RollingAnchors.register(df.sparkSession)
     val cuts = filter(
-      call_function("rolling_anchors", col("text"), lit(k), lit(stride)),
+      Native("rolling_anchors", col("text"), lit(k), lit(stride)),
       p => p > 0)
     df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
       .where(length(col("text")) > 0)

@@ -155,7 +155,10 @@ object HaversineJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Idempotently add the rule to a session that wasn't built with
-    * `spark.sql.extensions=graft.GraftExtensions`. */
+    * `spark.sql.extensions=graft.GraftExtensions`. Only the rule needs
+    * adding: the `haversine_m`, `geo_band_key` and `geo_band_keys` nodes it
+    * matches and builds come from [[graft.functions.Native]], not from the
+    * session's function registry. */
   def register(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(HaversineJoinRule)) {
       spark.experimental.extraOptimizations =

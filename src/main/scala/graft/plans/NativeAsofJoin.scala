@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** The backward as-of join as a FIRST-CLASS physical operator — the full
   * custom-operator ladder ([[graft.operators.AsofJoin]] is the
   * composition form; this is rung (c): `LogicalPlan` + `SparkStrategy` +
-  * `SparkPlan`, registered per-session or via
-  * [[graft.GraftExtensions]]).
+  * `SparkPlan`; the strategy is added per session by [[register]] or
+  * cluster-wide by [[graft.GraftExtensions]]).
   *
   * Why a physical operator when the union+window composition already
   * scales: the composition pays ONE sort over |probe|+|build| rows
@@ -164,8 +164,10 @@ object NativeAsofJoin {
       copy(left = newLeft, right = newRight)
   }
 
-  /** Idempotently add the planner strategy to this session. Cluster-wide
-    * deployments get it from [[graft.GraftExtensions]] instead. */
+  /** Idempotently add the planner strategy to this session; unlike the
+    * strategy, the native functions need no per-session step (see
+    * [[graft.functions.Native]]). Cluster-wide deployments get the
+    * strategy from [[graft.GraftExtensions]] instead. */
   def register(spark: SparkSession): Unit = {
     val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .experimental

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.api.CurationPipeline
+import graft.functions.Native
 import graft.geo.ConnectedComponents
 import graft.pipeline.{Dedup, TextAnalysis}
 import graft.util.PartitionedState
@@ -51,12 +52,6 @@ object CurationStream {
                      stateRoot: String, outDir: String, checkpointDir: String,
                      cfg: CurationPipeline.Config = CurationPipeline.Config(),
                      numBuckets: Int = 64) = {
-    // register the native kernels BEFORE start(): the stream's session
-    // clone copies the function registry at query start, so in-batch
-    // registration would not reach the micro-batch analyzer
-    graft.functions.NgramHashes.register(docs.sparkSession)
-    graft.functions.SortedIntersectSize.register(docs.sparkSession)
-    graft.functions.MinhashBandKeys.register(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -73,20 +68,17 @@ object CurationStream {
                   numBuckets: Int, batchId: Long = 0L): Unit = {
     val spark = batch0.sparkSession
     val B = numBuckets.toLong
-    graft.functions.NgramHashes.register(spark)
-    graft.functions.SortedIntersectSize.register(spark)
     val hashIdx = s"$stateRoot/hash_idx"
     val bandIdx = s"$stateRoot/band_idx"
     val docIdx = s"$stateRoot/doc_idx"
 
-    graft.functions.MinhashBandKeys.register(spark)
     val prep = batch0.select(col("doc_id"), col("text"))
       .withColumn("text_hash", md5(col("text")))
       .withColumn("words", filter(split(col("text"), " "), w => w =!= ""))
       .withColumn("hgrams",
-        call_function("ngram_hashes", col("words"), lit(cfg.ngram)))
+        Native("ngram_hashes", col("words"), lit(cfg.ngram)))
       .withColumn("sz", size(col("hgrams")))
-      .withColumn("bands", call_function("minhash_band_keys", col("words"),
+      .withColumn("bands", Native("minhash_band_keys", col("words"),
         lit(cfg.ngram), lit(cfg.numHashes), lit(cfg.bandRows)))
       .drop("words")
       .cache()
@@ -145,7 +137,7 @@ object CurationStream {
     def verify(cand: DataFrame, aSide: DataFrame): DataFrame = cand
       .join(aSide, "a_id").join(batchSide, "b_id")
       .withColumn("inter",
-        expr("sorted_intersect_size(a_grams, b_grams)").cast("double"))
+        Native("sorted_intersect_size", col("a_grams"), col("b_grams")).cast("double"))
       .where(round(col("inter") / (col("a_sz") + col("b_sz") - col("inter")), 6)
         >= cfg.minSim)
       .select("a_id", "b_id")

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Native
+
 /** Distributed, exact generation of the `checkNames` name-pair relation
   * (MergeUtil.java:166-195) — the fuzzy-match table the merge pipeline
   * joins through. Replaces a driver-side O(V²) loop over the collected
@@ -56,11 +58,10 @@ object SimilarityJoin {
     * lev ≤ adaptive budget, from a distinct-word relation `words(w)`.
     * Includes the diagonal (w, w). */
   def similarWordPairs(words: DataFrame): DataFrame = {
-    graft.functions.PassJoinKeys.register(words.sparkSession)
     val idx = words.select(col("w").as("w1"),
-      explode(call_function("passjoin_index_keys", col("w"))).as("seg"))
+      explode(Native("passjoin_index_keys", col("w"))).as("seg"))
     val prb = words.select(col("w").as("w2"),
-      explode(call_function("passjoin_probe_keys", col("w"))).as("seg"))
+      explode(Native("passjoin_probe_keys", col("w"))).as("seg"))
     idx.join(prb, "seg")
       .where(length(col("w1")) <= length(col("w2")))
       .select("w1", "w2").distinct()

@@ -16,7 +16,7 @@ class BottomKDistinctSpec extends AnyFunSuite {
       .appName("bottom-k-distinct")
       .getOrCreate()
     try {
-      BottomKDistinct.register(spark)
+      Native.register(spark)
       val df = spark.range(10).toDF("x")
       for (args <- Seq(Seq(col("x")), Seq(col("x"), lit(3), lit(1)))) {
         val e = intercept[AnalysisException] {

@@ -37,7 +37,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
           |       passjoin_probe_keys('market') AS ppk,
           |       minhash_band_keys(array('a', 'b', 'c'), 2, 8, 2) AS mbk,
           |       poly31_hash('market') AS ph,
-          |       nfc_normalize(decode(unhex('43616665CC81'), 'UTF-8')) AS nfc
+          |       nfc_normalize(decode(unhex('43616665CC81'), 'UTF-8')) AS nfc,
+          |       rolling_anchors('market', 2, 1) AS ra,
+          |       bottom_k_distinct(7L, 2) AS bk
           |""".stripMargin).head()
       assert(row.getString(0) == graft.geo.Olc.encode(52.52, 13.405, 6))
       assert(math.abs(row.getDouble(1) - 1.0) < 1e-9)
@@ -53,6 +55,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
         graft.pipeline.PortableHash.minhashSignature(Seq("a b", "b c"), 8).toSeq, 2))
       assert(row.getLong(10) == graft.pipeline.PortableHash.poly31Cp("market"))
       assert(row.getString(11) == "Caf\u00e9")
+      assert(row.getSeq[Int](12) == (0 until 5))
+      assert(row.getSeq[Long](13) == Seq(7L))
+      // every row of the function table is injected
+      assert(Native.table.map(_.name).filterNot(n => spark.catalog.functionExists(n)) === Nil)
     } finally spark.stop()
   }
 }

@@ -23,9 +23,7 @@ class NativeExprSpec extends AnyFunSuite {
       .getOrCreate()
     try {
       import spark.implicits._
-      OlcEncodeExpr.register(spark)
-      SortedIntersectSize.register(spark)
-      CosineSim.register(spark)
+      Native.register(spark)
 
       val pts = Seq((48.1503594, 17.1258664), (-33.8688, 151.2093),
         (0.0, 0.0), (89.9, -179.9)).toDF("lat", "lon")

@@ -23,7 +23,7 @@ class NfcNormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("decomposed and composed renderings normalize to identical bytes") {
     import spark.implicits._
-    NfcNormalize.register(spark)
+    Native.register(spark)
     val decomposed = "Cafe\u0301 du Monde" // e + combining acute U+0301
     val composed = "Caf\u00e9 du Monde"    // precomposed e-acute U+00E9
     assert(decomposed != composed, "fixtures must differ byte-wise")
@@ -38,7 +38,7 @@ class NfcNormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("normalizeText scrubs controls, collapses spaces, trims, lowercases") {
     import spark.implicits._
-    NfcNormalize.register(spark)
+    Native.register(spark)
     val raw = "  Hello\tWorld  FOO\u0301  " // O + combining acute
     val got = Seq((1L, raw)).toDF("id", "t")
       .select(graft.pipeline.TextAnalysis.normalizeText(col("t")).as("n"))
