@@ -1,8 +1,9 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlShims}
 import org.apache.spark.sql.functions._
 
+import graft.geo.ConnectedComponents
 import graft.pipeline.{Dedup, TextAnalysis}
 import graft.util.Checkpoints
 
@@ -19,11 +20,12 @@ import graft.util.Checkpoints
   * explained away as "low quality"):
   *
   *   1. exact dedup       — md5 groups, non-canonical members drop
-  *                          ([[Dedup.exactDuplicates]])
+  *                          ([[Dedup.exactGroups]])
   *   2. near-dup resolve  — MinHash+LSH pairs → connected components →
   *                          per-cluster canonical keep
   *                          ([[Dedup.minhashLshPairs]],
-  *                          [[Dedup.resolveByComponents]])
+  *                          [[graft.geo.ConnectedComponents.label]] with
+  *                          [[Dedup.resolveByComponents]]' keep rule)
   *   3. decontamination   — n-gram overlap against the benchmark set
   *                          ([[Dedup.contaminationFlags]])
   *   4. language filter   — n-gram-heuristic language ID
@@ -37,11 +39,20 @@ import graft.util.Checkpoints
   * stages because paraphrases share no shingles).
   *
   * Scale shape (100 TB): every signal is computed map-side from the text
-  * and then joined back by `doc_id` — the joins shuffle (doc_id, signal)
-  * rows, never text. The dedup stages inherit their operators' shapes
-  * (hash-only shuffles, band-key joins, broadcast benchmark grams). The
-  * near-dup keep-list and exact-dup membership are the only shuffled
-  * artifacts proportional to the duplicated subset. Downstream, `keep`
+  * in the contamination screen's one pass over the survivors, and the
+  * verdict is the union of two disjoint row sets (scored survivors and
+  * dropped duplicates) — no join back assembles it. The dedup stages
+  * inherit their operators' shapes (hash-only shuffles, band-key joins,
+  * broadcast benchmark grams); the survivors' text shuffles once, to
+  * spread the scoring. The near-dup keep-list and exact-dup membership
+  * are the only shuffled artifacts proportional to the duplicated subset.
+  *
+  * Fixed cost: one call needs about 65 entries in Spark's codegen cache
+  * (in local mode each whole-stage-codegen class takes two: the driver's
+  * validation compile and the executor's). The cache holds 100 in four
+  * LRU segments of 25, so a steady-state call compiles nothing as long
+  * as no segment overflows; keep new stages inside that budget.
+  * Downstream, `keep`
   * survivors flow to [[graft.pipeline.Sampling.stratifiedBalance]] /
   * [[graft.pipeline.Sampling.packSequences]] keyed on the emitted
   * `lang` / `n_tokens` columns.
@@ -78,7 +89,8 @@ object CurationPipeline {
     *
     * Unless `graft.curation.eagerStages` is false, the call runs the
     * funnel and returns the verdict as a local checkpoint; every
-    * intermediate it materialized is freed before it returns. */
+    * intermediate it materialized is freed before it returns, and the
+    * caller frees the verdict with `graft.util.Checkpoints.free`. */
   def curate(corpus: DataFrame, benchmark: DataFrame, idCol: String,
              textCol: String, cfg: Config = Config()): DataFrame = {
     val base = corpus.select(col(idCol).as("doc_id"), col(textCol).as("text"))
@@ -106,70 +118,79 @@ object CurationPipeline {
       if (!eagerStages) df.cache()
       else { val c = df.localCheckpoint(true); made ++= Seq(df, c); c }
 
-    // 1. exact duplicates: only non-canonical members of >1 groups
-    val exactDrop = stage(Dedup.exactDuplicates(base, "doc_id", "text")
-      .where(col("doc_id") =!= col("canonical_id"))
-      .select(col("doc_id"), lit(true).as("exact_dup")))
+    // 1. exact duplicates: a document drops when its md5 group has a
+    // smaller id. The groups (the duplicated subset's md5s) are a stage of
+    // their own, so the flagging join plans as a broadcast from their
+    // checkpoint's statistics and the corpus text does not shuffle.
+    val groups = stage(Dedup.exactGroups(base, "doc_id", "text")
+      .select(col("text_hash").as("group_hash"), col("canonical_id")))
+    val flagged = {
+      val c = stage(base
+        .join(groups, md5(col("text")) <=> col("group_hash"), "left")
+        .select(col("doc_id"), col("text"),
+          coalesce(col("canonical_id") =!= col("doc_id"), lit(false)).as("exact_dup")))
+      // one row per corpus document: plan over it with the corpus' size,
+      // not the product estimate of the left join that built it
+      if (eagerStages) GraftSqlShims.withStatsOf(c, base) else c
+    }
 
     // 2. near-dup clusters over the exact-canonical survivors (running it
     // on the full set would re-find every exact group as a near cluster).
-    // exactKept (id, text) feeds three consumers: pair generation, the CC
-    // node universe and the survivor filter. resolved (id, cluster, flag)
-    // feeds the survivor filter and the final assembly. Both are stage
-    // outputs a production funnel checkpoints anyway.
-    val exactKept = stage(base.join(exactDrop, Seq("doc_id"), "left_anti"))
-    // the pair list is a checkpoint of its own, and the component forest
-    // built from it cuts it out of resolved's lineage: track it directly
-    val pairs = Dedup.minhashLshPairs(exactKept, "doc_id", "text",
-      cfg.ngram, cfg.numHashes, cfg.bandRows, cfg.minSim)
-    made += pairs
-    val resolved = stage(Dedup.resolveByComponents(exactKept, "doc_id",
-        pairs.select(col("a_id"), col("b_id")))
-      .select(col("doc_id"), col("cluster_id"), col("keep").as("near_keep")))
+    // The pair list and the component labels are checkpoints of their
+    // own: track them directly.
+    val pairs = Dedup.minhashLshPairs(
+      flagged.where(!col("exact_dup")).select(col("doc_id"), col("text")),
+      "doc_id", "text", cfg.ngram, cfg.numHashes, cfg.bandRows, cfg.minSim)
+    val labels = ConnectedComponents.label(corpus.sparkSession,
+      pairs.select(col("a_id").as("a"), col("b_id").as("b")))
+    made ++= Seq(pairs, labels)
+    // Dedup.resolveByComponents' keep rule (canonical = component min;
+    // exact drops are in no pair, so they are their own cluster), but the
+    // text and the exact flag ride along: the survivors and the drops are
+    // both filters of this one join, whose labels side is broadcast once
+    // and reused — the labels carry their exact row count, so a small
+    // labeling plans as a broadcast and the corpus does not shuffle.
+    val resolved = flagged
+      .join(labels, col("doc_id") === col("node"), "left")
+      .select(col("doc_id"), col("text"), col("exact_dup"),
+        coalesce(col("cluster"), col("doc_id")).as("cluster_id"))
+    val survivor = !col("exact_dup") && col("doc_id") === col("cluster_id")
 
-    // 3-5. map-side signals — over the stage-1/2 SURVIVORS only: at a
-    // realistic 30-50% dup rate, scoring the full corpus would pay
-    // 1.5-2x for documents already dropped. Dropped rows surface NULL
-    // signals (their drop_reason is decided before these stages run).
-    // The survivor corpus feeds the contamination and signal passes —
-    // the dedup output IS the pipeline's checkpoint artifact.
-    val survivors = stage(exactKept.join(
-        resolved.where(col("near_keep")).select("doc_id"), Seq("doc_id"), "left_semi"))
-    val contam = Dedup.contaminationFlags(survivors, bench, "doc_id", "text",
-        cfg.decontamNgram, cfg.maxContamFrac)
-      .select(col("doc_id"), col("contaminated_frac"),
-        col("flagged").as("contaminated"))
-    // lang / token-count / quality are all map-side expressions — ONE
-    // projection pass over the survivor checkpoint, one join back
-    val signals = survivors.select(col("doc_id"),
-      TextAnalysis.langId(col("text")).as("lang"),
-      TextAnalysis.bpeishTokenCount(col("text")).as("n_tokens"),
-      TextAnalysis.qualityScore(col("text")).as("quality_score"))
-
-    // one row per document without a join back to the corpus: the exact
-    // drops plus the exact-kept documents, which resolveByComponents
-    // keeps one-for-one
-    val verdict = resolved.withColumn("exact_dup", lit(false))
-      .unionByName(exactDrop, allowMissingColumns = true)
-      .join(contam, Seq("doc_id"), "left")
-      .join(signals, Seq("doc_id"), "left")
+    // 3-5. decontamination and the map-side signals — over the stage-1/2
+    // SURVIVORS only: at a realistic 30-50% dup rate, scoring the full
+    // corpus would pay 1.5-2x for documents already dropped. lang /
+    // token-count / quality ride through the contamination screen's
+    // per-document count, so one pass scores a survivor completely.
+    val scored = Dedup.contaminationFlags(resolved.where(survivor), bench,
+        "doc_id", "text", cfg.decontamNgram, cfg.maxContamFrac,
+        carry = Seq(
+          TextAnalysis.langId(col("text")).as("lang"),
+          TextAnalysis.bpeishTokenCount(col("text")).as("n_tokens"),
+          TextAnalysis.qualityScore(col("text")).as("quality_score")))
       .withColumn("drop_reason",
-        when(coalesce(col("exact_dup"), lit(false)), "exact_duplicate")
-          .when(!coalesce(col("near_keep"), lit(true)), "near_duplicate")
-          .when(coalesce(col("contaminated"), lit(false)), "contaminated")
+        when(col("flagged"), "contaminated")
           .when(Option(cfg.lang).map(col("lang") =!= _).getOrElse(lit(false)),
             "wrong_language")
           .when(col("quality_score") < cfg.minQuality, "low_quality"))
-      .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
-        col("contaminated_frac"),
-        col("lang"), col("n_tokens"), col("quality_score"),
-        col("drop_reason"), col("drop_reason").isNull.as("keep"))
+      .select(col("doc_id"), col("doc_id").as("cluster_id"),
+        col("contaminated_frac"), col("lang"), col("n_tokens"),
+        col("quality_score"), col("drop_reason"))
+
+    // one row per document, without a join: the scored survivors and the
+    // dropped rows are disjoint and together cover the corpus. A dropped
+    // row has NULL signals (its drop_reason is decided before those
+    // stages run).
+    val verdict = scored
+      .unionByName(resolved.where(!survivor).select(col("doc_id"), col("cluster_id"),
+          when(col("exact_dup"), "exact_duplicate").otherwise("near_duplicate")
+            .as("drop_reason")),
+        allowMissingColumns = true)
+      .withColumn("keep", col("drop_reason").isNull)
     if (!eagerStages) verdict
     else {
       // materialize the narrow verdict, then free every checkpoint the
       // stages created — their own and those their operators left behind
-      // (the pair list, the component forest). clearCache() reaches none
+      // (the pair list, the component labels). clearCache() reaches none
       // of them. The inputs' checkpoints, if any, are the caller's.
       val out = verdict.localCheckpoint(true)
       val inputs = (Checkpoints.rdds(corpus) ++ Checkpoints.rdds(benchmark))

@@ -1,7 +1,10 @@
 package graft.geo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.util.Checkpoints
 
@@ -22,6 +25,8 @@ import graft.util.Checkpoints
   *     (≤ `localThreshold` edges), a single union-find labels it exactly —
   *     the same escape hatch GraphFrames takes for small graphs. The
   *     threshold bounds task memory, so this is safe on a cluster too.
+  *     The one task reads the forest's cached blocks through a
+  *     shuffle-free `coalesce(1)`.
   *  3. '''Star-contraction loop''' (the asymptotic path): alternating
   *     large-star / small-star (Kiveris et al., "Connected Components in
   *     MapReduce and Beyond", SoCC'14) — each round one hash-aggregate and
@@ -40,37 +45,69 @@ object ConnectedComponents {
   /** Label every node reachable through `edges` with the minimum node id of
     * its component.
     *
+    * Stages 1 and 2 run on the engine's internal rows: no object encoder,
+    * so they add no generated (de)serializer classes to Spark's codegen
+    * cache, and their counts are RDD jobs over cached blocks, not SQL
+    * aggregates.
+    *
+    * Storage: on the small-graph path the result is an eager local
+    * checkpoint of the labels (the stage-1 forest is freed before
+    * returning); on the star path it is a lazy frame over the last
+    * round's checkpoint. Either way the returned frame reads a checkpoint
+    * that only the caller can release: consume it, then
+    * `graft.util.Checkpoints.free(result)`.
+    *
     * @param edges two LongType columns `a`, `b`; undirected, may contain
-    *              duplicates, self-loops, or only one orientation
+    *              duplicates, self-loops, or only one orientation; a row
+    *              with a null endpoint is not an edge and is skipped
     * @param localThreshold max contracted-forest size finished by a single
     *                       task (bounds that task's memory)
     * @return DataFrame(node: Long, cluster: Long) — one row per distinct
     *         node id on a non-self-loop edge, cluster = min id of
     *         component. Isolated / self-loop-only nodes are absent:
     *         callers left-join their node universe and
-    *         `coalesce(cluster, node)` (their component is themselves)
+    *         `coalesce(cluster, node)` (their component is themselves).
+    *         Its statistics carry the exact row count, so a join against
+    *         a small labeling plans as a broadcast.
     */
   def label(spark: SparkSession, edges: DataFrame,
             localThreshold: Long = 1L << 22): DataFrame = {
-    import spark.implicits._
-
     // stage 1: per-partition union-find contraction (narrow, no shuffle)
-    val forest = edges
-      .select($"a", $"b").as[(Long, Long)]
-      .mapPartitions(it => contract(it, emitRoots = false))
-      .toDF("u", "v") // star edges, u > v
-      .localCheckpoint(false)
+    val forest = edges.select(col("a"), col("b")).queryExecution.toRdd
+      .mapPartitions(rows => contract(rows.collect {
+        case r if !r.isNullAt(0) && !r.isNullAt(1) => (r.getLong(0), r.getLong(1))
+      }, emitRoots = false).map(pairRow))
+      .localCheckpoint()
     val m = forest.count() // materializes the checkpoint
 
     if (m <= localThreshold) {
       // stage 2: one bounded task unions the partition forests exactly
-      forest.repartition(1).as[(Long, Long)]
-        .mapPartitions(it => contract(it, emitRoots = true))
-        .toDF("node", "cluster")
+      val labels = forest.coalesce(1)
+        .mapPartitions(rows => contract(rows.map(r => (r.getLong(0), r.getLong(1))),
+          emitRoots = true).map(pairRow))
+        .localCheckpoint()
+      val n = labels.count()
+      forest.unpersist(blocking = false)
+      GraftSqlShims.ofInternalRows(spark, labels, LabelSchema, n)
     } else {
       // stage 3: large-star/small-star until fixed point
-      starContraction(spark, forest)
+      starContraction(spark, GraftSqlShims.ofInternalRows(spark, forest, EdgeSchema, m))
     }
+  }
+
+  private val EdgeSchema = StructType(Seq(
+    StructField("u", LongType, nullable = false), StructField("v", LongType, nullable = false)))
+  private val LabelSchema = StructType(Seq(
+    StructField("node", LongType, nullable = false),
+    StructField("cluster", LongType, nullable = false)))
+
+  /** One (x, y) pair as a fixed-width row: null bitset + two longs. */
+  private def pairRow(p: (Long, Long)): InternalRow = {
+    val r = new UnsafeRow(2)
+    r.pointTo(new Array[Byte](24), 24)
+    r.setLong(0, p._1)
+    r.setLong(1, p._2)
+    r
   }
 
   /** Union-find over one partition's edges; emits the star forest

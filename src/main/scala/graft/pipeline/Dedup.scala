@@ -22,15 +22,30 @@ import graft.functions.Native
   */
 object Dedup {
 
-  /** Exact duplicate groups by content hash. Emits one row per member of
-    * every group with >1 member: (doc_id, text_hash, canonical_id,
-    * group_size). Only the 16-byte md5 and the id ever shuffle. */
-  def exactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val w = Window.partitionBy("text_hash")
+  /** Exact duplicate groups by content hash: one row per md5 shared by
+    * more than one document — (text_hash, group_size, canonical_id), the
+    * canonical member being the smallest id. ONE hash aggregate with
+    * fixed-width buffers, so it compiles into its codegen stages; only the
+    * md5, the partial count and the partial min shuffle. */
+  def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"), md5(col(textCol)).as("text_hash"))
-      .withColumn("group_size", count(lit(1)).over(w))
-      .withColumn("canonical_id", min("doc_id").over(w))
+      .groupBy("text_hash")
+      .agg(count(lit(1)).as("group_size"), min("doc_id").as("canonical_id"))
       .where(col("group_size") > 1)
+
+  /** Exact duplicate groups by content hash. Emits one row per member of
+    * every group with >1 member: (doc_id, text_hash, group_size,
+    * canonical_id). The groups come from [[exactGroups]]' one hash
+    * aggregate and join back to the members by md5 (null-safe: documents
+    * with a null text form one group). Only the 16-byte md5 and the id
+    * ever shuffle — the groups are the duplicated subset, so the join
+    * usually broadcasts them and the members do not shuffle at all. */
+  def exactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val groups = exactGroups(df, idCol, textCol)
+      .withColumnRenamed("text_hash", "group_hash")
+    df.select(col(idCol).as("doc_id"), md5(col(textCol)).as("text_hash"))
+      .join(groups, col("text_hash") <=> col("group_hash"))
+      .select("doc_id", "text_hash", "group_size", "canonical_id")
   }
 
   /** Paragraph-level exact dedup (the CCNet/C4 boilerplate pass, Wenzek
@@ -78,6 +93,14 @@ object Dedup {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         coalesce(md5(col("clean")), md5(lit(""))).as("clean_hash"))
   }
+
+  /** [[TextAnalysis.words]] spelled with `array_remove` instead of a
+    * `filter` lambda, so the hashing kernels that read it compile into one
+    * whole-stage-codegen stage instead of sitting behind an interpreted
+    * projection. TextAnalysis keeps the lambda: its signal expressions
+    * compiled into their stage measured twice the CPU of the curation
+    * funnel. */
+  private def codegenWords(text: Column): Column = array_remove(split(text, " "), "")
 
   /** Distinct n-grams over an ALREADY-MATERIALIZED words array attribute.
     * The words argument must be a plain column reference, not an expression:
@@ -417,7 +440,8 @@ object Dedup {
   /** MinHash+LSH near-duplicate pairs, verified with exact n-gram Jaccard.
     * numHashes must be divisible by bandRows. Pipeline:
     * shingle → signature (map-only) → exact-equal collapse → band explode
-    * → bucket join on band key → distinct candidate pairs → Jaccard verify
+    * → bucket join on band key (plus each multi-member representative
+    * paired with itself) → distinct candidate pairs → Jaccard verify
     * against re-joined shingle sets → member expansion. Only (id,
     * band_key) and (id, grams-of-candidates) shuffle. Hashing is
     * [[PortableHash]] (mod-1e9+7 integer math), so the DuckDB oracle
@@ -433,126 +457,130 @@ object Dedup {
     // of m (candidate generation O(m), never m²/2 before any verify).
     // Jaccard depends only on the gram set, so every member pair inherits
     // its representatives' verified similarity EXACTLY, and same-set pairs
-    // are Jaccard 1 ≥ minSim by definition — the expanded pair list is
+    // are Jaccard 1 by definition — the expanded pair list is
     // bit-identical to the uncollapsed one.
     //
     // Materialized before fan-out: the two band legs of the candidate
-    // self-join, both verify joins and the within-set explode all read it.
-    // A local checkpoint, not a cache: the pair plan below scans one
-    // LogicalRDD per leg instead of re-planning (and re-printing, on every
-    // AQE update) the collapse's full cached plan at each of the five
-    // references.
+    // self-join and both verify joins read it. A local checkpoint, not a
+    // cache: the pair plan below scans one LogicalRDD per leg instead of
+    // re-planning (and re-printing, on every AQE update) the collapse's
+    // full cached plan at each of the four references.
     val reps = gramSetReps(
         minhashSignatures(df, idCol, textCol, n, numHashes, bandRows))
       .localCheckpoint(true)
-    def side(p: String) = reps.select(col("id").as(s"${p}_id"),
-      col("hgrams").as(s"${p}_grams"), col("sz").as(s"${p}_sz"),
-      col("members").as(s"${p}_members"))
+    // both verify sides must plan alike for the second to reuse the
+    // first's broadcast: state the non-empty-members filter the explode
+    // below would otherwise infer for side a only
+    def side(p: String) = reps.where(size(col("members")) > 0)
+      .select(col("id").as(s"${p}_id"),
+        col("hgrams").as(s"${p}_grams"), col("sz").as(s"${p}_sz"),
+        col("members").as(s"${p}_members"))
+    // a set's own pairs come through the same verify: a representative
+    // with co-members is its own candidate, and its Jaccard with itself
+    // is exactly 1
     val repPairs = repBandCandidates(reps)
       .join(side("a"), "a_id")
       .join(side("b"), "b_id")
       .withColumn("inter",
         Native("sorted_intersect_size", col("a_grams"), col("b_grams")).cast("double"))
-      .select(col("a_members"), col("b_members"),
+      .select((col("a_id") === col("b_id")).as("self"), col("a_members"),
+        col("b_members"),
         round(col("inter") / (col("a_sz") + col("b_sz") - col("inter")), 6)
           .as("jaccard"))
       .where(col("jaccard") >= minSim)
     // expansion without joins: the member arrays rode through the verify
     // joins, so a verified rep pair explodes into its a-members × b-members
     // (least/greatest restores a_id < b_id — the sets are disjoint), and a
-    // set's own pairs are the i < j slices of its sorted member array,
-    // Jaccard exactly 1
-    val cross = repPairs
-      .select(explode(col("a_members")).as("ma"), col("b_members"),
-        col("jaccard"))
-      .select(col("ma"), explode(col("b_members")).as("mb"), col("jaccard"))
-      .select(least(col("ma"), col("mb")).as("a_id"),
-        greatest(col("ma"), col("mb")).as("b_id"), col("jaccard"))
-    val within = reps.where(size(col("members")) > 1)
-      .select(col("members"), posexplode(col("members")).as(Seq("i", "a_id")))
-      .select(col("a_id"),
-        explode(slice(col("members"), col("i") + 2,
-          size(col("members")) - col("i") - 1)).as("b_id"),
-        lit(1.0).as("jaccard"))
-    // eager materialization of the (narrow) pair list so the collapse can
+    // set's own pairs are the i < j slices of its sorted member array.
+    // Eager materialization of the (narrow) pair list so the collapse can
     // be freed here instead of accumulating across invocations (the
     // Multimodal convention)
-    val pairs = within.unionByName(cross).localCheckpoint(true)
+    val pairs = repPairs
+      .select(col("self"), posexplode(col("a_members")).as(Seq("i", "ma")),
+        col("b_members"), col("jaccard"))
+      .select(col("ma"),
+        explode(when(col("self"), slice(col("b_members"), col("i") + 2,
+          size(col("b_members")) - col("i") - 1)).otherwise(col("b_members")))
+          .as("mb"),
+        col("jaccard"))
+      .select(least(col("ma"), col("mb")).as("a_id"),
+        greatest(col("ma"), col("mb")).as("b_id"), col("jaccard"))
+      .localCheckpoint(true)
     graft.util.Checkpoints.free(reps)
     pairs
   }
 
-  /** Per-document MinHash inputs (id, hgrams, bands, sz, gk) of
+  /** Per-document MinHash inputs (id, hgrams, bands, sz) of
     * [[minhashLshPairs]]. Both per-document arrays come from native kernels
     * over the words array — no gram string is ever materialized, no
-    * interpreted UDF: band keys from minhash_band_keys (bit-identical to
-    * the former string-gram + ScalaUDF path, reproduced by the DuckDB
-    * oracle), verify intersections on ngram_hashes' sorted 64-bit hashes
-    * (codegen'd merge walk; distinct counts unchanged w.h.p. — same trade
-    * as ngramJaccardPairs). `gk`, the collapse key, is the md5 of the
-    * sorted gram-hash array: equal key ⇔ equal gram set (w.h.p., the
-    * documented gram-hash trade). */
+    * interpreted UDF or lambda, so the whole projection is one
+    * whole-stage-codegen stage: band keys from minhash_band_keys
+    * (bit-identical to the former string-gram + ScalaUDF path, reproduced
+    * by the DuckDB oracle), verify intersections on ngram_hashes' sorted
+    * 64-bit hashes (codegen'd merge walk; distinct counts unchanged
+    * w.h.p. — same trade as ngramJaccardPairs). */
   private def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                                 n: Int, numHashes: Int,
                                 bandRows: Int): DataFrame = {
     // spread raw rows BEFORE the per-row kernels (see ngramJaccardPairs);
     // no id-keyed barrier after the words projection: both kernels read
     // `words`, so CollapseProject keeps it one projection, and the
-    // collapse's groupBy(gk) exchange follows anyway
+    // collapse's groupBy exchange follows anyway
     val par = df.sparkSession.sparkContext.defaultParallelism
     df.repartition(par)
-      .select(col(idCol).as("id"),
-        filter(split(col(textCol), " "), w => w =!= "").as("words"))
+      .select(col(idCol).as("id"), codegenWords(col(textCol)).as("words"))
       .select(col("id"),
         Native("ngram_hashes", col("words"), lit(n)).as("hgrams"),
         Native("minhash_band_keys", col("words"),
           lit(n), lit(numHashes), lit(bandRows)).as("bands"))
       .withColumn("sz", size(col("hgrams")))
-      .withColumn("gk",
-        md5(array_join(transform(col("hgrams"), _.cast("string")), ",")))
   }
 
-  /** The exact-equal collapse: ONE `groupBy(gk)` emits each distinct gram
-    * set's representative row — the min-id member's (id, hgrams, bands,
-    * sz), via `min_by` — plus the set's ascending member ids. Gram-less
-    * documents can never pair and are dropped.
+  /** The exact-equal collapse: ONE `groupBy` on the gram set itself emits
+    * each distinct set's ascending member ids; the representative is the
+    * smallest. Band keys are a function of the gram set, so they group
+    * along with it and the representative needs no `min_by` row: the
+    * aggregate holds only `collect_list(id)`, which keeps Spark's object
+    * aggregate to its fewest generated classes.
     *
     * Skew: a hot identical group's ids land in one array built by one
     * task — the same bound as the membership window this replaced, which
     * put the whole group in one window partition; only the representative
     * row ever reaches the band join.
     *
-    * The gram-less guard filters the AGGREGATE's output: below it, the
-    * size predicate would be pushed through the repartition into the
-    * parquet scan and run the shingling kernel there, serially (measured
-    * 14 s of p3's 21 s at sf0.1). Gram-less documents therefore group by
-    * their own id (`lone`) so they never pile into one shared group. */
+    * Gram-less documents group by their own id (`lone`) and stay
+    * singleton rows with `sz` 0: they have no band keys and no co-members,
+    * so they never pair. They are not filtered out, because a predicate
+    * on the grouping keys would be pushed below the aggregate and through
+    * the repartition into the parquet scan, running the shingling kernel
+    * there, serially (measured 14 s of p3's 21 s at sf0.1). */
   private def gramSetReps(sigs: DataFrame): DataFrame =
-    sigs.groupBy(col("gk"),
+    sigs.groupBy(col("hgrams"), col("bands"),
         when(col("sz") > 0, lit(null)).otherwise(col("id")).as("lone"))
-      .agg(min_by(struct(col("id"), col("hgrams"), col("bands"), col("sz")),
-          col("id")).as("rep"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .select(col("rep.id").as("id"), col("rep.hgrams").as("hgrams"),
-        col("rep.bands").as("bands"), col("rep.sz").as("sz"), col("members"))
-      .where(col("sz") > 0)
+      .agg(sort_array(collect_list(col("id"))).as("members"))
+      .select(element_at(col("members"), 1).as("id"), col("hgrams"),
+        col("bands"), size(col("hgrams")).as("sz"), col("members"))
 
   /** The rep-level LSH band self-join [[minhashLshPairs]] verifies:
-    * (a_id, b_id) pairs of representatives sharing at least one band key.
+    * (a_id, b_id) pairs of representatives sharing at least one band key,
+    * a_id < b_id, plus (r, r) for every representative with more than one
+    * member, so that set's own pairs ride the same verify and expansion.
     * Package-visible so the hot-bucket fixture can count-assert that an
     * m-item exact-duplicate cluster — ONE representative after the
-    * collapse — generates zero rep-level candidates instead of m²/2. */
+    * collapse — generates one rep-level candidate instead of m²/2. */
   private[graft] def repBandCandidates(reps: DataFrame): DataFrame = {
-    val banded = reps.select(col("id"), explode(col("bands")).as("band_key"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band_key") === col("b.band_key") && col("a.id") < col("b.id"))
+    val banded = reps.select(col("id"), explode(col("bands")).as("band_key"),
+      (size(col("members")) > 1).as("multi"))
+    banded.as("a").join(banded.as("b"), col("a.band_key") === col("b.band_key") &&
+        (col("a.id") < col("b.id") || (col("a.id") === col("b.id") && col("a.multi"))))
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
       .distinct()
   }
 
   /** [[minhashLshPairs]]'s collapse front end, exposed for the hot-bucket
     * fixture: one representative row (id, hgrams, bands, sz, members) per
-    * DISTINCT gram set in `df`, members ascending, id = the smallest. */
+    * DISTINCT non-empty gram set in `df`, members ascending, id = the
+    * smallest, plus one singleton row per gram-less document. */
   private[graft] def minhashReps(df: DataFrame, idCol: String,
                                  textCol: String, n: Int, numHashes: Int,
                                  bandRows: Int): DataFrame =
@@ -891,41 +919,52 @@ object Dedup {
   /** Benchmark-contamination screen (the n-gram-overlap decontamination
     * rule of GPT-3/PaLM-style training pipelines): for every training
     * document, the fraction of its distinct word n-grams that also occur
-    * anywhere in the benchmark set, plus a flag at `minFrac`.
+    * anywhere in the benchmark set, plus a flag at `minFrac`. Returns
+    * (doc_id, n_grams, n_contaminated, contaminated_frac, flagged), then
+    * the `carry` columns.
+    *
+    * `carry` are named per-document expressions over `corpus`'s columns
+    * (e.g. text signals); they ride through the per-doc count as grouping
+    * keys, so a caller that needs them next to the flags needs no join
+    * back. They are computed before the spread and cross it as values:
+    * after it, whole-stage codegen would defer a passed-through
+    * expression into the gram explode's loop and evaluate it once per
+    * gram instead of once per document.
     *
     * Scale shape: the benchmark side is the SMALL side by construction
     * (eval sets are thousands of docs, the corpus is the 100 TB side) —
-    * its distinct gram hashes become a broadcast build side, the corpus
-    * explodes its grams map-side and joins without shuffling text, and
-    * only (doc_id, hit) pairs reach the per-doc count. */
+    * its distinct gram hashes become a broadcast build side, computed
+    * without any repartition. The corpus shuffles ONCE, hash-partitioned
+    * by id: that spreads the rows before the per-row kernels and already
+    * places every document's grams where its per-doc count runs, so the
+    * count needs no exchange of its own. */
   def contaminationFlags(corpus: DataFrame, benchmark: DataFrame,
                          idCol: String, textCol: String,
-                         n: Int, minFrac: Double): DataFrame = {
+                         n: Int, minFrac: Double,
+                         carry: Seq[Column] = Nil): DataFrame = {
     val par = corpus.sparkSession.sparkContext.defaultParallelism
-    def grams(df: DataFrame) = df.repartition(par)
-      .select(col(idCol).as("doc_id"),
-        filter(split(col(textCol), " "), w => w =!= "").as("words"))
-      .repartition(par, col("doc_id"))
-      // both sides hash grams with the same native kernel, so membership
-      // is preserved without materializing gram strings
-      .select(col("doc_id"),
-        Native("ngram_hashes", col("words"), lit(n)).as("grams"))
-    val benchGrams = grams(benchmark)
+    // both sides hash grams with the same native kernel, so membership
+    // is preserved without materializing gram strings
+    def grams(text: Column) =
+      Native("ngram_hashes", codegenWords(text), lit(n)).as("grams")
+    val benchGrams = benchmark.select(grams(col(textCol)))
       .select(explode(col("grams")).as("gram")).distinct()
+    val docs = corpus
+      .select(Seq(col(idCol).as("doc_id"), col(textCol).as("text")) ++ carry: _*)
+      .repartition(par, col("doc_id"))
+    val carried = docs.columns.toSeq.drop(2).map(col)
+    val frac = round(when(col("n_grams") > 0,
+      col("n_contaminated").cast("double") / col("n_grams")).otherwise(0.0), 6)
     // explode_outer: a doc shorter than n words keeps its row (null gram,
     // zero hits) instead of silently vanishing from the screen table
-    val corpusGrams = grams(corpus)
-      .select(col("doc_id"), size(col("grams")).as("n_grams"),
-        explode_outer(col("grams")).as("gram"))
-    corpusGrams
+    docs.select(Seq(col("doc_id"), grams(col("text"))) ++ carried: _*)
+      .select(Seq(col("doc_id"), size(col("grams")).as("n_grams"),
+        explode_outer(col("grams")).as("gram")) ++ carried: _*)
       .join(broadcast(benchGrams.withColumn("hit", lit(1))), Seq("gram"), "left")
-      .groupBy("doc_id", "n_grams")
+      .groupBy(Seq(col("doc_id"), col("n_grams")) ++ carried: _*)
       .agg(sum(coalesce(col("hit"), lit(0))).cast("int").as("n_contaminated"))
-      .select(col("doc_id"), col("n_grams"), col("n_contaminated"),
-        round(when(col("n_grams") > 0,
-          col("n_contaminated").cast("double") / col("n_grams")).otherwise(0.0), 6)
-          .as("contaminated_frac"))
-      .withColumn("flagged", col("contaminated_frac") >= minFrac)
+      .select(Seq(col("doc_id"), col("n_grams"), col("n_contaminated"),
+        frac.as("contaminated_frac"), (frac >= minFrac).as("flagged")) ++ carried: _*)
   }
 
   /** Dedup resolution: near-dup PAIRS (from any of the generators above)

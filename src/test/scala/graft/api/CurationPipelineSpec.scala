@@ -145,4 +145,33 @@ class CurationPipelineSpec extends AnyFunSuite {
     // stage plans printed ~700 KB per AQE update of the pair execution
     assert(largest < 64 * 1024, s"$what printed a $largest-byte plan")
   }
+
+  test("a repeated curate call compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (corpus, bench) = funnelCorpus(spark)
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def call(): Unit = {
+      val out = CurationPipeline.curate(corpus, bench, "id", "text")
+      assert(out.collect().length === 6)
+      graft.util.Checkpoints.free(out)
+    }
+    call()
+    call()
+    val before = compiles
+    call()
+    // every generated class of one call must still be in Spark's codegen
+    // cache (100 entries in 4 LRU segments of 25) when the next call runs
+    assert(compiles - before === 0L, "classes recompiled by a steady-state call")
+  }
+
+  test("curate leaves no storage behind") {
+    val (corpus, bench) = funnelCorpus(spark)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val out = CurationPipeline.curate(corpus, bench, "id", "text")
+    assert(out.collect().length === 6)
+    graft.util.Checkpoints.free(out)
+    assert(sc.getPersistentRDDs.size === before,
+      s"persisted after free: ${sc.getPersistentRDDs.keySet}")
+  }
 }
