@@ -34,18 +34,14 @@ object Dedup {
       .where(col("group_size") > 1)
 
   /** Exact duplicate groups by content hash. Emits one row per member of
-    * every group with >1 member: (doc_id, text_hash, group_size,
-    * canonical_id). The groups come from [[exactGroups]]' one hash
-    * aggregate and join back to the members by md5 (null-safe: documents
-    * with a null text form one group). Only the 16-byte md5 and the id
-    * ever shuffle — the groups are the duplicated subset, so the join
-    * usually broadcasts them and the members do not shuffle at all. */
+    * every group with >1 member: (doc_id, text_hash, canonical_id,
+    * group_size). Only the 16-byte md5 and the id ever shuffle. */
   def exactDuplicates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val groups = exactGroups(df, idCol, textCol)
-      .withColumnRenamed("text_hash", "group_hash")
+    val w = Window.partitionBy("text_hash")
     df.select(col(idCol).as("doc_id"), md5(col(textCol)).as("text_hash"))
-      .join(groups, col("text_hash") <=> col("group_hash"))
-      .select("doc_id", "text_hash", "group_size", "canonical_id")
+      .withColumn("group_size", count(lit(1)).over(w))
+      .withColumn("canonical_id", min("doc_id").over(w))
+      .where(col("group_size") > 1)
   }
 
   /** Paragraph-level exact dedup (the CCNet/C4 boilerplate pass, Wenzek

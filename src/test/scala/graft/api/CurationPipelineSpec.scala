@@ -109,6 +109,10 @@ class CurationPipelineSpec extends AnyFunSuite {
     assert(grown.subsetOf(own), s"leaked RDDs ${grown -- own}")
     assert(grown.size <= outs.size)
     assert(spark.sharedState.cacheManager.isEmpty)
+    // and freeing the returned frames leaves nothing at all
+    outs.foreach(graft.util.Checkpoints.free)
+    assert(sc.getPersistentRDDs.keySet === before,
+      s"persisted after free: ${sc.getPersistentRDDs.keySet -- before}")
   }
 
   test("no curate plan description exceeds 64 KB") {
@@ -146,32 +150,47 @@ class CurationPipelineSpec extends AnyFunSuite {
     assert(largest < 64 * 1024, s"$what printed a $largest-byte plan")
   }
 
-  test("a repeated curate call compiles no class") {
-    import org.apache.spark.metrics.source.CodegenMetrics
+  test("one curate call needs at most 64 codegen-cache entries") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
     val (corpus, bench) = funnelCorpus(spark)
-    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    def call(): Unit = {
+    // Spark's codegen cache is keyed by (thread context classloader,
+    // code); CodeGenerator logs each compiled class's code at DEBUG on the
+    // compiling thread. The distinct keys of one call are its working set,
+    // which must fit the cache's 100 entries (4 LRU segments of 25) for a
+    // repeated call to compile nothing. Counting distinct keys instead of
+    // compiles keeps the test independent of which segment a key lands in,
+    // which follows the classloader's identity hash.
+    val keys = java.util.concurrent.ConcurrentHashMap.newKeySet[(Int, String)]()
+    val appender = new AbstractAppender("codegen-keys", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = if (e.getLevel == Level.DEBUG)
+        keys.add(System.identityHashCode(Thread.currentThread.getContextClassLoader) ->
+          e.getMessage.getFormattedMessage)
+    }
+    val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val logger = new LoggerConfig(name, Level.DEBUG, false)
+    logger.addAppender(appender, Level.DEBUG, null)
+    appender.start()
+    // a key already cached by an earlier test would not compile again
+    val cache = { val f = Class.forName(name + "$").getDeclaredField("cache")
+      f.setAccessible(true); f.get(null) }
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    try {
       val out = CurationPipeline.curate(corpus, bench, "id", "text")
       assert(out.collect().length === 6)
       graft.util.Checkpoints.free(out)
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
     }
-    call()
-    call()
-    val before = compiles
-    call()
-    // every generated class of one call must still be in Spark's codegen
-    // cache (100 entries in 4 LRU segments of 25) when the next call runs
-    assert(compiles - before === 0L, "classes recompiled by a steady-state call")
-  }
-
-  test("curate leaves no storage behind") {
-    val (corpus, bench) = funnelCorpus(spark)
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.size
-    val out = CurationPipeline.curate(corpus, bench, "id", "text")
-    assert(out.collect().length === 6)
-    graft.util.Checkpoints.free(out)
-    assert(sc.getPersistentRDDs.size === before,
-      s"persisted after free: ${sc.getPersistentRDDs.keySet}")
+    assert(keys.size > 0, "no generated code was logged")
+    assert(keys.size <= 64, s"${keys.size} codegen-cache entries for one call")
   }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Count Spark codegen compiles in one perfbench workload run.
 
-    python3 tools/codegen_census.py curation 1 [--seconds 8]
+    python3 tools/codegen_census.py curation 1
 
 Runs the jar that perfbench/run.py builds (building it first if the
 sources changed) with tools/codegen-log4j2.properties, which logs Spark's
@@ -13,8 +13,9 @@ of the run:
   warm-up       opening the inputs and the untimed warm-up (before the
                 `setup:` line); with no steady-state misses, this is the
                 number of cache entries one operation needs
-  measured      the measured window, also divided by its operations (the
-                count of latencies on the `op latencies` line)
+  measured      the measured window (BENCHMARK.json's run_seconds), also
+                divided by its operations (the count of latencies on the
+                `op latencies` line)
 
 Spark's cache holds 100 entries in 4 LRU segments of 25; a key's segment
 depends on the classloader's identity hash, so it varies from run to run.
@@ -46,12 +47,9 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("workload")
     ap.add_argument("seed", type=int)
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="measured window (default: BENCHMARK.json run_seconds)")
     a = ap.parse_args()
-    if a.seconds is None:
-        with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-            a.seconds = json.load(f)["run_seconds"]
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        seconds = json.load(f)["run_seconds"]
     run = load_run()
     run.build()
     work = tempfile.mkdtemp(prefix="codegen-census-")
@@ -60,7 +58,7 @@ def main():
         "-Dlog4j2.configurationFile=" + LOG4J,
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-cp", run.JAR + os.pathsep + os.path.join(run.spark_jars(), "*"), "perfbench.Main",
-        "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
+        "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(seconds),
         "--trace", "0", "--work-dir", work]
     phases = [["generate", 0, 0.0], ["warm-up", 0, 0.0], ["measured", 0, 0.0]]
     phase, ops, result = 0, None, None
