@@ -31,7 +31,11 @@ import graft.util.Checkpoints
   *   4. language filter   — n-gram-heuristic language ID
   *                          ([[TextAnalysis.langId]])
   *   5. quality filter    — composite quality score
-  *                          ([[TextAnalysis.qualityFeatures]])
+  *                          ([[TextAnalysis.qualityScore]])
+  *
+  * Stages 4 and 5 read one column: [[TextAnalysis.signals]], the native
+  * kernel that computes the language, the token count and the quality
+  * score from a single scan of each survivor's text.
   *
   * When document embeddings exist, [[graft.pipeline.Similarity.semanticDedup]]
   * slots in as a further dedup stage after step 2 (SemDeDup's published
@@ -47,7 +51,7 @@ import graft.util.Checkpoints
   * spread the scoring. The near-dup keep-list and exact-dup membership
   * are the only shuffled artifacts proportional to the duplicated subset.
   *
-  * Fixed cost: one call needs about 65 entries in Spark's codegen cache
+  * Fixed cost: one call needs about 64 entries in Spark's codegen cache
   * (in local mode each whole-stage-codegen class takes two: the driver's
   * validation compile and the executor's). The cache holds 100 in four
   * LRU segments of 25, so a steady-state call compiles nothing as long
@@ -158,23 +162,22 @@ object CurationPipeline {
 
     // 3-5. decontamination and the map-side signals — over the stage-1/2
     // SURVIVORS only: at a realistic 30-50% dup rate, scoring the full
-    // corpus would pay 1.5-2x for documents already dropped. lang /
-    // token-count / quality ride through the contamination screen's
-    // per-document count, so one pass scores a survivor completely.
+    // corpus would pay 1.5-2x for documents already dropped. The signals
+    // struct (lang, token count, quality) rides through the contamination
+    // screen's per-document count, so one pass scores a survivor
+    // completely, with one kernel call.
     val scored = Dedup.contaminationFlags(resolved.where(survivor), bench,
         "doc_id", "text", cfg.decontamNgram, cfg.maxContamFrac,
-        carry = Seq(
-          TextAnalysis.langId(col("text")).as("lang"),
-          TextAnalysis.bpeishTokenCount(col("text")).as("n_tokens"),
-          TextAnalysis.qualityScore(col("text")).as("quality_score")))
+        carry = Seq(TextAnalysis.signals(col("text")).as("signals")))
       .withColumn("drop_reason",
         when(col("flagged"), "contaminated")
-          .when(Option(cfg.lang).map(col("lang") =!= _).getOrElse(lit(false)),
+          .when(Option(cfg.lang).map(col("signals.lang") =!= _).getOrElse(lit(false)),
             "wrong_language")
-          .when(col("quality_score") < cfg.minQuality, "low_quality"))
+          .when(col("signals.quality_score") < cfg.minQuality, "low_quality"))
       .select(col("doc_id"), col("doc_id").as("cluster_id"),
-        col("contaminated_frac"), col("lang"), col("n_tokens"),
-        col("quality_score"), col("drop_reason"))
+        col("contaminated_frac"), col("signals.lang").as("lang"),
+        col("signals.n_tokens").as("n_tokens"),
+        col("signals.quality_score").as("quality_score"), col("drop_reason"))
 
     // one row per document, without a join: the scored survivors and the
     // dropped rows are disjoint and together cover the corpus. A dropped

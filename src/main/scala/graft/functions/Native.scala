@@ -80,7 +80,9 @@ object Native {
     Fn("nfc_normalize", classOf[NfcNormalize], "s STRING") {
       case Seq(s) => NfcNormalize(s) },
     Fn("bottom_k_distinct", classOf[BottomKDistinct], "value BIGINT, k INT") {
-      case Seq(v, k) => BottomKDistinct(v, int(k)) })
+      case Seq(v, k) => BottomKDistinct(v, int(k)) },
+    Fn("text_signals", classOf[TextSignals], "text STRING") {
+      case Seq(text) => TextSignals(text) })
 
   private val byName: Map[String, Fn] = table.map(f => f.name -> f).toMap
 

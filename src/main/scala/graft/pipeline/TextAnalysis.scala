@@ -7,9 +7,11 @@ import graft.functions.Native
 
 /** Text-analysis operators for corpus curation: language ID (stopword
   * n-gram heuristic), quality scoring, token counting (whitespace + a
-  * BPE-ish regex), and document fingerprinting. All are map-only column
-  * expressions (whole-stage-codegen friendly, no UDFs on the hot path),
-  * so they cost one scan at any scale.
+  * BPE-ish rule), and document fingerprinting. All are map-only column
+  * expressions with no UDFs, so they cost one scan at any scale. The
+  * curation signals (language, token count, quality) come from one native
+  * kernel, [[signals]]; [[words]] and [[profileRatio]] are builtin
+  * compositions whose `filter` lambda runs interpreted per word.
   */
 object TextAnalysis {
 
@@ -20,6 +22,10 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "das", "und", "ist"),
     "fr" -> Seq("le", "la", "les", "et", "est"))
 
+  /** The text's words: maximal runs of characters other than a space
+    * (tabs and newlines belong to words). The non-empty `filter` is a
+    * lambda, which Spark evaluates interpreted (`ArrayFilter` has no
+    * codegen), once per word. */
   def words(text: Column): Column = filter(split(text, " "), w => w =!= "")
 
   /** Canonical text normalization (the cleaning step every corpus pass
@@ -38,52 +44,45 @@ object TextAnalysis {
         "[\\x00-\\x1F\\x7F]", " "),
       " +", " ")))
 
-  /** Fraction of words found in `profile`. */
+  /** Fraction of words found in `profile` (exact, case-sensitive
+    * matches); 0 for a text without words or a null one. Builtin: [[words]]
+    * plus a second interpreted `filter` lambda per word. */
   def profileRatio(text: Column, profile: Seq[String]): Column = {
     val ws = words(text)
     val hits = size(filter(ws, w => profile.map(s => w === s).reduce(_ || _)))
     when(size(ws) > 0, hits.cast("double") / size(ws)).otherwise(lit(0.0))
   }
 
-  /** Predicted language: best-scoring profile if its ratio clears
-    * `minRatio`, else "und" (undetermined). Deterministic tie-break by
-    * profile name order. */
-  def langId(text: Column, minRatio: Double = 0.02): Column = {
-    val scored = stopwordProfiles.toSeq.sortBy(_._1).map { case (lang, prof) =>
-      struct(round(profileRatio(text, prof), 6).as("ratio"), lit(lang).as("lang"))
-    }
-    val best = greatest(scored: _*)
-    when(best.getField("ratio") >= minRatio, best.getField("lang")).otherwise(lit("und"))
-  }
+  /** A document's curation signals from one scan of its text, the native
+    * `text_signals` kernel ([[graft.functions.TextSignals]]):
+    * `struct<lang STRING, n_tokens INT, quality_score DOUBLE>`. A caller
+    * that needs more than one field carries this one column and reads its
+    * fields, so the text is scanned once. Never null: a null text gives
+    * ("und", null, 0.4). */
+  def signals(text: Column): Column = Native("text_signals", text)
 
-  /** Whitespace token count. */
+  /** Predicted language: the stopword profile with the greatest ratio
+    * (rounded to 6 places) if it reaches 0.02, else "und" (undetermined).
+    * A tie goes to the greater profile name. A null text is "und". */
+  def langId(text: Column): Column = signals(text).getField("lang")
+
+  /** Whitespace token count; null for a null text. */
   def wsTokenCount(text: Column): Column = size(words(text))
 
-  /** BPE-ish token count: runs of letters, runs of digits, or any single
-    * other non-space char each count as one token. */
-  def bpeishTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), lit(0)))
+  /** BPE-ish token count: runs of ASCII letters, runs of ASCII digits, or
+    * any single other non-space code point each count as one token. Null
+    * for a null text. */
+  def bpeishTokenCount(text: Column): Column = signals(text).getField("n_tokens")
 
-  /** The composite quality score in [0,1] as a plain Column, so callers
-    * can fold it into an existing map-side projection (one pass) instead
-    * of a separate [[qualityFeatures]] scan + join. */
-  def qualityScore(t: Column): Column = {
-    val ws = words(t)
-    val nWords = size(ws).cast("double")
-    val nChars = length(t).cast("double")
-    val avgWordLen = when(nWords > 0, (nChars - (nWords - 1)) / nWords).otherwise(0.0)
-    val stopRatio = profileRatio(t, stopwordProfiles("en"))
-    val punctRatio = when(nChars > 0,
-      size(regexp_extract_all(t, lit("[^A-Za-z0-9 ]"), lit(0))).cast("double") / nChars)
-      .otherwise(0.0)
-    val lengthScore = least(nWords / 100.0, lit(1.0))
-    round(greatest(lit(0.0), least(lit(1.0),
-      lengthScore * 0.4 + least(stopRatio * 5.0, lit(1.0)) * 0.3 +
-        least(avgWordLen / 8.0, lit(1.0)) * 0.3 - punctRatio)), 6)
-  }
+  /** The composite quality score in [0,1], rounded to 6 places: rewards
+    * mid-length docs, long-ish words, English stopword presence; penalizes
+    * symbol soup (see [[qualityFeatures]] for the features). A null text
+    * scores 0.4: its ratios count as 0 and its length score as full. */
+  def qualityScore(t: Column): Column = signals(t).getField("quality_score")
 
-  /** Quality features + a composite score in [0,1]: rewards mid-length
-    * docs, long-ish words, stopword presence; penalizes symbol soup. */
+  /** The features [[qualityScore]] combines, spelled with builtins
+    * (whitespace words, code-point length, English stopword ratio,
+    * punctuation ratio), next to the score itself. */
   def qualityFeatures(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val t = col(textCol)
     val ws = words(t)

@@ -166,9 +166,7 @@ object CurationStream {
       .select(col("doc_id"), col("contaminated_frac"),
         col("flagged").as("contaminated"))
     val signals = survivors.select(col("doc_id"),
-      TextAnalysis.langId(col("text")).as("lang"),
-      TextAnalysis.bpeishTokenCount(col("text")).as("n_tokens"),
-      TextAnalysis.qualityScore(col("text")).as("quality_score"))
+      TextAnalysis.signals(col("text")).as("signals"))
 
     val verdict = prep.select("doc_id")
       .join(exact.where(col("exact_dup")), Seq("doc_id"), "left")
@@ -179,13 +177,14 @@ object CurationStream {
         when(coalesce(col("exact_dup"), lit(false)), "exact_duplicate")
           .when(!coalesce(col("near_keep"), lit(true)), "near_duplicate")
           .when(coalesce(col("contaminated"), lit(false)), "contaminated")
-          .when(Option(cfg.lang).map(col("lang") =!= _).getOrElse(lit(false)),
+          .when(Option(cfg.lang).map(col("signals.lang") =!= _).getOrElse(lit(false)),
             "wrong_language")
-          .when(col("quality_score") < cfg.minQuality, "low_quality"))
+          .when(col("signals.quality_score") < cfg.minQuality, "low_quality"))
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
-        col("contaminated_frac"),
-        col("lang"), col("n_tokens"), col("quality_score"),
+        col("contaminated_frac"), col("signals.lang").as("lang"),
+        col("signals.n_tokens").as("n_tokens"),
+        col("signals.quality_score").as("quality_score"),
         col("drop_reason"), col("drop_reason").isNull.as("keep"))
       .localCheckpoint(true) // one materialization feeds 4 writes below
 

@@ -193,4 +193,34 @@ class CurationPipelineSpec extends AnyFunSuite {
     assert(keys.size > 0, "no generated code was logged")
     assert(keys.size <= 64, s"${keys.size} codegen-cache entries for one call")
   }
+
+  test("one curate call computes the text signals with one kernel, no lambda or regex") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegExpExtractAll}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val (corpus, bench) = funnelCorpus(spark)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = CurationPipeline.curate(corpus, bench, "id", "text")
+      assert(out.collect().length === 6)
+      graft.util.Checkpoints.free(out)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    // every expression of every executed plan, into AQE's query stages
+    val walk = new AdaptiveSparkPlanHelper {}
+    val exprs: Seq[Expression] = plans.asScala.toSeq.flatMap(qe =>
+      walk.flatMap(qe.executedPlan)(_.expressions.flatMap(_.collect { case e => e })))
+    assert(plans.size > 0, "no execution was observed")
+    assert(exprs.count(_.isInstanceOf[graft.functions.TextSignals]) === 1)
+    assert(!exprs.exists(_.isInstanceOf[RegExpExtractAll]), "regexp_extract_all in a curate plan")
+    assert(!exprs.exists(_.isInstanceOf[ArrayFilter]), "a lambda filter in a curate plan")
+  }
 }
