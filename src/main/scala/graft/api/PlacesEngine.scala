@@ -22,7 +22,10 @@ import graft.geo.GeoFunctions
   * Scale notes: store `places` partitioned by a tileid prefix
   * (TileLayoutSpec layout) so `geoTile` is partition pruning; `operations`
   * partitioned by block date so `history` prunes to the window. Every
-  * method returns a lazy DataFrame — composition stays in Catalyst.
+  * method but `clusterHistory` returns a lazy DataFrame — composition stays
+  * in Catalyst. `clusterHistory` runs ConnectedComponents' jobs when it is
+  * called and keeps two caches (its points and `GeoJoins.pairsWithin`'s
+  * input) past the call.
   */
 final class PlacesEngine(places: DataFrame, operations: DataFrame) {
 
@@ -82,34 +85,40 @@ final class PlacesEngine(places: DataFrame, operations: DataFrame) {
   /** §3.2 `GET /history/data?date=&date2=` — replay the op window into one
     * feature frame: created / edited / deleted objects with status, keyed
     * by tile (OprHistoryChangesProvider.java:148-164,249-320). Bounds are
-    * inclusive-exclusive ISO dates. */
+    * inclusive-exclusive ISO dates.
+    *
+    * Like the reference's loop over the window, this is one scan: each op's
+    * three arrays are reshaped to (id, tileid, status, change_keys) and
+    * concatenated, and one `inline` emits the rows, created before deleted
+    * before edited within an op. A null array contributes no rows. */
   def history(fromDate: String, toDate: String): DataFrame = {
     val ops = operations.where(
       col("block_date") >= to_timestamp(lit(fromDate)) &&
         col("block_date") < to_timestamp(lit(toDate)) &&
         col("op_type") === "opr.place")
-    val created = ops.select(col("block_date"), col("block_id"), col("op_ord"),
-      explode(col("created")).as("o"))
-      .select(col("block_date"), col("block_id"), col("op_ord"),
-        col("o.id").as("id"), col("o.tileid").as("tileid"),
-        lit("CREATED").as("status"), lit(null).cast("string").as("change_keys"))
-    val deletedF = ops.select(col("block_date"), col("block_id"), col("op_ord"),
-      explode(col("deleted")).as("id"))
-      .select(col("block_date"), col("block_id"), col("op_ord"), col("id"),
-        element_at(col("id"), 1).as("tileid"),
-        lit("DELETED").as("status"), lit(null).cast("string").as("change_keys"))
+    def row(id: Column, tileid: Column, status: Column, changeKeys: Column): Column =
+      struct(id.as("id"), tileid.as("tileid"), status.as("status"),
+        changeKeys.as("change_keys"))
+    val noKeys = lit(null).cast("string")
+    // concat is null if any argument is, so a missing kind reads as empty
+    def rows(arr: String)(f: Column => Column): Column =
+      coalesce(transform(col(arr), f), array())
+    val created = rows("created")(o =>
+      row(o.getField("id"), o.getField("tileid"), lit("CREATED"), noKeys))
+    val deleted = rows("deleted")(id =>
+      row(id, element_at(id, 1), lit("DELETED"), noKeys))
     // B5 change-key classification: a source tombstone edit
     // (source.osm[i].deleted=set) reads as the place being REMOVED from
     // the map; anything else is EDITED
-    val edited = ops.select(col("block_date"), col("block_id"), col("op_ord"),
-      explode(col("edited")).as("e"))
-      .select(col("block_date"), col("block_id"), col("op_ord"),
-        col("e.id").as("id"), element_at(col("e.id"), 1).as("tileid"),
-        when(exists(map_keys(col("e.change")),
-            k => k.rlike("^source\\.osm\\[\\d+\\]\\.deleted$")), "REMOVED")
-          .otherwise("EDITED").as("status"),
-        array_join(array_sort(map_keys(col("e.change"))), ",").as("change_keys"))
-    created.unionByName(deletedF).unionByName(edited)
+    val edited = rows("edited") { e =>
+      val keys = map_keys(e.getField("change"))
+      row(e.getField("id"), element_at(e.getField("id"), 1),
+        when(exists(keys, k => k.rlike("^source\\.osm\\[\\d+\\]\\.deleted$")), "REMOVED")
+          .otherwise("EDITED"),
+        array_join(array_sort(keys), ","))
+    }
+    ops.select(col("block_date"), col("block_id"), col("op_ord"),
+      inline(concat(created, deleted, edited)))
   }
 
   /** Op-log replay: per-entity state as of `asOf` (exclusive) — the
@@ -119,20 +128,21 @@ final class PlacesEngine(places: DataFrame, operations: DataFrame) {
     * (block_date, block_id, op_ord) order via a single max(struct(...)) —
     * no per-entity iteration, no window sort over the full log.
     *
-    * Returns id, tileid, status (ACTIVE/REMOVED/DELETED), created_date
-    * (first CREATED op), last_change, n_ops. */
+    * Returns id, tileid (the tile of the latest op: a CREATED row carries
+    * the op's `created.tileid`, later rows the id's first element, and the
+    * two may differ), status (ACTIVE/REMOVED/DELETED), created_date (first
+    * CREATED op), last_change, n_ops. */
   def snapshotAt(asOf: String): DataFrame = {
     val h = history("1970-01-01", asOf)
     h.groupBy(col("id"))
       .agg(
         max(struct(col("block_date"), col("block_id"), col("op_ord"),
-          col("status"))).as("last"),
+          col("status"), col("tileid"))).as("last"),
         min(when(col("status") === "CREATED", col("block_date")))
           .as("created_date"),
         max(col("block_date")).as("last_change"),
-        count(lit(1)).as("n_ops"),
-        first(col("tileid")).as("tileid"))
-      .select(col("id"), col("tileid"),
+        count(lit(1)).as("n_ops"))
+      .select(col("id"), col("last.tileid").as("tileid"),
         when(col("last.status") === "DELETED", "DELETED")
           .when(col("last.status") === "REMOVED", "REMOVED")
           .otherwise("ACTIVE").as("status"),
@@ -164,8 +174,10 @@ final class PlacesEngine(places: DataFrame, operations: DataFrame) {
     * the reference's greedy 150 m grouping): proximity pairs from the
     * tile-bucketed distance join, components from the DataFrame-native
     * star-contraction ([[graft.geo.ConnectedComponents]]). Returns one row
-    * per feature with its cluster's representative id (min member id —
-    * deterministic, unlike the reference's scan-order group leader). */
+    * per feature with its cluster's representative id: the `opr_id` of the
+    * member whose `xxhash64(opr_id)` is smallest (deterministic, unlike the
+    * reference's scan-order group leader; not the smallest id). Not lazy:
+    * the component labelling runs its jobs at call time. */
   def clusterHistory(fromDate: String, toDate: String, radiusM: Double): DataFrame = {
     // graph nodes are 64-bit hashes of the opr id (ids are array<string>;
     // the hash keeps edges/labels fixed-width through the shuffles),

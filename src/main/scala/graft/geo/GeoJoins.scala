@@ -38,8 +38,9 @@ object GeoJoins {
       s"radius $radiusM below packing bound ${GeoBands.MinRadiusM}")
     val bandDeg = GeoBands.bandDeg(radiusM)
     // repartition BEFORE the per-row key encode so it runs at full
-    // parallelism (a single-file parquet scan is 1-2 tasks), and cache so
-    // the probe and build legs don't each recompute the encode
+    // parallelism (a single-file parquet scan is 1-2 tasks), and cache the
+    // repartitioned (k, lat, lon) so the probe and build legs don't each
+    // recompute the input and its shuffle (each leg encodes its own keys)
     val par = points.sparkSession.sparkContext.defaultParallelism
     val pts = points.select(col(keyCol).as("k"), col(latCol).as("lat"),
         col(lonCol).as("lon"))

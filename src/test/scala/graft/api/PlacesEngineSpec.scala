@@ -121,16 +121,42 @@ class PlacesEngineSpec extends AnyFunSuite {
     }
   }
 
+  // in-window ops that exercise the history reshape: one op holding all
+  // three kinds, one whose `created` is null (not empty) while `edited` is
+  // set, one whose `edited` and `deleted` are null
+  private def historyOpRows = opRows ++ Seq(
+    Row(5L, 1, ts("2021-06-15T00:00:00Z"), "opr.place",
+      Seq(Row(Seq("9G2260", "eee555"), "9G2260")),
+      Seq(Row(Seq("9G2260", "fff666"), Map("name" -> "Mill", "addr" -> "Main St 1"))),
+      Seq(Seq("9G2260", "ggg777"))),
+    Row(6L, 0, ts("2021-06-16T00:00:00Z"), "opr.place",
+      null,
+      Seq(Row(Seq("9G2260", "eee555"), Map("source.osm[1].deleted" -> "2021-06-16"))),
+      Seq.empty),
+    Row(6L, 1, ts("2021-06-16T00:00:00Z"), "opr.place",
+      Seq(Row(Seq("9G2270", "hhh888"), "9G2270")), null, null))
+
   test("history: window pruning, op-type filter, created/edited/removed classification") {
     withSpark { spark =>
       val engine = new PlacesEngine(
         spark.createDataFrame(spark.sparkContext.parallelize(placeRows), placesSchema),
-        spark.createDataFrame(spark.sparkContext.parallelize(opRows), opsSchema))
-      val h = engine.history("2021-06-01", "2021-07-01")
-        .select("status", "tileid").collect().map(r => (r.getString(0), r.getString(1)))
-      assert(h.sorted.toSeq == Seq(
-        ("CREATED", "9G2250"), ("DELETED", "9G2250"),
-        ("EDITED", "9G225000"), ("REMOVED", "8FWV54")))
+        spark.createDataFrame(spark.sparkContext.parallelize(historyOpRows), opsSchema))
+      val hist = engine.history("2021-06-01", "2021-07-01")
+      assert(hist.columns.toSeq == Seq("block_date", "block_id", "op_ord", "id", "tileid",
+        "status", "change_keys"))
+      val h = hist.select("block_id", "op_ord", "id", "tileid", "status", "change_keys")
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getSeq[String](2).mkString(","),
+          r.getString(3), r.getString(4), Option(r.getString(5))))
+      assert(h.sortBy(_.toString).toSeq == Seq(
+        (1L, 0, "9G2250,bbb222", "9G2250", "CREATED", None),
+        (2L, 0, "8FWV54,ddd444", "8FWV54", "REMOVED", Some("source.osm[0].deleted")),
+        (2L, 0, "9G225000,aaa111", "9G225000", "EDITED", Some("images")),
+        (2L, 0, "9G2250,ccc333", "9G2250", "DELETED", None),
+        (5L, 1, "9G2260,eee555", "9G2260", "CREATED", None),
+        (5L, 1, "9G2260,fff666", "9G2260", "EDITED", Some("addr,name")),
+        (5L, 1, "9G2260,ggg777", "9G2260", "DELETED", None),
+        (6L, 0, "9G2260,eee555", "9G2260", "REMOVED", Some("source.osm[1].deleted")),
+        (6L, 1, "9G2270,hhh888", "9G2270", "CREATED", None)).sortBy(_.toString))
       // review surface: REMOVED place whose current main source is deleted,
       // minus already-reviewed ids
       val none = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -141,6 +167,19 @@ class PlacesEngineSpec extends AnyFunSuite {
         spark.sparkContext.parallelize(Seq(Row(Seq("8FWV54", "ddd444")))),
         StructType(Seq(StructField("id", ArrayType(StringType)))))
       assert(engine.reviewClosedPlaces("2021-06-01", "2021-07-01", reviewed).count() == 0)
+    }
+  }
+
+  test("history: one scan of operations, one generator, no union") {
+    withSpark { spark =>
+      val engine = new PlacesEngine(
+        spark.createDataFrame(spark.sparkContext.parallelize(placeRows), placesSchema),
+        spark.createDataFrame(spark.sparkContext.parallelize(historyOpRows), opsSchema))
+      val plan = engine.history("2021-06-01", "2021-07-01").queryExecution.optimizedPlan
+      val nodes = plan.collect { case n => n.nodeName }
+      assert(nodes.count(_ == "Generate") == 1, plan.treeString)
+      assert(!nodes.contains("Union"), plan.treeString)
+      assert(plan.collectLeaves().size == 1, plan.treeString)
     }
   }
 
@@ -163,6 +202,29 @@ class PlacesEngineSpec extends AnyFunSuite {
         "9G225000,aaa111" -> ("ACTIVE", 1L),
         "9G2250,ccc333" -> ("DELETED", 1L),
         "8FWV54,ddd444" -> ("REMOVED", 1L)))
+    }
+  }
+
+  test("snapshotAt: tileid is the latest op's, whatever the row order") {
+    withSpark { spark =>
+      // the CREATED row carries created.tileid (9G2250), the later edit the
+      // id's first element (9G225000)
+      val ops = Seq(
+        Row(1L, 0, ts("2021-06-05T00:00:00Z"), "opr.place",
+          Seq(Row(Seq("9G225000", "aaa111"), "9G2250")), Seq.empty, Seq.empty),
+        Row(2L, 0, ts("2021-06-10T00:00:00Z"), "opr.place",
+          Seq.empty, Seq(Row(Seq("9G225000", "aaa111"), Map("images" -> "append"))),
+          Seq.empty))
+      Seq(ops, ops.reverse).foreach { rows =>
+        val engine = new PlacesEngine(
+          spark.createDataFrame(spark.sparkContext.parallelize(placeRows), placesSchema),
+          spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), opsSchema))
+        def tileAt(asOf: String) = engine.snapshotAt(asOf)
+          .select("tileid", "status", "n_ops").collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+        assert(tileAt("2021-06-07") == Seq(("9G2250", "ACTIVE", 1L)))
+        assert(tileAt("2021-06-30") == Seq(("9G225000", "ACTIVE", 2L)))
+      }
     }
   }
 

@@ -22,6 +22,16 @@ to the `op latencies` line):
                   curation signals used to run on, and one row per native
                   kernel of graft.functions.Native. A sample can fall in
                   more than one category, so the shares need not sum to 100%.
+  main thread     the main thread's samples as an operator table: one row
+                  per innermost `graft.` frame (the engine method the
+                  sample ran under; "(no graft frame)" for the benchmark's
+                  own code), one column per outermost Spark phase on the
+                  stack: eager (analysis while a Dataset API call builds
+                  its Dataset), analysis (any other), optimizer, planning
+                  (physical planning and AQE), closures (closure cleaning),
+                  encoders (encoder building), other (none of these: job
+                  submission, result handling, the benchmark's checks).
+                  Each sample counts once.
 """
 import argparse
 import importlib.util
@@ -85,7 +95,36 @@ CATEGORIES = [
     ("builtin: string split", ("org.apache.spark.unsafe.types.UTF8String.split",)),
 ]
 
+# Spark driver phases by the engine frames doing the work: a sample belongs
+# to the phase of its outermost matching frame, counting from the thread's
+# root, so AQE re-optimizing stays AQE and an encoder resolving itself stays
+# encoder building. Analysis is "eager" when a Dataset is being constructed
+# outside it: classic Datasets analyze their plan in the constructor.
+PHASES = [
+    ("analysis", ("org.apache.spark.sql.catalyst.analysis.Analyzer.",
+                  "org.apache.spark.sql.catalyst.analysis.CheckAnalysis")),
+    ("optimizer", ("QueryExecution.$anonfun$lazyOptimizedPlan",
+                   "org.apache.spark.sql.catalyst.optimizer.",
+                   "org.apache.spark.sql.execution.SparkOptimizer")),
+    ("planning", ("QueryExecution$.createSparkPlan", "QueryExecution$.prepareForExecution",
+                  "AdaptiveSparkPlanExec.reOptimize", "AdaptiveSparkPlanExec.createQueryStages",
+                  "AdaptiveSparkPlanExec.newQueryStage", "AdaptiveSparkPlanExec$.applyPhysicalRules",
+                  "org.apache.spark.sql.catalyst.planning.QueryPlanner.plan")),
+    ("closures", ("org.apache.spark.util.ClosureCleaner",
+                  "org.apache.spark.util.SparkClosureCleaner")),
+    ("encoders", ("org.apache.spark.sql.catalyst.encoders.",
+                  "org.apache.spark.sql.catalyst.ScalaReflection",
+                  "org.apache.spark.sql.catalyst.DeserializerBuildHelper",
+                  "org.apache.spark.sql.catalyst.SerializerBuildHelper")),
+]
+EAGER = ("eager", ("org.apache.spark.sql.classic.Dataset$.ofRows",
+                   "org.apache.spark.sql.classic.Dataset.<init>"))
+OTHER_PHASE = "other"
+MAIN_THREAD = "main"
+TOP_OPERATORS = 15
+
 FRAME = re.compile(r"^\s{4}(\S.*?)(?: line: \d+)?$")
+THREAD = re.compile(r'^\s*sampledThread = "(.*)" \(')
 START = re.compile(r"^\s*startTime = (\d\d):(\d\d):(\d\d)\.(\d+)")
 
 
@@ -129,29 +168,51 @@ def seconds_of_day(t):
     return lt.tm_hour * 3600 + lt.tm_min * 60 + lt.tm_sec + (t % 1)
 
 
+def phase_of(frames):
+    """The outermost Spark phase on a stack (frames innermost first)."""
+    for fr in reversed(frames):
+        for name, markers in PHASES:
+            if any(m in fr for m in markers):
+                if name == "analysis" and any(m in f for f in frames for m in EAGER[1]):
+                    return EAGER[0]
+                return name
+    return OTHER_PHASE
+
+
+def operator_of(frames):
+    """The innermost graft. frame, without its argument list."""
+    for fr in frames:
+        if fr.startswith("graft."):
+            return fr.split("(", 1)[0]
+    return "(no graft frame)"
+
+
 def samples(recording, window):
-    """Yields the frames of each execution sample taken inside `window`
-    (seconds of the local day, as `jfr print` renders start times)."""
+    """Yields (thread name, frames innermost first) of each execution sample
+    taken inside `window` (seconds of the local day, as `jfr print` renders
+    start times)."""
     lo, hi = window
     inside = (lambda s: lo <= s <= hi) if lo <= hi else (lambda s: s >= lo or s <= hi)
     proc = subprocess.Popen(["jfr", "print", "--events", "jdk.ExecutionSample",
                              "--stack-depth", "1024", recording],
                             stdout=subprocess.PIPE, text=True, bufsize=1 << 20)
-    frames, keep, in_stack = [], False, False
+    frames, thread, keep, in_stack = [], None, False, False
     for line in proc.stdout:
         if line.startswith("jdk.ExecutionSample"):
-            frames, keep, in_stack = [], False, False
+            frames, thread, keep, in_stack = [], None, False, False
         elif in_stack:
             if line.startswith("  ]"):
                 in_stack = False
                 if keep:
-                    yield frames
+                    yield thread, frames
             else:
                 m = FRAME.match(line)
                 if m:
                     frames.append(m.group(1))
         elif line.startswith("  stackTrace = ["):
             in_stack = True
+        elif THREAD.match(line):
+            thread = THREAD.match(line).group(1)
         else:
             m = START.match(line)
             if m:
@@ -159,6 +220,26 @@ def samples(recording, window):
                 keep = inside(int(h) * 3600 + int(mi) * 60 + int(s) + float("0." + frac))
     if proc.wait() != 0:
         sys.exit(f"cpu_profile: jfr print exited with {proc.returncode}")
+
+
+def print_operator_table(table):
+    """Main-thread samples: innermost graft. frame x outermost Spark phase,
+    the TOP_OPERATORS busiest rows and the rest summed."""
+    phases = [EAGER[0]] + [name for name, _ in PHASES] + [OTHER_PHASE]
+    width = max(len(p) for p in phases) + 2
+    rows = sorted(table, key=lambda op: -sum(table[op].values()))
+    shown, rest = rows[:TOP_OPERATORS], rows[TOP_OPERATORS:]
+    merged = {}
+    for op in rest:
+        for ph, n in table[op].items():
+            merged[ph] = merged.get(ph, 0) + n
+    body = [(op, table[op]) for op in shown] + ([(f"({len(rest)} more)", merged)] if rest else [])
+    totals = {ph: sum(r.get(ph, 0) for r in table.values()) for ph in phases}
+    print(f"  main thread: {sum(totals.values())} samples by innermost graft. frame and outermost Spark phase")
+    print(f"    {'operator':<56}" + "".join(f"{p:>{width}}" for p in phases) + f"{'all':>{width}}")
+    for op, row in body + [("all", totals)]:
+        print(f"    {op[-56:]:<56}" + "".join(f"{row.get(p, 0):>{width}}" for p in phases) +
+              f"{sum(row.values()):>{width}}")
 
 
 def main():
@@ -206,11 +287,16 @@ def main():
         kernels = native_kernels()
         cats = CATEGORIES + [(f"native: {k}", (f"graft.functions.{k}.", f"graft.functions.{k}$"))
                              for k in kernels]
-        for frames in samples(recording, tuple(seconds_of_day(t) for t in marks)):
+        table = {}
+        for thread, frames in samples(recording, tuple(seconds_of_day(t) for t in marks)):
             total += 1
             for name, markers in cats:
                 if any(m in fr for fr in frames for m in markers):
                     counts[name] = counts.get(name, 0) + 1
+            if thread == MAIN_THREAD:
+                row = table.setdefault(operator_of(frames), {})
+                ph = phase_of(frames)
+                row[ph] = row.get(ph, 0) + 1
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -229,6 +315,7 @@ def main():
     for name, _ in cats:
         n = counts.get(name, 0)
         print(f"    {name:<30} {100.0 * n / max(total, 1):>6.1f}%  ({n})")
+    print_operator_table(table)
     if result is not None:
         print(f"  correct {result['correct']}, failed {result['failed']}")
     sys.exit(0 if result is not None and result["correct"] else 1)
