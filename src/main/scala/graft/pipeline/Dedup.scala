@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Native
+import graft.util.Checkpoints
 
 /** Document deduplication operators for large-scale corpus curation:
   * exact (hash groupBy), n-gram Jaccard verify, MinHash+LSH candidate
@@ -19,6 +20,14 @@ import graft.functions.Native
   *   - Jaccard verification is bounded to LSH/bucket candidates — the
   *     all-pairs form here is for oracle checking at test scale and takes
   *     an explicit bucket column to keep the join co-partitioned.
+  *
+  * The banded near-duplicate family — MinHash, SimHash, and through
+  * [[Multimodal]] the image, audio and video fingerprints — shares three
+  * pieces: [[collapse]] (identical keys to one representative),
+  * [[repBandCandidates]] (the one band self-join) and [[expandMembers]]
+  * (verified representative pairs back to member pairs). Hamming
+  * fingerprints are `BIGINT` words ([[hammingPairs]], [[hammingEdges]],
+  * [[resolveHamming]]), verified by `bit_count(a ^ b)`.
   */
 object Dedup {
 
@@ -435,24 +444,21 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate pairs, verified with exact n-gram Jaccard.
     * numHashes must be divisible by bandRows. Pipeline:
-    * shingle → signature (map-only) → exact-equal collapse → band explode
-    * → bucket join on band key (plus each multi-member representative
-    * paired with itself) → distinct candidate pairs → Jaccard verify
-    * against re-joined shingle sets → member expansion. Only (id,
-    * band_key) and (id, grams-of-candidates) shuffle. Hashing is
-    * [[PortableHash]] (mod-1e9+7 integer math), so the DuckDB oracle
-    * reproduces signatures and band keys exactly. */
+    * shingle → signature (map-only) → exact-equal [[collapse]] → band
+    * explode → [[repBandCandidates]] → distinct candidate pairs → Jaccard
+    * verify against the representatives' shingle sets →
+    * [[expandMembers]]. Only (id, band_key) and (id,
+    * grams-of-candidates) shuffle. Hashing is [[PortableHash]]
+    * (mod-1e9+7 integer math), so the DuckDB oracle reproduces
+    * signatures and band keys exactly. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int, numHashes: Int, bandRows: Int,
                       minSim: Double): DataFrame = {
     require(numHashes % bandRows == 0, "numHashes must divide into bands")
-    // exact-equal collapse BEFORE banding (the round-11 hot-bucket fix):
-    // documents with identical distinct-gram sets — byte-identical texts,
-    // trivially — band once through a representative, so an m-item
-    // identical cluster contributes ONE signature per band bucket instead
-    // of m (candidate generation O(m), never m²/2 before any verify).
-    // Jaccard depends only on the gram set, so every member pair inherits
-    // its representatives' verified similarity EXACTLY, and same-set pairs
+    // exact-equal collapse BEFORE banding: documents with identical
+    // distinct-gram sets band once through a representative. Jaccard
+    // depends only on the gram set, so every member pair inherits its
+    // representatives' verified similarity EXACTLY, and same-set pairs
     // are Jaccard 1 by definition — the expanded pair list is
     // bit-identical to the uncollapsed one.
     //
@@ -461,8 +467,7 @@ object Dedup {
     // cache: the pair plan below scans one LogicalRDD per leg instead of
     // re-planning (and re-printing, on every AQE update) the collapse's
     // full cached plan at each of the four references.
-    val reps = gramSetReps(
-        minhashSignatures(df, idCol, textCol, n, numHashes, bandRows))
+    val reps = minhashReps(df, idCol, textCol, n, numHashes, bandRows)
       .localCheckpoint(true)
     // both verify sides must plan alike for the second to reuse the
     // first's broadcast: state the non-empty-members filter the explode
@@ -471,9 +476,6 @@ object Dedup {
       .select(col("id").as(s"${p}_id"),
         col("hgrams").as(s"${p}_grams"), col("sz").as(s"${p}_sz"),
         col("members").as(s"${p}_members"))
-    // a set's own pairs come through the same verify: a representative
-    // with co-members is its own candidate, and its Jaccard with itself
-    // is exactly 1
     val repPairs = repBandCandidates(reps)
       .join(side("a"), "a_id")
       .join(side("b"), "b_id")
@@ -484,25 +486,10 @@ object Dedup {
         round(col("inter") / (col("a_sz") + col("b_sz") - col("inter")), 6)
           .as("jaccard"))
       .where(col("jaccard") >= minSim)
-    // expansion without joins: the member arrays rode through the verify
-    // joins, so a verified rep pair explodes into its a-members × b-members
-    // (least/greatest restores a_id < b_id — the sets are disjoint), and a
-    // set's own pairs are the i < j slices of its sorted member array.
-    // Eager materialization of the (narrow) pair list so the collapse can
-    // be freed here instead of accumulating across invocations (the
-    // Multimodal convention)
-    val pairs = repPairs
-      .select(col("self"), posexplode(col("a_members")).as(Seq("i", "ma")),
-        col("b_members"), col("jaccard"))
-      .select(col("ma"),
-        explode(when(col("self"), slice(col("b_members"), col("i") + 2,
-          size(col("b_members")) - col("i") - 1)).otherwise(col("b_members")))
-          .as("mb"),
-        col("jaccard"))
-      .select(least(col("ma"), col("mb")).as("a_id"),
-        greatest(col("ma"), col("mb")).as("b_id"), col("jaccard"))
-      .localCheckpoint(true)
-    graft.util.Checkpoints.free(reps)
+    // eager materialization of the (narrow) pair list so the collapse can
+    // be freed here instead of accumulating across invocations
+    val pairs = expandMembers(repPairs, col("jaccard")).localCheckpoint(true)
+    Checkpoints.free(reps)
     pairs
   }
 
@@ -532,17 +519,66 @@ object Dedup {
       .withColumn("sz", size(col("hgrams")))
   }
 
-  /** The exact-equal collapse: ONE `groupBy` on the gram set itself emits
-    * each distinct set's ascending member ids; the representative is the
-    * smallest. Band keys are a function of the gram set, so they group
-    * along with it and the representative needs no `min_by` row: the
-    * aggregate holds only `collect_list(id)`, which keeps Spark's object
-    * aggregate to its fewest generated classes.
+  /** The exact-equal collapse of the near-duplicate family: ONE `groupBy`
+    * on `keys` emits each distinct key tuple's member ids, ascending, with
+    * the smallest as its representative — (id, keys…, members), the
+    * representative named `id`. The aggregate holds only
+    * `collect_list(id)`, which keeps Spark's object aggregate to its
+    * fewest generated classes; anything else a caller needs per
+    * representative must be a function of the keys and group along.
     *
     * Skew: a hot identical group's ids land in one array built by one
-    * task — the same bound as the membership window this replaced, which
-    * put the whole group in one window partition; only the representative
-    * row ever reaches the band join.
+    * task; only its representative row ever reaches a band join, so an
+    * m-member cluster costs O(m) there instead of m²/2 candidates. */
+  private[graft] def collapse(df: DataFrame, id: String, keys: Column*): DataFrame = {
+    val groups = df.groupBy(keys: _*)
+      .agg(sort_array(collect_list(col(id))).as("members"))
+    groups.select(element_at(col("members"), 1).as(id) +: groups.columns.toSeq.map(col): _*)
+  }
+
+  /** Member expansion of verified representative pairs, without joins.
+    * `repPairs` carries `self` (a representative paired with itself),
+    * `a_members`, `b_members` and whatever `out` reads; `out` may also
+    * read the member ids `ma` and `mb`. A cross pair explodes into its
+    * a-members × b-members (least/greatest restores a_id < b_id — the
+    * member sets are disjoint), a self pair into the i < j slices of its
+    * ascending member array. Returns (a_id, b_id, out…). */
+  private[graft] def expandMembers(repPairs: DataFrame, out: Column*): DataFrame = {
+    val carried = repPairs.columns.toSeq
+      .filterNot(Set("self", "a_members", "b_members")).map(col)
+    repPairs
+      .select(Seq(col("self"), posexplode(col("a_members")).as(Seq("i", "ma")),
+        col("b_members")) ++ carried: _*)
+      .select(Seq(col("ma"),
+        explode(when(col("self"), slice(col("b_members"), col("i") + 2,
+          size(col("b_members")) - col("i") - 1)).otherwise(col("b_members")))
+          .as("mb")) ++ carried: _*)
+      .select(Seq(least(col("ma"), col("mb")).as("a_id"),
+        greatest(col("ma"), col("mb")).as("b_id")) ++ out: _*)
+  }
+
+  /** The rep-level band self-join of the near-duplicate family: (a_id,
+    * b_id) pairs of representatives sharing at least one key of their
+    * `bands` array, a_id < b_id, plus (r, r) for every representative with
+    * more than one member, so that group's own pairs ride the same verify
+    * and [[expandMembers]]. A band key may be any equi-joinable value.
+    * Each `carry` column c of `reps` rides along as a_c and b_c, so a
+    * verify that needs only per-representative values joins nothing
+    * back. */
+  private[graft] def repBandCandidates(reps: DataFrame, carry: String*): DataFrame = {
+    val banded = reps.select(Seq(col("id"), explode(col("bands")).as("band_key"),
+      (size(col("members")) > 1).as("multi")) ++ carry.map(col): _*)
+    banded.as("a").join(banded.as("b"), col("a.band_key") === col("b.band_key") &&
+        (col("a.id") < col("b.id") || (col("a.id") === col("b.id") && col("a.multi"))))
+      .select(Seq(col("a.id").as("a_id"), col("b.id").as("b_id")) ++
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"a_$c"), col(s"b.$c").as(s"b_$c"))): _*)
+      .distinct()
+  }
+
+  /** [[minhashLshPairs]]' collapse: one representative row (id, hgrams,
+    * bands, sz, members) per DISTINCT non-empty gram set in `df`, plus one
+    * singleton row per gram-less document. Band keys are a function of
+    * the gram set, so they group along with it.
     *
     * Gram-less documents group by their own id (`lone`) and stay
     * singleton rows with `sz` 0: they have no band keys and no co-members,
@@ -550,61 +586,99 @@ object Dedup {
     * on the grouping keys would be pushed below the aggregate and through
     * the repartition into the parquet scan, running the shingling kernel
     * there, serially (measured 14 s of p3's 21 s at sf0.1). */
-  private def gramSetReps(sigs: DataFrame): DataFrame =
-    sigs.groupBy(col("hgrams"), col("bands"),
-        when(col("sz") > 0, lit(null)).otherwise(col("id")).as("lone"))
-      .agg(sort_array(collect_list(col("id"))).as("members"))
-      .select(element_at(col("members"), 1).as("id"), col("hgrams"),
-        col("bands"), size(col("hgrams")).as("sz"), col("members"))
-
-  /** The rep-level LSH band self-join [[minhashLshPairs]] verifies:
-    * (a_id, b_id) pairs of representatives sharing at least one band key,
-    * a_id < b_id, plus (r, r) for every representative with more than one
-    * member, so that set's own pairs ride the same verify and expansion.
-    * Package-visible so the hot-bucket fixture can count-assert that an
-    * m-item exact-duplicate cluster — ONE representative after the
-    * collapse — generates one rep-level candidate instead of m²/2. */
-  private[graft] def repBandCandidates(reps: DataFrame): DataFrame = {
-    val banded = reps.select(col("id"), explode(col("bands")).as("band_key"),
-      (size(col("members")) > 1).as("multi"))
-    banded.as("a").join(banded.as("b"), col("a.band_key") === col("b.band_key") &&
-        (col("a.id") < col("b.id") || (col("a.id") === col("b.id") && col("a.multi"))))
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"))
-      .distinct()
-  }
-
-  /** [[minhashLshPairs]]'s collapse front end, exposed for the hot-bucket
-    * fixture: one representative row (id, hgrams, bands, sz, members) per
-    * DISTINCT non-empty gram set in `df`, members ascending, id = the
-    * smallest, plus one singleton row per gram-less document. */
   private[graft] def minhashReps(df: DataFrame, idCol: String,
                                  textCol: String, n: Int, numHashes: Int,
                                  bandRows: Int): DataFrame =
-    gramSetReps(minhashSignatures(df, idCol, textCol, n, numHashes, bandRows))
+    collapse(minhashSignatures(df, idCol, textCol, n, numHashes, bandRows),
+        "id", col("hgrams"), col("bands"),
+        when(col("sz") > 0, lit(null)).otherwise(col("id")).as("lone"))
+      .select(col("id"), col("hgrams"), col("bands"),
+        size(col("hgrams")).as("sz"), col("members"))
 
-  /** SimHash near-dup pairs with Hamming distance <= maxDist, blocked by
-    * 15-bit signature chunks (a pair within distance d <= 3 shares at least
-    * one of 4 chunks exactly — pigeonhole), so no all-pairs comparison.
-    * The 60-bit signature is [[PortableHash.simhash60]], reproducible by
-    * the DuckDB oracle. */
+  /** The 4 band keys of an `nBits`-bit fingerprint word: band b holds bits
+    * [b·w, (b+1)·w), w = nBits/4, cut with an unsigned shift, and b is
+    * folded in above them so equal values of different bands never meet.
+    * Pigeonhole: ≤ 3 flipped bits leave ≥ 1 of the 4 bands intact. */
+  private[graft] def hammingBandKeys(fp: Column, nBits: Int): Seq[Column] = {
+    require(nBits > 0 && nBits <= 64 && nBits % 4 == 0, s"nBits=$nBits")
+    val w = nBits / 4
+    (0 until 4).map(b => shiftrightunsigned(fp, b * w)
+      .bitwiseAND(lit((1L << w) - 1)).bitwiseOR(lit(b.toLong << w)))
+  }
+
+  /** Representatives of the DISTINCT fingerprints among (id, fp BIGINT)
+    * rows — (id, fp, members, bands), the [[collapse]] plus the
+    * [[hammingBandKeys]] — so an m-item cluster of identical fingerprints
+    * occupies each band bucket once. */
+  private[graft] def hammingReps(fps: DataFrame, nBits: Int): DataFrame =
+    collapse(fps, "id", col("fp"))
+      .withColumn("bands", array(hammingBandKeys(col("fp"), nBits): _*))
+
+  /** [[hammingReps]] pairs from [[repBandCandidates]], verified by
+    * `bit_count(a ^ b)` on the words: (self, a_members, b_members,
+    * hamming) at distance ≤ maxDist. Recall is guaranteed for
+    * maxDist ≤ 3 (4 bands). */
+  private def hammingRepPairs(reps: DataFrame, maxDist: Int): DataFrame = {
+    require(maxDist <= 3, "4-band blocking guarantees recall only for dist<=3")
+    repBandCandidates(reps, "fp", "members")
+      .select((col("a_id") === col("b_id")).as("self"), col("a_members"),
+        col("b_members"), bit_count(col("a_fp").bitwiseXOR(col("b_fp"))).as("hamming"))
+      .where(col("hamming") <= maxDist)
+  }
+
+  /** Banded-Hamming near-duplicate pairs over (id, fp) rows whose `fp`
+    * is an `nBits`-bit word: every pair at distance ≤ maxDist, as
+    * (a_id, b_id, hamming) with a_id < b_id. Never all-pairs: only
+    * representatives' (id, band key) rows join, and identical
+    * fingerprints pair through [[expandMembers]]. Lazy, and holds no
+    * storage. */
+  private[graft] def hammingPairs(fps: DataFrame, nBits: Int,
+                                  maxDist: Int): DataFrame =
+    expandMembers(hammingRepPairs(hammingReps(fps, nBits), maxDist), col("hamming"))
+
+  /** Spanning edges (a_id, b_id) of the near-duplicate graph over
+    * [[hammingReps]]: verified representative pairs plus star edges
+    * representative → member inside each identical group (O(m) for an
+    * m-item cluster, never its m²/2 clique). Components over these edges
+    * equal components over the full pair list: members connect through
+    * their representative, and any cross-group member pair has exactly
+    * its representatives' distance. */
+  private[graft] def hammingEdges(reps: DataFrame, maxDist: Int): DataFrame =
+    hammingRepPairs(reps, maxDist)
+      .select(element_at(col("a_members"), 1).as("a_id"),
+        explode(when(col("self"),
+            slice(col("a_members"), lit(2), size(col("a_members")) - 1))
+          .otherwise(slice(col("b_members"), 1, 1))).as("b_id"))
+
+  /** Keep-verdict (doc_id, cluster_id, keep) for every (id, fp) row:
+    * [[hammingEdges]] composed with [[resolveByComponents]]. Eagerly
+    * materialized; the collapse and the component labels are freed
+    * before returning. */
+  private[graft] def resolveHamming(fps: DataFrame, nBits: Int,
+                                    maxDist: Int): DataFrame = {
+    val reps = hammingReps(fps, nBits).localCheckpoint(true)
+    val verdict = resolveByComponents(
+      reps.select(explode(col("members")).as("doc_id")), "doc_id",
+      hammingEdges(reps, maxDist))
+    val out = verdict.localCheckpoint(true)
+    Checkpoints.free(verdict)
+    out
+  }
+
+  /** SimHash near-dup pairs with Hamming distance <= maxDist, through
+    * [[hammingPairs]]: 4 bands of 15 bits over the 60-bit
+    * [[PortableHash.simhash60]] signature, reproducible by the DuckDB
+    * oracle, with identical signatures collapsed before banding. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int): DataFrame = {
-    require(maxDist <= 3, "4-chunk blocking guarantees recall only for dist<=3")
+                   maxDist: Int): DataFrame =
+    hammingPairs(simhashes(df, idCol, textCol), nBits = 60, maxDist)
+
+  /** (id, fp) rows of 60-bit SimHash signatures over space-split words. */
+  private[graft] def simhashes(df: DataFrame, idCol: String,
+                               textCol: String): DataFrame = {
     val shUdf = udf((text: String) =>
       PortableHash.simhash60(text.split(" ").filter(_.nonEmpty).toSeq))
-    val g = df.select(col(idCol).as("id"), shUdf(col(textCol)).as("sh"))
-    val chunked = g.select(col("id"), col("sh"),
-      explode(array((0 until 4).map(c =>
-        struct(lit(c).as("c"), shiftrightunsigned(col("sh"), c * 15).bitwiseAND(0x7FFFL).as("v"))): _*))
-        .as("chunk"))
-    chunked.as("a").join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
-        col("a.sh").as("a_sh"), col("b.sh").as("b_sh"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("a_sh").bitwiseXOR(col("b_sh"))))
-      .where(col("hamming") <= maxDist)
-      .select("a_id", "b_id", "hamming")
+    df.select(col(idCol).as("id"), shUdf(col(textCol)).as("fp"))
   }
 
   /** Duplicated-span scrub (the RefinedWeb/C4 "remove repeated lines"
@@ -963,16 +1037,6 @@ object Dedup {
         frac.as("contaminated_frac"), (frac >= minFrac).as("flagged")) ++ carried: _*)
   }
 
-  /** Dedup resolution: near-dup PAIRS (from any of the generators above)
-    * become duplicate CLUSTERS via connected components, and each cluster
-    * keeps exactly one representative — the minimum doc id (swap in a
-    * quality-ranked min by re-keying ids if curation wants "best", not
-    * "first"). Returns every corpus doc with its cluster and keep flag, so
-    * the keep-list is `where(keep)`.
-    *
-    * Transitivity is the point: A≈B and B≈C dedup {A,B,C} to one doc even
-    * when A,C were never compared (LSH won't compare every pair at scale).
-    */
   /** Sorted-neighborhood blocking (Hernández–Stolfo SNM): sort the corpus
     * by a cheap blocking key, slide a window of `w` records, and emit
     * every in-window pair as a dedup candidate — the classic complement
@@ -1031,6 +1095,19 @@ object Dedup {
         (col("b_rn") - col("a_rn")).cast("int").as("rank_dist"))
   }
 
+  /** Dedup resolution: near-dup PAIRS (from any of the generators above)
+    * become duplicate CLUSTERS via connected components, and each cluster
+    * keeps exactly one representative — the minimum doc id (swap in a
+    * quality-ranked min by re-keying ids if curation wants "best", not
+    * "first"). Returns every corpus doc with its cluster and keep flag, so
+    * the keep-list is `where(keep)`.
+    *
+    * Transitivity is the point: A≈B and B≈C dedup {A,B,C} to one doc even
+    * when A,C were never compared (LSH won't compare every pair at scale).
+    *
+    * The result reads the [[graft.geo.ConnectedComponents.label]]
+    * checkpoint: consume it, then `graft.util.Checkpoints.free(result)`.
+    */
   def resolveByComponents(corpus: DataFrame, idCol: String,
                           pairs: DataFrame): DataFrame = {
     val labels = graft.geo.ConnectedComponents.label(

@@ -7,6 +7,8 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints
+
 /** Multimodal column handling: media payloads travel as opaque `binary`
   * columns next to a typed metadata struct; decode / feature-extraction /
   * frame-sampling run per-partition so one task amortizes decoder setup
@@ -18,6 +20,12 @@ import org.apache.spark.sql.functions._
   * operation. Partition sizing is the reader's maxPartitionBytes concern,
   * not this operator's. Integer features (sums of squares, pixel sums) are
   * exact, so results are partitioning- and platform-independent.
+  *
+  * Near-duplicate matching works on fingerprints as `BIGINT` words: hex
+  * fingerprints convert once per row ([[hexWords]]), video frames come
+  * out of the decoder as words, and pairs, resolves and both video
+  * operators run on [[Dedup]]'s shared collapse, band self-join and
+  * member expansion. Public outputs keep their hex columns.
   */
 object Multimodal {
 
@@ -255,6 +263,30 @@ object Multimodal {
 
   case class DhashRow(doc_id: Long, w: Int, h: Int, dhash: String)
 
+  /** The 64-bit dHash of one decoded image as a word: byte y is row y
+    * (bit x = g[x+1][y] > g[x][y]), most significant first, so its
+    * 16-hex-char rendering ([[dhashOf]]) reads the rows in order. */
+  private def dhashWord(img: BufferedImage): Long = {
+    val raster = img.getRaster
+    val (w, h) = (img.getWidth, img.getHeight)
+    val g = Array.tabulate(9, 8)((x, y) =>
+      raster.getSample(x * w / 9, y * h / 8, 0))
+    var word = 0L
+    var y = 0
+    while (y < 8) {
+      var b = 0
+      var x = 0
+      while (x < 8) { if (g(x + 1)(y) > g(x)(y)) b |= 1 << x; x += 1 }
+      word = (word << 8) | b
+      y += 1
+    }
+    word
+  }
+
+  /** [[dhashWord]] as 16 hex chars — shared by [[imageDhash]] and the
+    * sequence fingerprint. */
+  private def dhashOf(img: BufferedImage): String = f"${dhashWord(img)}%016x"
+
   /** Perceptual difference-hash (dHash) of grayscale PNGs — the standard
     * image near-dup fingerprint: nearest-neighbor downsample to a 9×8
     * grid, one bit per horizontally-adjacent pair (left < right), 64
@@ -268,25 +300,6 @@ object Multimodal {
     *
     * Scale shape: mapPartitions decode — payloads never shuffle, only
     * (doc_id, w, h, 16-char hash) rows leave the task. */
-  /** The 64-bit dHash of one decoded image as 16 hex chars — shared by
-    * [[imageDhash]] and the per-frame video fingerprint. */
-  private def dhashOf(img: BufferedImage): String = {
-    val raster = img.getRaster
-    val (w, h) = (img.getWidth, img.getHeight)
-    val g = Array.tabulate(9, 8)((x, y) =>
-      raster.getSample(x * w / 9, y * h / 8, 0))
-    val sb = new StringBuilder
-    var y = 0
-    while (y < 8) {
-      var b = 0
-      var x = 0
-      while (x < 8) { if (g(x + 1)(y) > g(x)(y)) b |= 1 << x; x += 1 }
-      sb.append(f"$b%02x")
-      y += 1
-    }
-    sb.toString
-  }
-
   def imageDhash(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
@@ -359,184 +372,70 @@ object Multimodal {
       }.toDF()
   }
 
-  /** Banded near-dup candidate pairs over [[imageDhash]] hashes — the
+  /** Hex fingerprints as machine words, once per row: (id, fp BIGINT)
+    * from (doc_id, `hashCol`). `conv(hex, 16, -10)` keeps all 64 bits
+    * (ffffffffffffffff → −1), and reading the hex big-endian leaves every
+    * Hamming distance unchanged. */
+  private[graft] def hexWords(hashes: DataFrame, hashCol: String): DataFrame =
+    hashes.select(col("doc_id").as("id"),
+      conv(col(hashCol), 16, -10).cast("long").as("fp"))
+
+  /** Banded near-dup pairs over [[imageDhash]] hashes — the
     * [[graft.pipeline.Dedup.simhashPairs]] discipline on the image
-    * fingerprint: the 64-bit hash splits into 4 bands of 16 bits
-    * (4 hex chars), candidates share at least one band, verification is
-    * the exact per-byte Hamming distance. Pigeonhole: ≤ 3 flipped bits
-    * leave ≥ 1 of 4 bands intact, so recall is GUARANTEED for
-    * `maxDist` ≤ 3 (hence the same require as simhashPairs). Never
-    * all-pairs: only (doc_id, band) rows join, bounded by band-bucket
-    * occupancy. */
+    * fingerprint, through [[graft.pipeline.Dedup.hammingPairs]]: the
+    * 64-bit word splits into 4 bands of 16 bits, candidates share at
+    * least one band, verification is `bit_count(a ^ b)`. Pigeonhole:
+    * ≤ 3 flipped bits leave ≥ 1 of 4 bands intact, so recall is
+    * GUARANTEED for `maxDist` ≤ 3 (hence the same require as
+    * simhashPairs). Identical hashes collapse to one representative
+    * before banding, so a corpus-sized cluster of all-black thumbnails
+    * never makes candidate generation quadratic. Returns
+    * (a_id, b_id, hamming). */
   def dhashNearDupPairs(hashes: DataFrame, maxDist: Int): DataFrame =
-    bandedHexPairs(hashes, "dhash", nBytes = 8, maxDist = maxDist)
+    Dedup.hammingPairs(hexWords(hashes, "dhash"), nBits = 64, maxDist)
 
-  /** The shared 4-band Hamming blocking over an `nBytes`-byte hex
-    * fingerprint column (2·nBytes hex chars): candidates share at least
-    * one of 4 equal-width bands, verification is the exact per-byte
-    * Hamming distance. Pigeonhole: ≤ 3 flipped bits leave ≥ 1 of 4
-    * bands intact, so recall is GUARANTEED for `maxDist` ≤ 3. Never
-    * all-pairs: only (doc_id, band) rows join, bounded by band-bucket
-    * occupancy. Used by the image ([[dhashNearDupPairs]], 8 bytes) and
-    * audio ([[audioNearDupPairs]], 4 bytes) fingerprints. */
-  /** Exact per-byte Hamming distance between two hex-string columns of
-    * `nBytes` bytes. */
-  private def hexHamming(a: org.apache.spark.sql.Column,
-                         b: org.apache.spark.sql.Column,
-                         nBytes: Int): org.apache.spark.sql.Column =
-    (0 until nBytes).map(i =>
-      bit_count(conv(substring(a, i * 2 + 1, 2), 16, 10).cast("long")
-        .bitwiseXOR(conv(substring(b, i * 2 + 1, 2), 16, 10).cast("long"))))
-      .reduce(_ + _)
-
-  /** Member → representative assignment for the exact-equal collapse:
-    * one window over the fingerprint assigns each doc the min doc id of
-    * its identical-hash group (the round-12 shape shared with the video
-    * family — the former groupBy(hash) + join-back shuffled the hex
-    * strings twice more, and every member-pair join downstream now
-    * compares 8-byte rep ids instead of 2·nBytes-char strings). */
-  private def hashReps(hashes: DataFrame, hashCol: String): DataFrame =
-    hashes.select(col("doc_id"), col(hashCol).as("hash"))
-      .withColumn("rep_id", min("doc_id").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("hash")))
-
-  /** Verified near-dup pairs over DISTINCT fingerprints — the banded
-    * self-join runs on one row per unique hash (its representative), so
-    * an m-item cluster of identical fingerprints occupies each band
-    * bucket ONCE instead of m times (the round-11 hot-bucket fix: a
-    * corpus-sized cluster of all-black thumbnails no longer makes
-    * candidate generation quadratic). Takes (doc_id = rep id, hash) rows,
-    * returns (a_id, b_id, hamming) of representative pairs. */
-  private def bandedRepPairs(reps: DataFrame,
-                             nBytes: Int, maxDist: Int): DataFrame = {
-    val bandHex = nBytes / 2 // hex chars per band
-    val banded = reps.select(col("doc_id"), col("hash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("b"),
-          substring(col("hash"), b * bandHex + 1, bandHex).as("v"))): _*))
-        .as("band"))
-    // equal ids carry equal hashes, so the hash columns ride through the
-    // id-keyed distinct and the Hamming verify needs no join-back
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("a.hash").as("a_hash"), col("b.hash").as("b_hash"))
-      .distinct()
-      .withColumn("hamming",
-        hexHamming(col("a_hash"), col("b_hash"), nBytes).cast("int"))
-      .where(col("hamming") <= maxDist)
-      .select("a_id", "b_id", "hamming")
+  /** [[audioFingerprint]] as one word per clip: 32 bits (33 windows) or
+    * 64 bits (65 windows), the widths that split into 4 whole-byte bands
+    * of one word. */
+  private def audioWords(media: DataFrame, nWindows: Int): DataFrame = {
+    require(nWindows == 33 || nWindows == 65,
+      s"nWindows=$nWindows: audio near-dup needs one 32- or 64-bit word, nWindows 33 or 65")
+    hexWords(audioFingerprint(media, nWindows), "fingerprint")
   }
 
-  private def bandedHexPairs(hashes: DataFrame, hashCol: String,
-                             nBytes: Int, maxDist: Int): DataFrame = {
-    require(maxDist <= 3, "4-band blocking guarantees recall only for dist<=3")
-    require(nBytes % 4 == 0, s"nBytes=$nBytes must split into 4 byte bands")
-    // several readers below (rep filter, both expansion joins) —
-    // persisted here, freed after the eager materialization of the result
-    val memb = hashReps(hashes, hashCol).persist()
-    val repPairs = bandedRepPairs(
-      memb.where(col("doc_id") === col("rep_id")), nBytes, maxDist)
-    // within-group pairs (hamming 0) — bounded by the OUTPUT pair list,
-    // which is inherently quadratic in cluster size for pair semantics
-    val within = memb.as("a").join(memb.as("b"),
-        col("a.rep_id") === col("b.rep_id") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        lit(0).as("hamming"))
-    // cross-group pairs inherit their representatives' verified distance
-    // exactly (equal fingerprints per group)
-    val cross = repPairs
-      .join(memb.select(col("rep_id").as("a_id"), col("doc_id").as("ma")),
-        "a_id")
-      .join(memb.select(col("rep_id").as("b_id"), col("doc_id").as("mb")),
-        "b_id")
-      .select(least(col("ma"), col("mb")).as("a_id"),
-        greatest(col("ma"), col("mb")).as("b_id"), col("hamming"))
-    // eager materialization so the working set can be freed here instead
-    // of accumulating in the session cache across invocations
-    val out = within.unionByName(cross).localCheckpoint(true)
-    memb.unpersist()
-    out
-  }
-
-  /** Linear spanning EDGE set for the keep-verdict consumers
-    * ([[resolveImageNearDups]]/[[resolveAudioNearDups]]): star edges
-    * representative→member inside each exact-equal fingerprint group
-    * (O(m) for an m-item identical cluster — never the m²/2 clique the
-    * pair list is), plus verified near-dup pairs between DISTINCT
-    * fingerprints' representatives. Connected components over these edges
-    * equal components over the full pair list: equal-fingerprint members
-    * connect through their representative, and any cross-group member
-    * pair has exactly its representatives' Hamming distance. */
-  private[graft] def bandedHexEdges(hashes: DataFrame, hashCol: String,
-                                    nBytes: Int, maxDist: Int): DataFrame = {
-    require(maxDist <= 3, "4-band blocking guarantees recall only for dist<=3")
-    require(nBytes % 4 == 0, s"nBytes=$nBytes must split into 4 byte bands")
-    val memb = hashReps(hashes, hashCol)
-    val star = memb.where(col("doc_id") =!= col("rep_id"))
-      .select(col("rep_id").as("a_id"), col("doc_id").as("b_id"))
-    val repPairs = bandedRepPairs(
-        memb.where(col("doc_id") === col("rep_id")), nBytes, maxDist)
-      .select("a_id", "b_id")
-    star.unionByName(repPairs)
-  }
-
-  /** Banded near-dup candidate pairs over [[audioFingerprint]] outputs —
-    * the [[dhashNearDupPairs]] machinery on the delta-energy audio
-    * fingerprint (which previously only got EXACT-equal grouping): the
-    * (nWindows−1)-bit fingerprint splits into 4 byte-aligned bands, so a
+  /** Banded near-dup pairs over [[audioFingerprint]] outputs — the
+    * [[dhashNearDupPairs]] machinery on the delta-energy audio
+    * fingerprint: the (nWindows−1)-bit word splits into 4 bands, so a
     * clip whose perturbation flips ≤ 3 delta bits (a localized edit
     * touches one window → ≤ 2 adjacent bits) is still guaranteed a
-    * candidate band. Requires nWindows−1 divisible by 32 so the bands
-    * are whole equal bytes. Band-width picks bucket count — the
-    * quadratic-occupancy knob at corpus scale: prefer 65 windows
-    * (64 bits → 4×16-bit bands, 65k buckets/band — the [[imageDhash]]
-    * shape) whenever clips have ≥ 65 samples; 33 (1-byte bands, 256
-    * buckets) only for very short clips. */
+    * candidate band. `nWindows` is 33 or 65. Band width picks bucket
+    * count — the quadratic-occupancy knob at corpus scale: prefer 65
+    * windows (64 bits → 4×16-bit bands, 65k buckets/band — the
+    * [[imageDhash]] shape) whenever clips have ≥ 65 samples; 33 (1-byte
+    * bands, 256 buckets) only for very short clips. */
   def audioNearDupPairs(media: DataFrame, nWindows: Int,
-                        maxDist: Int): DataFrame = {
-    require((nWindows - 1) % 32 == 0,
-      s"nWindows=$nWindows: need (nWindows-1) divisible by 32 for 4 whole-byte bands")
-    audioFingerprint(media, nWindows)
-      .select(col("doc_id"), col("fingerprint"))
-      .transform(bandedHexPairs(_, "fingerprint", (nWindows - 1) / 8, maxDist))
-  }
+                        maxDist: Int): DataFrame =
+    Dedup.hammingPairs(audioWords(media, nWindows), nWindows - 1, maxDist)
 
   /** Canonical keep-verdict over image near-dups — the
     * [[graft.pipeline.Dedup.resolveByComponents]] composition applied to
-    * [[dhashNearDupPairs]]: near-dup pairs become edges, connected
-    * components become duplicate clusters, the minimum doc id is the
-    * canonical. Returns (doc_id, cluster_id, keep) for EVERY image —
-    * the keep-list a corpus dedup actually consumes, not the pair list.
-    * The hash relation (narrow: id + 16 hex chars) persists once: the
-    * band self-join reads it twice and the id spine once. */
-  def resolveImageNearDups(media: DataFrame, maxDist: Int): DataFrame = {
-    val hashes = imageDhash(media).select("doc_id", "dhash").persist()
-    // spanning edges, not the pair clique: an m-item identical cluster
-    // contributes m−1 star edges (see bandedHexEdges) — the verdict only
-    // needs connectivity
-    val out = Dedup.resolveByComponents(hashes.select("doc_id"), "doc_id",
-        bandedHexEdges(hashes, "dhash", nBytes = 8, maxDist))
-      .localCheckpoint(true)
-    hashes.unpersist()
-    out
-  }
+    * the [[dhashNearDupPairs]] machinery: near-dup pairs become edges,
+    * connected components become duplicate clusters, the minimum doc id
+    * is the canonical. Returns (doc_id, cluster_id, keep) for EVERY
+    * image — the keep-list a corpus dedup actually consumes, not the
+    * pair list. The components run over spanning edges, not the pair
+    * clique ([[graft.pipeline.Dedup.hammingEdges]]): an m-item identical
+    * cluster contributes m−1 star edges. Eagerly materialized; nothing
+    * else stays persisted. */
+  def resolveImageNearDups(media: DataFrame, maxDist: Int): DataFrame =
+    Dedup.resolveHamming(hexWords(imageDhash(media), "dhash"), nBits = 64, maxDist)
 
   /** [[resolveImageNearDups]] for audio: banded near-dup pairs over the
     * delta-energy fingerprint composed with connected components into the
     * canonical keep-verdict (doc_id, cluster_id, keep) for EVERY clip. */
   def resolveAudioNearDups(media: DataFrame, nWindows: Int,
-                           maxDist: Int): DataFrame = {
-    require((nWindows - 1) % 32 == 0,
-      s"nWindows=$nWindows: need (nWindows-1) divisible by 32 for 4 whole-byte bands")
-    val fps = audioFingerprint(media, nWindows)
-      .select("doc_id", "fingerprint").persist()
-    val out = Dedup.resolveByComponents(fps.select("doc_id"), "doc_id",
-        bandedHexEdges(fps, "fingerprint", (nWindows - 1) / 8, maxDist))
-      .localCheckpoint(true)
-    fps.unpersist()
-    out
-  }
+                           maxDist: Int): DataFrame =
+    Dedup.resolveHamming(audioWords(media, nWindows), nWindows - 1, maxDist)
 
   case class VideoFpRow(doc_id: Long, n_frames: Int, n_sampled: Int,
                         seq_fp: String)
@@ -633,215 +532,137 @@ object Multimodal {
       }.toDF()
   }
 
-  case class FrameHashRow(doc_id: Long, n_sampled: Int, fidx: Int,
-                          fhash: String)
+  case class FrameWordsRow(id: Long, n_sampled: Int, seq: Array[Long])
 
-  /** Per-sampled-frame dHash rows — [[videoSeqFingerprint]] WITHOUT the
-    * order-sensitive fold, for tolerant frame-level matching. */
-  def videoFrameHashes(media: DataFrame, stride: Int): DataFrame = {
+  /** One row per video: its sampled frames' [[dhashWord]]s in frame
+    * order — [[videoSeqFingerprint]] without the order-sensitive fold, for
+    * tolerant frame-level matching. Non-sampled frames are index-skipped,
+    * never decoded. */
+  private def videoFrameWords(media: DataFrame, stride: Int): DataFrame = {
     require(stride > 0, s"stride must be positive: $stride")
     val spark = media.sparkSession
     import spark.implicits._
     media.select("doc_id", "media_type", "payload").as[MediaRow]
       .mapPartitions { rows =>
-        rows.flatMap { r =>
+        rows.map { r =>
           require(r.media_type == "video/gvid",
             s"no video decoder for ${r.media_type}")
           val (_, frames) = decodeVideo(r.payload)
-          val sampled = (0 until frames.length by stride).toArray
-          sampled.iterator.zipWithIndex.map { case (f, i) =>
-            FrameHashRow(r.doc_id, sampled.length, i,
-              dhashOf(decodePng(frames(f))))
-          }
+          val seq = (0 until frames.length by stride)
+            .map(f => dhashWord(decodePng(frames(f)))).toArray
+          FrameWordsRow(r.doc_id, seq.length, seq)
         }
       }.toDF()
   }
 
+  /** The exact-equal collapse of both video near-dup operators: videos
+    * with identical sampled frame-word sequences band once through a
+    * representative, so a corpus-sized cluster of identical videos (and
+    * every bucket a shared frame would flood) costs O(m), not m²/2.
+    * (id, n_sampled, seq, members). */
+  private def videoReps(media: DataFrame, stride: Int): DataFrame =
+    Dedup.collapse(videoFrameWords(media, stride), "id",
+      col("n_sampled"), col("seq"))
+
   /** Tolerant video near-dup pairs — the banded-Hamming discipline at
     * FRAME level, catching what [[videoSeqFingerprint]]'s exact grouping
     * cannot: a re-encode with a few perturbed frames. Per sampled frame,
-    * the 64-bit dHash splits into 4 bands keyed by (frame index, band);
-    * candidate videos share a band on SOME aligned frame (and have the
-    * same sampled-frame count — the alignment contract), then verify by
-    * the exact TOTAL Hamming distance summed over all aligned frames,
-    * kept at ≤ `maxTotal`. Recall contract: any pair with at least one
-    * aligned frame within 3 flipped bits is guaranteed a candidate
-    * (pigeonhole per frame) — the typical near-dup, where most frames
-    * are untouched, trivially qualifies.
+    * the 64-bit dHash splits into 4 bands keyed by (sampled-frame count,
+    * frame index, band); candidate videos share a band on SOME aligned
+    * frame (and have the same sampled-frame count — the alignment
+    * contract), then verify by the exact TOTAL Hamming distance
+    * sum(bit_count(a ^ b)) over all aligned frames, kept at ≤ `maxTotal`.
+    * Recall contract: any pair with at least one aligned frame within 3
+    * flipped bits is guaranteed a candidate (pigeonhole per frame) — the
+    * typical near-dup, where most frames are untouched, trivially
+    * qualifies.
     *
-    * Scale shape: only (doc_id, frame, band) keys join — bounded by
-    * per-(frame, band) bucket occupancy, never all-pairs; payloads are
-    * dropped map-side after the per-partition decode. */
+    * Scale shape: only representatives' (id, frame band) keys join —
+    * bounded by per-key bucket occupancy, never all-pairs; the verify
+    * zips the two candidates' word arrays, no per-frame join; payloads
+    * are dropped map-side after the per-partition decode. */
   def videoNearDupPairs(media: DataFrame, stride: Int,
                         maxTotal: Int): DataFrame = {
     require(maxTotal >= 0, s"maxTotal=$maxTotal")
-    // read several times (sequence collapse, band explode, both verify
-    // sides) — freed after the eager materialization of the result
-    val fh = videoFrameHashes(media, stride).persist()
-    // exact-equal collapse at VIDEO level (the round-11 hot-bucket fix):
-    // videos with identical sampled frame-hash sequences band once via a
-    // representative, so a corpus-sized cluster of identical videos (and
-    // every (fidx, band) bucket a shared frame would flood) costs O(m)
-    // here, not m²/2. One row per video: (doc_id, n_sampled, seq,
-    // rep_id = min doc id of its identical-sequence group), the rep
-    // assigned by ONE window over the sequence key — the former
-    // groupBy(n_sampled, seq) + join-back shuffled the concatenated
-    // frame-hash strings twice more, and the within-group self-join
-    // below now compares 8-byte rep ids instead of n·16-char strings
-    // (guide §2.3/§2.4).
-    val srep = fh.groupBy("doc_id", "n_sampled")
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("fidx"), col("fhash")))),
-        p => p.getField("fhash")), "").as("seq"))
-      .withColumn("rep_id", min("doc_id").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("n_sampled", "seq")))
-      .persist()
-    val memb = srep.select(col("doc_id"), col("rep_id"))
-    val repFh = fh.join(
-      srep.where(col("doc_id") === col("rep_id")).select("doc_id"), "doc_id")
-    val banded = repFh.select(col("doc_id"), col("n_sampled"), col("fidx"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("b"),
-          substring(col("fhash"), b * 4 + 1, 4).as("v"))): _*)).as("band"))
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.fidx") === col("b.fidx") && col("a.band") === col("b.band") &&
-          col("a.n_sampled") === col("b.n_sampled") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    val repPairs = cand
-      .join(repFh.select(col("doc_id").as("a_id"), col("fidx"),
-        col("fhash").as("a_hash")), Seq("a_id"))
-      .join(repFh.select(col("doc_id").as("b_id"), col("fidx"),
-        col("fhash").as("b_hash")), Seq("b_id", "fidx"))
-      .groupBy("a_id", "b_id")
-      .agg(sum(hexHamming(col("a_hash"), col("b_hash"), 8)).cast("int")
-        .as("total_hamming"))
+    val banded = videoReps(media, stride).withColumn("bands", flatten(transform(
+      col("seq"), (fp, i) => array(Dedup.hammingBandKeys(fp, 64)
+        .map(k => struct(col("n_sampled"), i, k)): _*))))
+    val repPairs = Dedup.repBandCandidates(banded, "seq", "members")
+      .select((col("a_id") === col("b_id")).as("self"), col("a_members"),
+        col("b_members"),
+        aggregate(zip_with(col("a_seq"), col("b_seq"),
+          (x, y) => bit_count(x.bitwiseXOR(y))), lit(0), _ + _).as("total_hamming"))
       .where(col("total_hamming") <= maxTotal)
-    // expansion back to member pairs: within-group pairs are distance 0
-    // by construction (same rep ⇔ same (n_sampled, seq) — the group rep
-    // is unique per group); cross-group member pairs inherit exactly
-    // their representatives' total distance (identical sequences per
-    // group)
-    val within = memb.as("a").join(memb.as("b"),
-        col("a.rep_id") === col("b.rep_id") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        lit(0).as("total_hamming"))
-    val cross = repPairs
-      .join(memb.select(col("rep_id").as("a_id"), col("doc_id").as("ma")),
-        "a_id")
-      .join(memb.select(col("rep_id").as("b_id"), col("doc_id").as("mb")),
-        "b_id")
-      .select(least(col("ma"), col("mb")).as("a_id"),
-        greatest(col("ma"), col("mb")).as("b_id"), col("total_hamming"))
-    val out = within.unionByName(cross).localCheckpoint(true)
-    fh.unpersist(); srep.unpersist()
-    out
+    Dedup.expandMembers(repPairs, col("total_hamming"))
   }
 
   /** SHIFT-tolerant video near-dup pairs — what [[videoNearDupPairs]]'s
     * aligned-frame contract (equal sampled count, equal frame indexes)
     * structurally misses: a TRIMMED copy (intro dropped, recap cut) never
-    * aligns index-for-index. Candidates come from frame-hash SHINGLES —
-    * `shingleK` consecutive per-frame dHashes concatenated, keyed by
-    * VALUE only (no frame index), so a copy shifted by any offset still
-    * shares every interior shingle; verification finds the best global
-    * alignment: for each candidate pair, count exact frame-hash matches
-    * at every offset δ = fidx_b − fidx_a, keep the δ with the highest
-    * count (ties to the smallest δ), and emit pairs aligning at least
-    * `minAligned` frames. Returns (a_id, b_id, best_offset, n_aligned),
-    * a_id < b_id, best_offset oriented b-relative-to-a.
+    * aligns index-for-index. Candidates come from frame-word SHINGLES —
+    * `shingleK` consecutive per-frame dHashes, keyed by VALUE only (no
+    * frame index), so a copy shifted by any offset still shares every
+    * interior shingle; verification finds the best global alignment: for
+    * each candidate pair, count exact frame-hash matches at every offset
+    * δ = fidx_b − fidx_a, keep the δ with the highest count (ties to the
+    * smallest δ), and emit pairs aligning at least `minAligned` frames.
+    * Returns (a_id, b_id, best_offset, n_aligned), a_id < b_id,
+    * best_offset oriented b-relative-to-a.
     *
     * Use stride 1 (every frame hashed): stride-s sampling breaks shift
     * tolerance for trims that are not multiples of s — the sampled frame
     * sets of copy and source interleave and never hash-match.
     *
-    * Scale shape: only (doc_id, 16·shingleK hex chars) rows reach the
-    * candidate join and (doc_id, fidx, 16 hex chars) the verify joins —
-    * payloads never shuffle. Exact-equal SEQUENCES collapse to one
-    * representative before shingling (the [[videoNearDupPairs]]
-    * hot-bucket discipline), with both alignment orientations computed
-    * rep-level so member expansion stays exact even on tie-broken
-    * offsets. */
+    * Scale shape: only (id, shingle) rows reach the candidate join and
+    * (id, frame index, word) rows the verify joins — payloads never
+    * shuffle. Exact-equal SEQUENCES collapse to one representative
+    * before shingling ([[videoReps]]); an identical group's own pairs
+    * align exactly at δ = 0 with every frame matched (count(0) = n
+    * strictly dominates count(δ≠0) ≤ n−|δ|), and both alignment
+    * orientations are computed rep-level so member expansion stays exact
+    * even on tie-broken offsets. */
   def videoShiftNearDupPairs(media: DataFrame, stride: Int, shingleK: Int,
                              minAligned: Int): DataFrame = {
     require(shingleK >= 1, s"shingleK=$shingleK")
     require(minAligned >= 1, s"minAligned=$minAligned")
-    val fh = videoFrameHashes(media, stride).persist()
-    // rep assigned by ONE window over the sequence key (the
-    // videoNearDupPairs round-12 shape): the former groupBy + two
-    // join-backs shuffled the concatenated frame-hash strings three
-    // times, and the within-group self-join below now compares 8-byte
-    // rep ids instead of n·16-char strings
-    val srep = fh.groupBy("doc_id", "n_sampled")
-      .agg(array_join(transform(
-        array_sort(collect_list(struct(col("fidx"), col("fhash")))),
-        p => p.getField("fhash")), "").as("seq"))
-      .withColumn("rep_id", min("doc_id").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("n_sampled", "seq")))
-      .persist()
-    val memb = srep.select(col("doc_id"), col("rep_id"))
-    val repFh = fh.join(
-      srep.where(col("doc_id") === col("rep_id")).select("doc_id"), "doc_id")
-    // shingles sliced straight out of the concatenated rep sequence
-    val shingles = srep
-      .where(col("doc_id") === col("rep_id") &&
-        col("n_sampled") >= shingleK)
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(0), col("n_sampled") - shingleK),
-        j => col("seq").substr(j * 16 + 1, lit(16 * shingleK))))
-        .as("shingle"))
-    val cand = shingles.as("a").join(shingles.as("b"),
-        col("a.shingle") === col("b.shingle") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    // per-offset match counts: an equi-join on the frame hash — never a
+    // checkpointed: the shingle join, both frame sides and both member
+    // sides read it
+    val reps = videoReps(media, stride).localCheckpoint(true)
+    val shingled = reps.where(col("n_sampled") >= shingleK)
+      .withColumn("bands", transform(
+        sequence(lit(1), col("n_sampled") - shingleK + 1),
+        j => slice(col("seq"), j, lit(shingleK))))
+    def frames(p: String, i: String) = reps.select(col("id").as(s"${p}_id"),
+      posexplode(col("seq")).as(Seq(i, "fp")))
+    // both sides plan alike, so the second reuses the first's broadcast:
+    // state the filter the explode below would infer for side a only
+    def members(p: String) = reps.where(size(col("members")) > 0)
+      .select(col("id").as(s"${p}_id"), col("members").as(s"${p}_members"))
+    // per-offset match counts: an equi-join on the frame word — never a
     // positional cross product
-    val counts = cand
-      .join(repFh.select(col("doc_id").as("a_id"), col("fidx").as("ai"),
-        col("fhash")), "a_id")
-      .join(repFh.select(col("doc_id").as("b_id"), col("fidx").as("bi"),
-        col("fhash")), Seq("b_id", "fhash"))
-      .groupBy(col("a_id"), col("b_id"),
-        (col("bi") - col("ai")).as("off"))
+    val counts = Dedup.repBandCandidates(shingled)
+      .join(frames("a", "ai"), "a_id")
+      .join(frames("b", "bi"), Seq("b_id", "fp"))
+      .groupBy(col("a_id"), col("b_id"), (col("bi") - col("ai")).as("off"))
       .agg(count(lit(1)).as("n_aligned"))
     // both orientations' argmax (max count; tie min δ for a→b, which is
     // max δ negated for b→a) so member pairs whose id order flips the
     // group orientation still expand to the oracle-exact offset
-    val best = counts.groupBy("a_id", "b_id")
+    val repPairs = counts.groupBy("a_id", "b_id")
       .agg(max(struct(col("n_aligned"), (-col("off")).as("no"))).as("fw"),
         max(struct(col("n_aligned"), col("off").as("po"))).as("rv"))
       .where(col("fw.n_aligned") >= minAligned)
-      .select(col("a_id"), col("b_id"),
-        (-col("fw.no")).as("off_fwd"), (-col("rv.po")).as("off_rev"),
-        col("fw.n_aligned").as("n_aligned"))
-    // identical sequences: the best alignment is exactly δ=0 with every
-    // frame matched (count(0)=n strictly dominates count(δ≠0) ≤ n−|δ|);
-    // same rep ⇔ same (n_sampled, seq), so the pair join runs on 8-byte
-    // rep ids with the filters read off the a side
-    val wn = srep.select(col("doc_id"), col("n_sampled"), col("rep_id"))
-    val within = wn.as("a").join(wn.as("b"),
-        col("a.rep_id") === col("b.rep_id") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .where(col("a.n_sampled") >= shingleK &&
-        col("a.n_sampled") >= minAligned)
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        lit(0).as("best_offset"),
-        col("a.n_sampled").cast("long").as("n_aligned"))
-    val cross = best
-      .join(memb.select(col("rep_id").as("a_id"), col("doc_id").as("ma")),
-        "a_id")
-      .join(memb.select(col("rep_id").as("b_id"), col("doc_id").as("mb")),
-        "b_id")
-      .select(least(col("ma"), col("mb")).as("a_id"),
-        greatest(col("ma"), col("mb")).as("b_id"),
+      .join(members("a"), "a_id")
+      .join(members("b"), "b_id")
+      .select((col("a_id") === col("b_id")).as("self"), col("a_members"),
+        col("b_members"), (-col("fw.no")).as("off_fwd"),
+        (-col("rv.po")).as("off_rev"), col("fw.n_aligned").as("n_aligned"))
+    val out = Dedup.expandMembers(repPairs,
         when(col("ma") < col("mb"), col("off_fwd"))
           .otherwise(col("off_rev")).cast("int").as("best_offset"),
         col("n_aligned"))
-    val out = within.unionByName(cross).localCheckpoint(true)
-    fh.unpersist(); srep.unpersist()
+      .localCheckpoint(true)
+    Checkpoints.free(reps)
     out
   }
 

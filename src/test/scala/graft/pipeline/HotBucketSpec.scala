@@ -33,8 +33,9 @@ class HotBucketSpec extends AnyFunSuite {
       val media = spark.createDataset(rows).toDF()
 
       val hashes = Multimodal.imageDhash(media).select("doc_id", "dhash")
-      val edges = Multimodal.bandedHexEdges(hashes, "dhash",
-        nBytes = 8, maxDist = 3)
+      val edges = Dedup.hammingEdges(
+        Dedup.hammingReps(Multimodal.hexWords(hashes, "dhash"), nBits = 64),
+        maxDist = 3)
       val n = edges.count()
       // the 1000-item identical cluster contributes exactly 999 star edges;
       // everything else is bounded by rep-level pairs among ≤ 4 distinct
@@ -70,6 +71,25 @@ class HotBucketSpec extends AnyFunSuite {
       // uncollapsed band join would enumerate
       val cands = Dedup.repBandCandidates(reps).count()
       assert(cands <= 3L, s"rep-level candidates $cands not collapse-bounded")
+    }
+  }
+
+  test("1000 identical docs: simhash collapses to one representative, pairs are C(1000,2)") {
+    withSpark { spark =>
+      import spark.implicits._
+      val text = "the quick brown fox jumps over the lazy dog again tonight"
+      val docs = ((1L to 1000L).map(id => (id, text)) ++ Seq(
+        (2001L, "completely unrelated words about spark catalyst planning"),
+        (2002L, "another disjoint vocabulary entirely for graph algorithms")))
+        .toDF("doc_id", "text")
+      val reps = Dedup.hammingReps(Dedup.simhashes(docs, "doc_id", "text"), nBits = 60)
+      assert(reps.count() == 3L,
+        "identical signatures must collapse to one representative")
+      val cands = Dedup.repBandCandidates(reps).count()
+      assert(cands <= 3L, s"rep-level candidates $cands not collapse-bounded")
+      val pairs = Dedup.simhashPairs(docs, "doc_id", "text", maxDist = 3)
+      assert(pairs.count() == 1000L * 999L / 2)
+      assert(pairs.where("a_id >= b_id OR b_id > 1000 OR hamming != 0").isEmpty)
     }
   }
 

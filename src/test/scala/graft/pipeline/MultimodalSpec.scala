@@ -266,6 +266,49 @@ class MultimodalSpec extends AnyFunSuite {
     } finally spark.stop()
   }
 
+  test("audio near-dup takes nWindows 33 or 65 only") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]").config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2")
+      .appName("audiowindows-spec").getOrCreate()
+    try {
+      import spark.implicits._
+      val media = Seq(Multimodal.MediaRow(1, "audio/wav",
+        Multimodal.synthWavAsset(1))).toDF()
+      val pairs = intercept[IllegalArgumentException](
+        Multimodal.audioNearDupPairs(media, nWindows = 97, maxDist = 3))
+      assert(pairs.getMessage.contains("nWindows 33 or 65"), pairs.getMessage)
+      val resolve = intercept[IllegalArgumentException](
+        Multimodal.resolveAudioNearDups(media, nWindows = 97, maxDist = 3))
+      assert(resolve.getMessage.contains("nWindows 33 or 65"), resolve.getMessage)
+    } finally spark.stop()
+  }
+
+  test("resolve paths: freeing the verdict leaves the persisted RDDs as they were") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2]").config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2")
+      .appName("resolveleak-spec").getOrCreate()
+    try {
+      import spark.implicits._
+      // identical copies make a multi-member group, so both the star
+      // edges and the representative pairs feed the components
+      val images = Seq(1L, 2L, 3L, 4L).map(id => Multimodal.MediaRow(id,
+        "image/png", Multimodal.synthPngAsset(if (id == 2L) 1L else id))).toDF()
+      val clips = Seq(1L, 2L, 3L).map(id => Multimodal.MediaRow(id,
+        "audio/wav", Multimodal.synthWavAsset(if (id == 3L) 1L else id))).toDF()
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val before = persisted
+      for (verdict <- Seq(() => Multimodal.resolveImageNearDups(images, maxDist = 3),
+          () => Multimodal.resolveAudioNearDups(clips, nWindows = 65, maxDist = 3))) {
+        val v = verdict()
+        assert(v.count() > 0)
+        graft.util.Checkpoints.free(v)
+        assert(persisted == before, s"left persisted: ${persisted -- before}")
+      }
+    } finally spark.stop()
+  }
+
   test("videoNearDupPairs catches a one-frame dent the exact sequence fingerprint misses") {
     // 9x8 frames (sample grid = pixel grid). B = A re-encoded with ONE
     // pixel flipped in frame 1 → one dHash bit differs: seq_fp differs
