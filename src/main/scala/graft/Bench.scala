@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     // untimed warmup: session + codegen + reader initialization otherwise
     // lands entirely on whichever query happens to run first
     Tables.events(spark, sfDir).count()
@@ -22,7 +16,7 @@ object Bench {
     // StackOverflowError is caught too: Catalyst overflows the stack on
     // deep or iterative plans, and one such query must not end the run
     // before any result is printed
-    def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    def timed(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch {
         case e @ (scala.util.control.NonFatal(_) | _: StackOverflowError) =>
@@ -30,13 +24,10 @@ object Bench {
           false
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      // Queries may cache intermediates; nothing unpersists them once the
-      // result is counted. Drop them so 70+ queries in one session don't
-      // accumulate storage-memory pressure that skews later measurements.
-      // BLOCKING on purpose: async unpersist overlaps block eviction with
-      // the next timed run and charges it the cleanup cost.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // Queries may cache intermediates; drop them so 190 queries in one
+      // session don't accumulate storage-memory pressure that skews later
+      // measurements.
+      GraftSession.reset(spark)
       if (ok) Some(dt) else None
     }
     // one UNTIMED warmup execution, then three timed ones, headline =
@@ -57,7 +48,7 @@ object Bench {
     // not by a code change.
     def calibrate(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, cpus.toInt)
+      spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("bit_xor(xxhash64(id)) AS x").head()
       (System.nanoTime() - t0) / 1e9
     }

@@ -91,10 +91,11 @@ object CurationPipeline {
     * `keep = drop_reason IS NULL`. One row per input document; `idCol`
     * must be unique, as every stage keys on it.
     *
-    * Unless `graft.curation.eagerStages` is false, the call runs the
-    * funnel and returns the verdict as a local checkpoint; every
-    * intermediate it materialized is freed before it returns, and the
-    * caller frees the verdict with `graft.util.Checkpoints.free`. */
+    * The call runs the funnel and returns the verdict as a local
+    * checkpoint; every intermediate it materialized is freed before it
+    * returns, and the caller frees the verdict with
+    * `graft.util.Checkpoints.free`. The stages' own plans are the
+    * executions [[graft.util.PlanCapture]] records for the call. */
   def curate(corpus: DataFrame, benchmark: DataFrame, idCol: String,
              textCol: String, cfg: Config = Config()): DataFrame = {
     val base = corpus.select(col(idCol).as("doc_id"), col(textCol).as("text"))
@@ -108,19 +109,16 @@ object CurationPipeline {
     // of a lazy cache STAMPEDE, each recomputing the full lineage (the
     // round-6 p17 shingle-cache lesson) — and each cuts the lineage, so
     // later plans scan a LogicalRDD instead of re-planning and re-printing
-    // the nested cached plans of every earlier stage.
-    // Plan-only consumers (Explain, PlanAuditSpec) opt out via the session
-    // conf below — they build the frame purely to inspect its plan and
-    // must not pay the funnel's execution at construction time. The opt-out
-    // keeps a lazy cache, so the plan still shows the whole dataflow and
-    // an opted-out frame that IS later executed remains correct.
-    val eagerStages = corpus.sparkSession.conf
-      .get("graft.curation.eagerStages", "true").toBoolean
+    // the nested cached plans of every earlier stage. A stage's dataflow is
+    // in the plan its localCheckpoint executed (`RunOne --explain` prints
+    // it), not in the plans that read it.
     // what this call materializes, freed once the verdict is (below)
     val made = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def stage(df: DataFrame): DataFrame =
-      if (!eagerStages) df.cache()
-      else { val c = df.localCheckpoint(true); made ++= Seq(df, c); c }
+    def stage(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(true)
+      made ++= Seq(df, c)
+      c
+    }
 
     // 1. exact duplicates: a document drops when its md5 group has a
     // smaller id. The groups (the duplicated subset's md5s) are a stage of
@@ -128,15 +126,13 @@ object CurationPipeline {
     // checkpoint's statistics and the corpus text does not shuffle.
     val groups = stage(Dedup.exactGroups(base, "doc_id", "text")
       .select(col("text_hash").as("group_hash"), col("canonical_id")))
-    val flagged = {
-      val c = stage(base
-        .join(groups, md5(col("text")) <=> col("group_hash"), "left")
-        .select(col("doc_id"), col("text"),
-          coalesce(col("canonical_id") =!= col("doc_id"), lit(false)).as("exact_dup")))
-      // one row per corpus document: plan over it with the corpus' size,
-      // not the product estimate of the left join that built it
-      if (eagerStages) GraftSqlShims.withStatsOf(c, base) else c
-    }
+    // one row per corpus document: plan over it with the corpus' size,
+    // not the product estimate of the left join that built it
+    val flagged = GraftSqlShims.withStatsOf(stage(base
+      .join(groups, md5(col("text")) <=> col("group_hash"), "left")
+      .select(col("doc_id"), col("text"),
+        coalesce(col("canonical_id") =!= col("doc_id"), lit(false)).as("exact_dup"))),
+      base)
 
     // 2. near-dup clusters over the exact-canonical survivors (running it
     // on the full set would re-find every exact group as a near cluster).
@@ -189,18 +185,15 @@ object CurationPipeline {
             .as("drop_reason")),
         allowMissingColumns = true)
       .withColumn("keep", col("drop_reason").isNull)
-    if (!eagerStages) verdict
-    else {
-      // materialize the narrow verdict, then free every checkpoint the
-      // stages created — their own and those their operators left behind
-      // (the pair list, the component labels). clearCache() reaches none
-      // of them. The inputs' checkpoints, if any, are the caller's.
-      val out = verdict.localCheckpoint(true)
-      val inputs = (Checkpoints.rdds(corpus) ++ Checkpoints.rdds(benchmark))
-        .map(_.id).toSet
-      made.flatMap(Checkpoints.rdds).filterNot(r => inputs(r.id))
-        .foreach(_.unpersist(blocking = false))
-      out
-    }
+    // materialize the narrow verdict, then free every checkpoint the
+    // stages created — their own and those their operators left behind
+    // (the pair list, the component labels). clearCache() reaches none
+    // of them. The inputs' checkpoints, if any, are the caller's.
+    val out = verdict.localCheckpoint(true)
+    val inputs = (Checkpoints.rdds(corpus) ++ Checkpoints.rdds(benchmark))
+      .map(_.id).toSet
+    made.flatMap(Checkpoints.rdds).filterNot(r => inputs(r.id))
+      .foreach(_.unpersist(blocking = false))
+    out
   }
 }

@@ -3,7 +3,7 @@ package graft.util
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlShims, SparkSession}
 
 /** Bot progress totals (SURVEY §2 E6): the reference's bots maintain
   * processed/total counters that the operator UI polls while a run is in
@@ -52,23 +52,14 @@ object JobProgress {
 
   /** Run `body` with a fresh listener attached, detaching it afterwards
     * (listeners leak across queries otherwise); returns the body's result
-    * and the final progress. The listener bus is async (and its drain API
-    * is private to Spark), so the final snapshot is read after the
-    * counters quiesce: unchanged for 200 ms, or a 30 s cap. */
+    * and the final progress, read once the async listener bus has
+    * delivered every event the body's jobs posted. */
   def attached[T](spark: SparkSession)(body: => T): (T, Progress) = {
     val l = new JobProgress
     spark.sparkContext.addSparkListener(l)
     try {
       val r = body
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      var prev = l.snapshot
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-          (l.snapshot != prev || System.nanoTime() - stableSince < 200000000L)) {
-        val cur = l.snapshot
-        if (cur != prev) { prev = cur; stableSince = System.nanoTime() }
-        Thread.sleep(10)
-      }
+      GraftSqlShims.drainListenerBus(spark)
       (r, l.snapshot)
     } finally spark.sparkContext.removeSparkListener(l)
   }

@@ -20,8 +20,14 @@ import org.apache.spark.sql.types.StructType
   * row-level passes with [[ofInternalRows]], and `CurationPipeline`
   * corrects its per-document checkpoints' statistics with
   * [[withStatsOf]]; nothing else in graft lives outside the `graft`
-  * package. */
+  * package. The listener bus's drain is `private[spark]` too. */
 object GraftSqlShims {
+  /** Blocks until every listener event posted so far has been delivered:
+    * listeners run on the bus thread, so counters they keep are complete
+    * only after this returns. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

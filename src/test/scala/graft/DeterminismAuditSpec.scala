@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** Partition-count invariance audit: every result the engine reports must
   * be a pure function of the DATA, not of how Spark happened to split it.
@@ -16,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * tiered matching, sketches, and the sequence packer. Coprime odd
   * partition counts (3, 13) maximize the reshuffling between runs.
   */
-class DeterminismAuditSpec extends AnyFunSuite {
+class DeterminismAuditSpec extends AnyFunSuite with SharedSpark {
 
   private val Audited = Seq(
     "c1_field_diff", "c7_last_wins_dedup", "d5_tiered_match", "e5_weighted_avg",
@@ -95,23 +94,17 @@ class DeterminismAuditSpec extends AnyFunSuite {
     "p95_audio_dedup_resolve", "p96_video_neardup_pairs",
     "p31_bpe_vocab")
 
-  private def runAll(partitions: Int): Map[String, Seq[String]] = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", partitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"determinism-audit-$partitions")
-      .getOrCreate()
-    try {
+  private def runAll(partitions: Int): Map[String, Seq[String]] =
+    withConf("spark.sql.shuffle.partitions" -> partitions.toString) {
       val sf = "/root/testdata/sf0.001"
       Audited.map { name =>
         val rows = QueryCatalog.queries(name)(spark, sf)
           .collect().map(_.toString).toSeq
+        // nothing one run cached may serve the other partitioning
+        GraftSession.reset(spark)
         name -> rows
       }.toMap
-    } finally spark.stop()
-  }
+    }
 
   test("order-sensitive queries return identical rows at 3 and 13 shuffle partitions") {
     val a = runAll(3)

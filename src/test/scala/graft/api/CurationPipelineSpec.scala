@@ -1,20 +1,14 @@
 package graft.api
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlShims, SparkSession}
+import graft.{GraftSession, SharedSpark}
+import graft.util.{Checkpoints, PlanCapture}
 
 /** End-to-end funnel semantics of [[CurationPipeline.curate]] on a
   * hand-built corpus where every drop reason has a known positive, plus
   * the precedence rule (first failing stage names the drop). */
-class CurationPipelineSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("curation-pipeline")
-    .getOrCreate()
+class CurationPipelineSpec extends AnyFunSuite with SharedSpark {
 
   // long English filler: high stopword ratio, ~50 words → quality passes
   private val good =
@@ -92,9 +86,10 @@ class CurationPipelineSpec extends AnyFunSuite {
   }
 
   test("repeated curate calls free their checkpoints; the cache manager stays empty") {
+    // drop what the suite's earlier tests left persisted
+    GraftSession.reset(spark)
     val (corpus, bench) = funnelCorpus(spark)
     val sc = spark.sparkContext
-    spark.catalog.clearCache()
     val before = sc.getPersistentRDDs.keySet
     val outs = (1 to 3).map { _ =>
       val out = CurationPipeline.curate(corpus, bench, "id", "text")
@@ -105,12 +100,12 @@ class CurationPipelineSpec extends AnyFunSuite {
     // leaves behind would pile up here; only each returned frame's own
     // checkpoint may remain
     val grown = sc.getPersistentRDDs.keySet -- before
-    val own = outs.flatMap(graft.util.Checkpoints.rdds).map(_.id).toSet
+    val own = outs.flatMap(Checkpoints.rdds).map(_.id).toSet
     assert(grown.subsetOf(own), s"leaked RDDs ${grown -- own}")
     assert(grown.size <= outs.size)
     assert(spark.sharedState.cacheManager.isEmpty)
     // and freeing the returned frames leaves nothing at all
-    outs.foreach(graft.util.Checkpoints.free)
+    outs.foreach(Checkpoints.free)
     assert(sc.getPersistentRDDs.keySet === before,
       s"persisted after free: ${sc.getPersistentRDDs.keySet -- before}")
   }
@@ -118,32 +113,25 @@ class CurationPipelineSpec extends AnyFunSuite {
   test("no curate plan description exceeds 64 KB") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
-      SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+      SparkListenerSQLExecutionStart}
     val (corpus, bench) = funnelCorpus(spark)
     val sizes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
-    val started, ended = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
-          started.incrementAndGet()
           sizes.add(s.description -> s.physicalPlanDescription.length)
         case u: SparkListenerSQLAdaptiveExecutionUpdate =>
           sizes.add(s"AQE update of ${u.executionId}" -> u.physicalPlanDescription.length)
-        case _: SparkListenerSQLExecutionEnd => ended.incrementAndGet()
         case _ =>
       }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
       CurationPipeline.curate(corpus, bench, "id", "text").collect()
-      // events arrive asynchronously, in order: wait for every started
-      // execution's end event
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while ((started.get == 0 || ended.get < started.get) &&
-        System.nanoTime() < deadline) Thread.sleep(20)
-      assert(started.get > 0 && ended.get >= started.get, "listener events missing")
+      GraftSqlShims.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
+    assert(!sizes.isEmpty, "listener events missing")
     val (what, largest) = sizes.asScala.maxBy(_._2)
     // the checkpointed stages keep every plan small; re-embedding cached
     // stage plans printed ~700 KB per AQE update of the pair execution
@@ -184,7 +172,7 @@ class CurationPipelineSpec extends AnyFunSuite {
     try {
       val out = CurationPipeline.curate(corpus, bench, "id", "text")
       assert(out.collect().length === 6)
-      graft.util.Checkpoints.free(out)
+      Checkpoints.free(out)
     } finally {
       ctx.getConfiguration.removeLogger(name)
       ctx.updateLoggers()
@@ -196,29 +184,18 @@ class CurationPipelineSpec extends AnyFunSuite {
 
   test("one curate call computes the text signals with one kernel, no lambda or regex") {
     import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, Expression, RegExpExtractAll}
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.util.QueryExecutionListener
     val (corpus, bench) = funnelCorpus(spark)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
+    val (_, plans) = PlanCapture(spark) {
       val out = CurationPipeline.curate(corpus, bench, "id", "text")
       assert(out.collect().length === 6)
-      graft.util.Checkpoints.free(out)
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
+      Checkpoints.free(out)
+    }
     // every expression of every executed plan, into AQE's query stages
     val walk = new AdaptiveSparkPlanHelper {}
-    val exprs: Seq[Expression] = plans.asScala.toSeq.flatMap(qe =>
-      walk.flatMap(qe.executedPlan)(_.expressions.flatMap(_.collect { case e => e })))
-    assert(plans.size > 0, "no execution was observed")
+    val exprs: Seq[Expression] = plans.flatMap(e =>
+      walk.flatMap(e.qe.executedPlan)(_.expressions.flatMap(_.collect { case x => x })))
+    assert(plans.nonEmpty, "no execution was observed")
     assert(exprs.count(_.isInstanceOf[graft.functions.TextSignals]) === 1)
     assert(!exprs.exists(_.isInstanceOf[RegExpExtractAll]), "regexp_extract_all in a curate plan")
     assert(!exprs.exists(_.isInstanceOf[ArrayFilter]), "a lambda filter in a curate plan")

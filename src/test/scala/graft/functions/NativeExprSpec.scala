@@ -1,27 +1,21 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** Catalyst expressions execute through two independent paths — generated
   * Java (doGenCode) and the interpreted eval — and Spark switches between
   * them per-plan (codegen fallback, constant folding, Janino failures).
   * Each native expression must produce identical results on both, and
   * match its scalar reference implementation. */
-class NativeExprSpec extends AnyFunSuite {
+class NativeExprSpec extends AnyFunSuite with SharedSpark {
 
-  private def run(codegen: Boolean): (Seq[String], Seq[Int], Seq[Double]) = {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.codegen.wholeStage", codegen.toString)
-      .config("spark.sql.codegen.factoryMode",
-        if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
-      .config("spark.ui.enabled", "false")
-      .appName(s"native-expr-$codegen")
-      .getOrCreate()
-    try {
+  override protected def cpus = 2
+
+  private def run(codegen: Boolean): (Seq[String], Seq[Int], Seq[Double]) =
+    withConf("spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")) {
       import spark.implicits._
       Native.register(spark)
 
@@ -48,8 +42,7 @@ class NativeExprSpec extends AnyFunSuite {
         .collect().map(r => math.rint(r.getDouble(0) * 1e9) / 1e9).toSeq
 
       (olc, inter, cos)
-    } finally spark.stop()
-  }
+    }
 
   test("olc_encode / sorted_intersect_size / cosine_sim: codegen == interpreted == scalar") {
     val withCodegen = run(codegen = true)

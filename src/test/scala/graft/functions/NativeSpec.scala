@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** The [[Native]] function table and its three ways in: the arity check
   * every row's builder applies, the casts a `Native.register` session and
   * a `GraftExtensions` session share, operators that build their
@@ -18,20 +20,14 @@ class NativeSpec extends AnyFunSuite {
 
   private val names = Native.table.map(_.name)
 
-  /** A session built from scratch — a session leaked by another suite
-    * would be returned by getOrCreate without the wanted extensions. */
+  /** A fresh context per test: the static `spark.sql.extensions` setting
+    * differs between the sessions a test compares, and getOrCreate would
+    * hand back a running session without it. */
   private def withSession[T](extensions: Boolean)(f: SparkSession => T): T = {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("native-spec")
-    val spark = (if (extensions) b.config("spark.sql.extensions", "graft.GraftExtensions")
-                 else b).getOrCreate()
+    val spark = GraftSession.local(2, (if (extensions)
+      Seq("spark.sql.extensions" -> "graft.GraftExtensions") else Nil): _*)
     try f(spark) finally spark.stop()
   }
 

@@ -1,25 +1,17 @@
 package graft.functions
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** The native nfc_normalize expression and the TextAnalysis.normalizeText
   * pipeline built on it: composed/decomposed convergence, control-char
   * scrubbing, space collapsing, and null passthrough. Unicode is spelled
   * as \u escapes so the fixtures can't be silently re-normalized by an
   * editor. */
-class NfcNormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NfcNormalizeSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("nfc-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+  override protected def cpus = 2
 
   test("decomposed and composed renderings normalize to identical bytes") {
     import spark.implicits._

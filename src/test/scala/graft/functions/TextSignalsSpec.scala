@@ -1,24 +1,20 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.TextAnalysis
+import graft.SharedSpark
 
 /** The `text_signals` kernel against the builtin spelling it replaced
   * (kept here as the reference): language ID, BPE-ish token count and
   * quality score must be identical, bit for bit, on seeded random texts
   * that cover every rule the kernel implements, on the edge cases and on
   * null. */
-class TextSignalsSpec extends AnyFunSuite {
+class TextSignalsSpec extends AnyFunSuite with SharedSpark {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("text-signals")
-    .getOrCreate()
+  override protected def cpus = 2
 
   /** The builtin spelling: split + lambda `filter` per word, a stopword
     * `filter` per profile, and `regexp_extract_all` for tokens and

@@ -1,7 +1,7 @@
 package graft.geo
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Adversarial density for the radius join: every point on ONE latitude
   * line (the shape of a coastal metro strip or a gridded raster row). The
@@ -10,14 +10,7 @@ import org.apache.spark.sql.SparkSession
   * must (1) stay exact and (2) spread the strip across radius-sized lon
   * bands so per-key populations stay near-constant.
   */
-class GeoJoinsSkewSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("geo-joins-skew")
-    .getOrCreate()
+class GeoJoinsSkewSpec extends AnyFunSuite with SharedSpark {
 
   private val RadiusM = 150.0
   // 3,000 points on lat = 40.0 exactly: 1,000 cluster sites spread over

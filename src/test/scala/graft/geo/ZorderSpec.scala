@@ -1,15 +1,18 @@
 package graft.geo
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** Z-order layout key: interleave correctness against a scalar
   * reimplementation, bijectivity over the tile grid, and the prefix
   * property that makes it a useful file-clustering key (an aligned
   * 2^k × 2^k tile box shares one zkey prefix, so its rows land in a
   * contiguous key range → contiguous files after a range write). */
-class ZorderSpec extends AnyFunSuite {
+class ZorderSpec extends AnyFunSuite with SharedSpark {
+
+  // keep FileSourceScanExec findable in the executed plan
+  override protected def sparkConf = Seq("spark.sql.adaptive.enabled" -> "false")
 
   private def scalarZ(x: Long, y: Long, bits: Int): Long =
     (0 until bits).map { b =>
@@ -17,42 +20,27 @@ class ZorderSpec extends AnyFunSuite {
     }.reduce(_ | _)
 
   test("zorderKey: matches scalar interleave, bijective, prefix-clusters aligned boxes") {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("zorder-spec")
-      .getOrCreate()
     import spark.implicits._
-    try {
-      val pts = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)).toDF("x", "y")
-      val out = pts.select(col("x"), col("y"),
-          GeoFunctions.zorderKey(col("x"), col("y"), 6).as("z"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    val pts = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y)).toDF("x", "y")
+    val out = pts.select(col("x"), col("y"),
+        GeoFunctions.zorderKey(col("x"), col("y"), 6).as("z"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
-      out.foreach { case (x, y, z) => assert(z == scalarZ(x, y, 6), s"($x,$y)") }
-      // bijective over the full 6-bit grid: 4096 distinct keys covering 0..4095
-      val keys = out.map(_._3)
-      assert(keys.distinct.length == 64 * 64)
-      assert(keys.min == 0L && keys.max == 64L * 64 - 1)
+    out.foreach { case (x, y, z) => assert(z == scalarZ(x, y, 6), s"($x,$y)") }
+    // bijective over the full 6-bit grid: 4096 distinct keys covering 0..4095
+    val keys = out.map(_._3)
+    assert(keys.distinct.length == 64 * 64)
+    assert(keys.min == 0L && keys.max == 64L * 64 - 1)
 
-      // prefix property: every aligned 8x8 box (drop 3 low bits of x and
-      // y) maps to one value of z >> 6 — the box IS a contiguous key range
-      out.groupBy { case (x, y, _) => (x >> 3, y >> 3) }.foreach {
-        case (_, rows) =>
-          assert(rows.map(_._3 >> 6).distinct.length == 1)
-      }
-    } finally spark.stop()
+    // prefix property: every aligned 8x8 box (drop 3 low bits of x and
+    // y) maps to one value of z >> 6 — the box IS a contiguous key range
+    out.groupBy { case (x, y, _) => (x >> 3, y >> 3) }.foreach {
+      case (_, rows) =>
+        assert(rows.map(_._3 >> 6).distinct.length == 1)
+    }
   }
 
   test("z-order file layout: a bbox query reads strictly fewer files than the unsorted layout") {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false") // keep FileSourceScanExec findable
-      .config("spark.ui.enabled", "false")
-      .appName("zorder-prune-spec")
-      .getOrCreate()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("zorder_prune").toString
     try {
@@ -92,9 +80,6 @@ class ZorderSpec extends AnyFunSuite {
       assert(zFiles < rFiles, s"z layout read $zFiles files, unsorted read $rFiles")
       // and not marginally fewer: one directory of 64, vs all of them
       assert(zFiles <= rFiles / 16, s"z=$zFiles rand=$rFiles")
-    } finally {
-      spark.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

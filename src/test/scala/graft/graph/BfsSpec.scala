@@ -1,22 +1,12 @@
 package graft.graph
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Bfs.distances against a scalar BFS reference, plus the structural
   * properties a hop-distance map must satisfy (seeds at 0, triangle
   * inequality along edges, unreachable nodes absent, hop bound honored). */
-class BfsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("bfs-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BfsSpec extends AnyFunSuite with SharedSpark {
 
   private def scalarBfs(edges: Seq[(Long, Long)], seeds: Set[Long],
                         maxHops: Int): Map[Long, Int] = {

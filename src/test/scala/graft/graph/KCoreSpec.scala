@@ -1,23 +1,13 @@
 package graft.graph
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** KCore.prune against a scalar synchronous-peel reimplementation, plus
   * shape cases: a clique is its own (n−1)-core, a chain dies at k=2,
   * and enough rounds reach the true fixed point the sequential peel
   * computes. */
-class KCoreSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("kcore-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class KCoreSpec extends AnyFunSuite with SharedSpark {
 
   private def scalar(edges: Seq[(Long, Long)], k: Int,
                      rounds: Int): Map[Long, Long] = {

@@ -1,22 +1,12 @@
 package graft.graph
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** LabelPropagation against a scalar reimplementation of the same
   * synchronous recurrence, plus community structure: two dense cliques
   * joined by one bridge edge resolve to two distinct labels. */
-class LabelPropagationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("lpa-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class LabelPropagationSpec extends AnyFunSuite with SharedSpark {
 
   private def scalarLpa(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct

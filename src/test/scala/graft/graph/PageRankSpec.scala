@@ -1,23 +1,13 @@
 package graft.graph
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** PageRank.ranks against a driver-side scalar reimplementation of the
   * same integer recurrence, plus the structural properties a centrality
   * ranking must satisfy (hub outranks leaves, mass conservation bound,
   * dangling nodes keep the teleport base). */
-class PageRankSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("pagerank-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class PageRankSpec extends AnyFunSuite with SharedSpark {
 
   private val Scale = 1L << 20
 

@@ -1,23 +1,13 @@
 package graft.graph
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Triangles.perNode against a scalar brute-force triple enumeration,
   * plus shape cases: a clique (every node in C(n-1,2) triangles), a
   * bipartite graph (none), and input normalization (direction,
   * duplicates, self-loops). */
-class TrianglesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("triangles-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class TrianglesSpec extends AnyFunSuite with SharedSpark {
 
   private def scalar(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val e = edges.collect { case (a, b) if a != b =>

@@ -1,20 +1,13 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** AsofJoin.backward against a brute-force per-row maximum-≤ scan,
   * covering inclusive ties (right ts == left ts), right-side duplicate
   * timestamps (largest tiebreak wins), unmatched lefts (null payload),
   * and keys present on only one side. */
-class AsofJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("asof-join")
-    .getOrCreate()
+class AsofJoinSpec extends AnyFunSuite with SharedSpark {
 
   test("backward as-of join equals the brute-force definition") {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.operators
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** BloomJoin.semiJoin against the plain left_semi join (must be equal —
   * no false negatives), the prefilter's actual pruning power on a
   * selective build side, multi-column keys, and the empty-build edge. */
-class BloomJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("bloomjoin-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class BloomJoinSpec extends AnyFunSuite with SharedSpark {
 
   test("equals the exact semi-join; the bloom pass actually prunes") {
     import spark.implicits._

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import graft.SharedSpark
 
 /** Proof of the bucketed co-located join — the write-time layout that
   * turns the engine's hottest repeated join (orders ⋈ lineitem by order
@@ -12,18 +12,14 @@ import java.nio.file.Files
   * not an operator, but the end-to-end demonstration that the layout
   * actually removes the shuffle, asserted on the physical plan, with
   * identical results to the plain join. */
-class BucketedJoinSpec extends AnyFunSuite {
+class BucketedJoinSpec extends AnyFunSuite with SharedSpark {
+
+  override protected def sparkConf = Seq(
+    "spark.sql.warehouse.dir" ->
+      Files.createTempDirectory("graft-bucket-wh").toFile.getAbsolutePath,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1") // force SMJ
 
   test("bucketed tables join without an Exchange; plain parquet pays two") {
-    val wh = Files.createTempDirectory("graft-bucket-wh").toFile.getAbsolutePath
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      .config("spark.ui.enabled", "false")
-      .appName("bucketed-join-spec")
-      .getOrCreate()
     import spark.implicits._
     try {
       val orders = (1L to 2000L).map(k => (k, s"clerk${k % 7}"))
@@ -60,7 +56,6 @@ class BucketedJoinSpec extends AnyFunSuite {
     } finally {
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS items_b")
-      spark.stop()
     }
   }
 }

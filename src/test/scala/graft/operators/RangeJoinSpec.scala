@@ -1,23 +1,13 @@
 package graft.operators
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** RangeJoin.overlap against the naive inequality join: exact pair set,
   * exactly-once emission (intervals spanning many buckets must not
   * duplicate), inclusive-bound semantics, and the reserved-column guard. */
-class RangeJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("rangejoin-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RangeJoinSpec extends AnyFunSuite with SharedSpark {
 
   private def randomIntervals(rnd: scala.util.Random, n: Int, idBase: Long) =
     (1 to n).map { i =>

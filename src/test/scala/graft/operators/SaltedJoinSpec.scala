@@ -1,23 +1,13 @@
 package graft.operators
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** SaltedJoin.inner: exact equality with the plain join on a skewed
   * fixture (including duplicate-key multiplicities), the salted exchange
   * in the physical plan, and the reserved-column guard. */
-class SaltedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("salted-join-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SaltedJoinSpec extends AnyFunSuite with SharedSpark {
 
   private def fixture = {
     import spark.implicits._

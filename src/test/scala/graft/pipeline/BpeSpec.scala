@@ -1,21 +1,13 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Bpe.train against a single-threaded scalar BPE (same greedy
   * left-to-right merge, same (freq desc, pair-string asc) tie-break),
   * plus the overlap edge ("aaaa" merges to [aa, aa], not [aa, a, a]) and
   * the Sennrich-style suffix-discovery sanity case. */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("bpe-spec")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with SharedSpark {
 
   /** Scalar BPE over a word histogram. */
   private def scalarBpe(words: Map[String, Long], rounds: Int): Seq[(String, String, Long)] = {
@@ -339,5 +331,4 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  override def afterAll(): Unit = spark.stop()
 }

@@ -1,19 +1,12 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Content-defined chunking: scalar parity of the boundary rule, the
   * insertion-robustness property that motivates CDC over fixed windows,
   * and the degenerate short-text case. */
-class CdcChunksSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("cdc-chunks-spec")
-    .getOrCreate()
+class CdcChunksSpec extends AnyFunSuite with SharedSpark {
 
   private val M = 1000000007L
 

@@ -1,20 +1,12 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Clustering.kmeans against a scalar Lloyd reference with the same
   * fixed-point mean arithmetic, plus partitioning-invariance (the whole
   * point of the fixed-point sums) and blob-recovery sanity. */
-class ClusteringSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("clustering-spec")
-    .getOrCreate()
+class ClusteringSpec extends AnyFunSuite with SharedSpark {
 
   private def scalarKmeans(vecs: Seq[(Long, Array[Float])], k: Int,
                            iters: Int): Map[Long, Int] = {
@@ -81,5 +73,4 @@ class ClusteringSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(byBlob.values.flatten.toSet.size == 3)
   }
 
-  override def afterAll(): Unit = spark.stop()
 }

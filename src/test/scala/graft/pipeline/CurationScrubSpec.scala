@@ -1,20 +1,12 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Semantics of the corpus-curation scrub operators on hand-built inputs
   * with known expected outputs: duplicated-span removal (RefinedWeb/C4
   * rule over fixed-width spans) and PII redaction. */
-class CurationScrubSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("curation-scrub")
-    .getOrCreate()
+class CurationScrubSpec extends AnyFunSuite with SharedSpark {
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Drift.tokenDrift against a scalar reimplementation (same smoothing,
   * exact integer selection order) plus the structural properties: a token
   * present only in one side drifts, a balanced token does not top the
   * list, and the exact-integer ordering matches the float ordering. */
-class DriftSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("drift-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DriftSpec extends AnyFunSuite with SharedSpark {
 
   private def scalarDrift(a: Seq[String], b: Seq[String], k: Int)
       : Seq[(String, Long, Long, BigInt)] = {

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** Dsir.topKByImportance against a scalar reimplementation (same hashes,
   * smoothing, fold order), plus the semantic contract: documents that
   * look like the target seed set rank above ones that don't. */
-class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("dsir-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class DsirSpec extends AnyFunSuite with SharedSpark {
 
   private def scalarWeights(docs: Seq[(Long, String, Boolean)],
                             buckets: Int): Map[Long, Double] = {

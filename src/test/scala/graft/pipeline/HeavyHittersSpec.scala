@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** HeavyHitters.frequentItems: exactness against brute force, the
   * threshold boundary (count == N/k excluded, one more included), and
   * partitioning invariance under adversarial spreads of a barely-heavy
   * item — the superset guarantee the two-pass design rests on. */
-class HeavyHittersSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("heavy-hitters-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class HeavyHittersSpec extends AnyFunSuite with SharedSpark {
 
   test("exact output at the threshold boundary, invariant to partitioning") {
     import spark.implicits._

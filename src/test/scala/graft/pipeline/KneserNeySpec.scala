@@ -1,19 +1,12 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** knBigramScore against a scalar Kneser–Ney reimplementation, plus the
   * model-level invariants: probabilities form a distribution per context,
   * and the continuation correction actually demotes context-locked words. */
-class KneserNeySpec extends AnyFunSuite {
-
-  private def session() = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("kn-spec")
-    .getOrCreate()
+class KneserNeySpec extends AnyFunSuite with SharedSpark {
 
   private val D = 0.75
 
@@ -44,32 +37,29 @@ class KneserNeySpec extends AnyFunSuite {
   }
 
   test("matches the scalar KN fold exactly; unscored docs kept at zero") {
-    val spark = session()
     import spark.implicits._
-    try {
-      val rnd = new scala.util.Random(5)
-      val vocab = Vector.tabulate(12)(i => s"w$i") ++ Vector("rare1", "rare2")
-      val docs = (1L to 60L).map { id =>
-        id -> Seq.fill(3 + rnd.nextInt(25))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      } :+ (99L -> "solo") // single word → no bigrams
-      val got = TextAnalysis.knBigramScore(docs.toDF("doc_id", "text"),
-          "doc_id", "text", topK = 10)
-        .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getDouble(2), r.getDouble(3))))
-        .toMap
-      val want = scalar(docs, topK = 10)
-      docs.foreach { case (id, _) =>
-        val (n, lsum) = want.getOrElse(id, (0, 0.0))
-        val (gn, glogp, gppl) = got(id)
-        assert(gn == n, s"doc $id n_bigrams")
-        if (n == 0) assert(glogp == 0.0 && gppl == 0.0, s"doc $id unscored")
-        else {
-          assert(math.abs(glogp - BigDecimal(lsum).setScale(6,
-            BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9, s"doc $id logp")
-          val ppl = math.exp(-lsum / n)
-          assert(math.abs(gppl - ppl) < 5e-7 * math.max(1.0, ppl), s"doc $id ppl")
-        }
+    val rnd = new scala.util.Random(5)
+    val vocab = Vector.tabulate(12)(i => s"w$i") ++ Vector("rare1", "rare2")
+    val docs = (1L to 60L).map { id =>
+      id -> Seq.fill(3 + rnd.nextInt(25))(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    } :+ (99L -> "solo") // single word → no bigrams
+    val got = TextAnalysis.knBigramScore(docs.toDF("doc_id", "text"),
+        "doc_id", "text", topK = 10)
+      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getDouble(2), r.getDouble(3))))
+      .toMap
+    val want = scalar(docs, topK = 10)
+    docs.foreach { case (id, _) =>
+      val (n, lsum) = want.getOrElse(id, (0, 0.0))
+      val (gn, glogp, gppl) = got(id)
+      assert(gn == n, s"doc $id n_bigrams")
+      if (n == 0) assert(glogp == 0.0 && gppl == 0.0, s"doc $id unscored")
+      else {
+        assert(math.abs(glogp - BigDecimal(lsum).setScale(6,
+          BigDecimal.RoundingMode.HALF_UP).toDouble) < 1e-9, s"doc $id logp")
+        val ppl = math.exp(-lsum / n)
+        assert(math.abs(gppl - ppl) < 5e-7 * math.max(1.0, ppl), s"doc $id ppl")
       }
-    } finally spark.stop()
+    }
   }
 
   test("KN is a proper conditional distribution and demotes context-locked words") {

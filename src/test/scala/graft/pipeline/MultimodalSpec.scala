@@ -1,12 +1,15 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.{GraftSession, SharedSpark}
 
 /** The pure-JVM media codecs behind the multimodal pipeline: WAV encode →
   * decode must be the identity on PCM16 samples (including chunk-walking
   * past extra RIFF chunks), and PNG encode → decode the identity on gray
   * rasters — the property the p12 oracle's formula-based check relies on. */
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with SharedSpark {
+
+  override protected def cpus = 2
 
   test("WAV roundtrip is the identity; extra RIFF chunks are skipped") {
     val samples = Array.tabulate(333)(i => ((i * 7919) % 65536) - 32768)
@@ -72,19 +75,13 @@ class MultimodalSpec extends AnyFunSuite {
     val sampled = (0 until frames.length by 2).map(frameSum)
     val expectMotion = sampled.sliding(2).collect { case Seq(a, b) => math.abs(b - a) }.sum
     // one-row DataFrame through the real operator
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("gvid-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val got = Multimodal.videoFrameFeatures(
-          Seq(Multimodal.MediaRow(id, "video/gvid", payload)).toDF(), stride = 2)
-        .head()
-      assert(got.getInt(1) == frames.length && got.getInt(2) == sampled.size)
-      assert(got.getInt(3) == w && got.getInt(4) == h)
-      assert(got.getLong(5) == sampled.sum && got.getLong(6) == expectMotion)
-    } finally spark.stop()
+    import spark.implicits._
+    val got = Multimodal.videoFrameFeatures(
+        Seq(Multimodal.MediaRow(id, "video/gvid", payload)).toDF(), stride = 2)
+      .head()
+    assert(got.getInt(1) == frames.length && got.getInt(2) == sampled.size)
+    assert(got.getInt(3) == w && got.getInt(4) == h)
+    assert(got.getLong(5) == sampled.sum && got.getLong(6) == expectMotion)
   }
 
   test("imageDhash: hand bits, re-encode invariance, and one-pixel locality") {
@@ -96,44 +93,38 @@ class MultimodalSpec extends AnyFunSuite {
     // one-pixel edit touches one sample cell → at most 2 adjacent bits
     val dent = Multimodal.encodePng(18, 16,
       (x, y) => if (x == 6 && y == 4) 0 else x * 10)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("dhash-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val got = Multimodal.imageDhash(Seq(
+    import spark.implicits._
+    val got = Multimodal.imageDhash(Seq(
+        Multimodal.MediaRow(1, "image/png", rising),
+        Multimodal.MediaRow(2, "image/png", falling),
+        Multimodal.MediaRow(3, "image/png", rising), // identical bytes
+        Multimodal.MediaRow(4, "image/png", dent))
+      .toDF()).collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getString(3)))
+      .toMap
+    assert(got(1L) == ((18, 16, "ff" * 8)))
+    assert(got(2L) == ((18, 16, "00" * 8)))
+    // identical pixels → identical hash (dedup-by-hash groups them)
+    assert(got(3L)._3 == got(1L)._3)
+    // locality: hamming(rising, dent) <= 2 and > 0
+    def bits(hx: String) = hx.grouped(2)
+      .map(b => Integer.parseInt(b, 16)).toSeq
+    val ham = bits(got(1L)._3).zip(bits(got(4L)._3))
+      .map { case (a, b) => Integer.bitCount(a ^ b) }.sum
+    assert(ham >= 1 && ham <= 2, s"hamming $ham")
+
+    // banded near-dup pairs: the dent pairs with its original (and with
+    // the identical copy 3); the opposite gradient shares no band with
+    // anything, so it never even becomes a candidate
+    val pairs = Multimodal.dhashNearDupPairs(
+        Multimodal.imageDhash(Seq(
           Multimodal.MediaRow(1, "image/png", rising),
           Multimodal.MediaRow(2, "image/png", falling),
-          Multimodal.MediaRow(3, "image/png", rising), // identical bytes
-          Multimodal.MediaRow(4, "image/png", dent))
-        .toDF()).collect()
-        .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getString(3)))
-        .toMap
-      assert(got(1L) == ((18, 16, "ff" * 8)))
-      assert(got(2L) == ((18, 16, "00" * 8)))
-      // identical pixels → identical hash (dedup-by-hash groups them)
-      assert(got(3L)._3 == got(1L)._3)
-      // locality: hamming(rising, dent) <= 2 and > 0
-      def bits(hx: String) = hx.grouped(2)
-        .map(b => Integer.parseInt(b, 16)).toSeq
-      val ham = bits(got(1L)._3).zip(bits(got(4L)._3))
-        .map { case (a, b) => Integer.bitCount(a ^ b) }.sum
-      assert(ham >= 1 && ham <= 2, s"hamming $ham")
-
-      // banded near-dup pairs: the dent pairs with its original (and with
-      // the identical copy 3); the opposite gradient shares no band with
-      // anything, so it never even becomes a candidate
-      val pairs = Multimodal.dhashNearDupPairs(
-          Multimodal.imageDhash(Seq(
-            Multimodal.MediaRow(1, "image/png", rising),
-            Multimodal.MediaRow(2, "image/png", falling),
-            Multimodal.MediaRow(3, "image/png", rising),
-            Multimodal.MediaRow(4, "image/png", dent)).toDF()),
-          maxDist = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(pairs == Set((1L, 3L, 0), (1L, 4L, ham), (3L, 4L, ham)), pairs)
-    } finally spark.stop()
+          Multimodal.MediaRow(3, "image/png", rising),
+          Multimodal.MediaRow(4, "image/png", dent)).toDF()),
+        maxDist = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(pairs == Set((1L, 3L, 0), (1L, 4L, ham), (3L, 4L, ham)), pairs)
   }
 
   test("audioFingerprint: hand bits on rising/falling energy; identical WAVs group") {
@@ -143,22 +134,16 @@ class MultimodalSpec extends AnyFunSuite {
       Array.tabulate(64)(i => (i / 16 + 1) * 100), 8000)
     val falling = Multimodal.encodeWav(
       Array.tabulate(64)(i => (4 - i / 16) * 100), 8000)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("audiofp-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val got = Multimodal.audioFingerprint(Seq(
-          Multimodal.MediaRow(1, "audio/wav", rising),
-          Multimodal.MediaRow(2, "audio/wav", falling),
-          Multimodal.MediaRow(3, "audio/wav", rising))
-        .toDF(), nWindows = 4).collect()
-        .map(r => r.getLong(0) -> (r.getInt(1), r.getString(3))).toMap
-      assert(got(1L) == ((64, "07")))
-      assert(got(2L) == ((64, "00")))
-      assert(got(3L)._2 == got(1L)._2, "identical samples must group")
-    } finally spark.stop()
+    import spark.implicits._
+    val got = Multimodal.audioFingerprint(Seq(
+        Multimodal.MediaRow(1, "audio/wav", rising),
+        Multimodal.MediaRow(2, "audio/wav", falling),
+        Multimodal.MediaRow(3, "audio/wav", rising))
+      .toDF(), nWindows = 4).collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getString(3))).toMap
+    assert(got(1L) == ((64, "07")))
+    assert(got(2L) == ((64, "00")))
+    assert(got(3L)._2 == got(1L)._2, "identical samples must group")
   }
 
   test("resizeFeatures: hand-computed nearest-neighbor resample digests") {
@@ -167,20 +152,14 @@ class MultimodalSpec extends AnyFunSuite {
     val png = Multimodal.encodePng(4, 2, (x, y) => x * 10 + y)
     def md5hex(s: String) = java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("resize-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "image/png", png)).toDF()
-      val got = Multimodal.resizeFeatures(media, outW = 2, outH = 1).collect()
-      assert(got.length == 1)
-      val r = got.head
-      assert((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)) == ((4, 2, 2, 1)))
-      assert(r.getLong(5) == 20L)
-      assert(r.getString(6) == md5hex("0,20"))
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "image/png", png)).toDF()
+    val got = Multimodal.resizeFeatures(media, outW = 2, outH = 1).collect()
+    assert(got.length == 1)
+    val r = got.head
+    assert((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4)) == ((4, 2, 2, 1)))
+    assert(r.getLong(5) == 20L)
+    assert(r.getString(6) == md5hex("0,20"))
   }
 
   test("resolveImageNearDups: a 3-image chain (A~B, B~C, A!~C) resolves to one canonical") {
@@ -193,24 +172,18 @@ class MultimodalSpec extends AnyFunSuite {
     val a = img(Set.empty)
     val b = img(Set((0, 0)))
     val c = img(Set((0, 0), (0, 2), (0, 4), (0, 6)))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("imgresolve-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "image/png", a),
-        Multimodal.MediaRow(2, "image/png", b),
-        Multimodal.MediaRow(3, "image/png", c)).toDF()
-      val pairs = Multimodal.dhashNearDupPairs(
-          Multimodal.imageDhash(media), maxDist = 3).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
-      assert(pairs.toSeq == Seq((1L, 2L, 1), (2L, 3L, 3)),
-        s"expected exactly the chain pairs, got ${pairs.toSeq}")
-      val got = Multimodal.resolveImageNearDups(media, maxDist = 3).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sorted
-      assert(got.toSeq == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false)))
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "image/png", a),
+      Multimodal.MediaRow(2, "image/png", b),
+      Multimodal.MediaRow(3, "image/png", c)).toDF()
+    val pairs = Multimodal.dhashNearDupPairs(
+        Multimodal.imageDhash(media), maxDist = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
+    assert(pairs.toSeq == Seq((1L, 2L, 1), (2L, 3L, 3)),
+      s"expected exactly the chain pairs, got ${pairs.toSeq}")
+    val got = Multimodal.resolveImageNearDups(media, maxDist = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sorted
+    assert(got.toSeq == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false)))
   }
 
   test("audioNearDupPairs catches a one-window perturbation exact grouping provably misses") {
@@ -221,21 +194,15 @@ class MultimodalSpec extends AnyFunSuite {
       Array.tabulate(132)(i => (i / 4) * 10), 8000)
     val pert = Multimodal.encodeWav(
       Array.tabulate(132)(i => if (i / 4 == 5) 0 else (i / 4) * 10), 8000)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("audiodup-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "audio/wav", base),
-        Multimodal.MediaRow(2, "audio/wav", pert)).toDF()
-      val fps = Multimodal.audioFingerprint(media, nWindows = 33).collect()
-        .map(r => r.getLong(0) -> r.getString(3)).toMap
-      assert(fps(1L) != fps(2L), "exact grouping must miss the perturbation")
-      val pairs = Multimodal.audioNearDupPairs(media, nWindows = 33, maxDist = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      assert(pairs.toSeq == Seq((1L, 2L, 1)))
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "audio/wav", base),
+      Multimodal.MediaRow(2, "audio/wav", pert)).toDF()
+    val fps = Multimodal.audioFingerprint(media, nWindows = 33).collect()
+      .map(r => r.getLong(0) -> r.getString(3)).toMap
+    assert(fps(1L) != fps(2L), "exact grouping must miss the perturbation")
+    val pairs = Multimodal.audioNearDupPairs(media, nWindows = 33, maxDist = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(pairs.toSeq == Seq((1L, 2L, 1)))
   }
 
   test("resolveAudioNearDups: a 3-clip chain (A~B, A~C, B!~C) resolves to one canonical") {
@@ -245,68 +212,53 @@ class MultimodalSpec extends AnyFunSuite {
     // only transitive resolution through A connects B and C.
     def clip(zeroed: Set[Int]) = Multimodal.encodeWav(
       Array.tabulate(130)(i => if (zeroed(i / 2)) 0 else (i / 2) * 10), 8000)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("audioresolve-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "audio/wav", clip(Set.empty)),
-        Multimodal.MediaRow(2, "audio/wav", clip(Set(5, 7))),
-        Multimodal.MediaRow(3, "audio/wav", clip(Set(10, 12)))).toDF()
-      val pairs = Multimodal.audioNearDupPairs(media, nWindows = 65,
-          maxDist = 3).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
-      assert(pairs.toSeq == Seq((1L, 2L, 2), (1L, 3L, 2)),
-        s"expected exactly the chain pairs, got ${pairs.toSeq}")
-      val got = Multimodal.resolveAudioNearDups(media, nWindows = 65,
-          maxDist = 3).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sorted
-      assert(got.toSeq == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false)))
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "audio/wav", clip(Set.empty)),
+      Multimodal.MediaRow(2, "audio/wav", clip(Set(5, 7))),
+      Multimodal.MediaRow(3, "audio/wav", clip(Set(10, 12)))).toDF()
+    val pairs = Multimodal.audioNearDupPairs(media, nWindows = 65,
+        maxDist = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
+    assert(pairs.toSeq == Seq((1L, 2L, 2), (1L, 3L, 2)),
+      s"expected exactly the chain pairs, got ${pairs.toSeq}")
+    val got = Multimodal.resolveAudioNearDups(media, nWindows = 65,
+        maxDist = 3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sorted
+    assert(got.toSeq == Seq((1L, 1L, true), (2L, 1L, false), (3L, 1L, false)))
   }
 
   test("audio near-dup takes nWindows 33 or 65 only") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("audiowindows-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "audio/wav",
-        Multimodal.synthWavAsset(1))).toDF()
-      val pairs = intercept[IllegalArgumentException](
-        Multimodal.audioNearDupPairs(media, nWindows = 97, maxDist = 3))
-      assert(pairs.getMessage.contains("nWindows 33 or 65"), pairs.getMessage)
-      val resolve = intercept[IllegalArgumentException](
-        Multimodal.resolveAudioNearDups(media, nWindows = 97, maxDist = 3))
-      assert(resolve.getMessage.contains("nWindows 33 or 65"), resolve.getMessage)
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "audio/wav",
+      Multimodal.synthWavAsset(1))).toDF()
+    val pairs = intercept[IllegalArgumentException](
+      Multimodal.audioNearDupPairs(media, nWindows = 97, maxDist = 3))
+    assert(pairs.getMessage.contains("nWindows 33 or 65"), pairs.getMessage)
+    val resolve = intercept[IllegalArgumentException](
+      Multimodal.resolveAudioNearDups(media, nWindows = 97, maxDist = 3))
+    assert(resolve.getMessage.contains("nWindows 33 or 65"), resolve.getMessage)
   }
 
   test("resolve paths: freeing the verdict leaves the persisted RDDs as they were") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("resolveleak-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      // identical copies make a multi-member group, so both the star
-      // edges and the representative pairs feed the components
-      val images = Seq(1L, 2L, 3L, 4L).map(id => Multimodal.MediaRow(id,
-        "image/png", Multimodal.synthPngAsset(if (id == 2L) 1L else id))).toDF()
-      val clips = Seq(1L, 2L, 3L).map(id => Multimodal.MediaRow(id,
-        "audio/wav", Multimodal.synthWavAsset(if (id == 3L) 1L else id))).toDF()
-      def persisted = spark.sparkContext.getPersistentRDDs.keySet
-      val before = persisted
-      for (verdict <- Seq(() => Multimodal.resolveImageNearDups(images, maxDist = 3),
-          () => Multimodal.resolveAudioNearDups(clips, nWindows = 65, maxDist = 3))) {
-        val v = verdict()
-        assert(v.count() > 0)
-        graft.util.Checkpoints.free(v)
-        assert(persisted == before, s"left persisted: ${persisted -- before}")
-      }
-    } finally spark.stop()
+    // start from nothing persisted, so the suite's earlier results cannot
+    // be cleaned up mid-test and the check below stays exact
+    GraftSession.reset(spark)
+    import spark.implicits._
+    // identical copies make a multi-member group, so both the star
+    // edges and the representative pairs feed the components
+    val images = Seq(1L, 2L, 3L, 4L).map(id => Multimodal.MediaRow(id,
+      "image/png", Multimodal.synthPngAsset(if (id == 2L) 1L else id))).toDF()
+    val clips = Seq(1L, 2L, 3L).map(id => Multimodal.MediaRow(id,
+      "audio/wav", Multimodal.synthWavAsset(if (id == 3L) 1L else id))).toDF()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
+    for (verdict <- Seq(() => Multimodal.resolveImageNearDups(images, maxDist = 3),
+        () => Multimodal.resolveAudioNearDups(clips, nWindows = 65, maxDist = 3))) {
+      val v = verdict()
+      assert(v.count() > 0)
+      graft.util.Checkpoints.free(v)
+      assert(persisted == before, s"left persisted: ${persisted -- before}")
+    }
   }
 
   test("videoNearDupPairs catches a one-frame dent the exact sequence fingerprint misses") {
@@ -327,23 +279,17 @@ class MultimodalSpec extends AnyFunSuite {
     val a = Multimodal.encodeVideo(frames(Seq(0, 1, 2), dent = false), fps = 4)
     val b = Multimodal.encodeVideo(frames(Seq(0, 1, 2), dent = true), fps = 8)
     val c = Multimodal.encodeVideo(frames(Seq(2, 0, 1), dent = false), fps = 4)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("videodup-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "video/gvid", a),
-        Multimodal.MediaRow(2, "video/gvid", b),
-        Multimodal.MediaRow(3, "video/gvid", c)).toDF()
-      val fps = Multimodal.videoSeqFingerprint(media, stride = 1).collect()
-        .map(r => r.getLong(0) -> r.getString(3)).toMap
-      assert(fps(1L) != fps(2L), "exact sequence grouping must miss the dent")
-      val pairs = Multimodal.videoNearDupPairs(media, stride = 1, maxTotal = 6)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      assert(pairs.toSeq == Seq((1L, 2L, 1)),
-        s"expected only the dented pair at distance 1, got ${pairs.toSeq}")
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "video/gvid", a),
+      Multimodal.MediaRow(2, "video/gvid", b),
+      Multimodal.MediaRow(3, "video/gvid", c)).toDF()
+    val fps = Multimodal.videoSeqFingerprint(media, stride = 1).collect()
+      .map(r => r.getLong(0) -> r.getString(3)).toMap
+    assert(fps(1L) != fps(2L), "exact sequence grouping must miss the dent")
+    val pairs = Multimodal.videoNearDupPairs(media, stride = 1, maxTotal = 6)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    assert(pairs.toSeq == Seq((1L, 2L, 1)),
+      s"expected only the dented pair at distance 1, got ${pairs.toSeq}")
   }
 
   test("videoShiftNearDupPairs catches a trimmed copy that p92 AND p96 provably miss") {
@@ -357,27 +303,21 @@ class MultimodalSpec extends AnyFunSuite {
     val aFrames = (0 until 6).map(frame)
     val a = Multimodal.encodeVideo(aFrames, fps = 4)
     val b = Multimodal.encodeVideo(aFrames.drop(1), fps = 8)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("videoshift-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "video/gvid", a),
-        Multimodal.MediaRow(2, "video/gvid", b)).toDF()
-      val fps = Multimodal.videoSeqFingerprint(media, stride = 1).collect()
-        .map(r => r.getLong(0) -> r.getString(3)).toMap
-      assert(fps(1L) != fps(2L), "p92 exact sequence grouping must miss a trim")
-      val aligned = Multimodal.videoNearDupPairs(media, stride = 1,
-        maxTotal = 64).collect()
-      assert(aligned.isEmpty,
-        "p96's aligned-index contract must miss a trimmed copy")
-      val shifted = Multimodal.videoShiftNearDupPairs(media, stride = 1,
-          shingleK = 2, minAligned = 4)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      assert(shifted.toSeq == Seq((1L, 2L, -1, 5L)),
-        s"expected the trimmed pair aligned at offset -1 over 5 frames, got ${shifted.toSeq}")
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "video/gvid", a),
+      Multimodal.MediaRow(2, "video/gvid", b)).toDF()
+    val fps = Multimodal.videoSeqFingerprint(media, stride = 1).collect()
+      .map(r => r.getLong(0) -> r.getString(3)).toMap
+    assert(fps(1L) != fps(2L), "p92 exact sequence grouping must miss a trim")
+    val aligned = Multimodal.videoNearDupPairs(media, stride = 1,
+      maxTotal = 64).collect()
+    assert(aligned.isEmpty,
+      "p96's aligned-index contract must miss a trimmed copy")
+    val shifted = Multimodal.videoShiftNearDupPairs(media, stride = 1,
+        shingleK = 2, minAligned = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
+    assert(shifted.toSeq == Seq((1L, 2L, -1, 5L)),
+      s"expected the trimmed pair aligned at offset -1 over 5 frames, got ${shifted.toSeq}")
   }
 
   test("videoSeqFingerprint: re-encode groups, reorder does not") {
@@ -388,21 +328,15 @@ class MultimodalSpec extends AnyFunSuite {
     val reordered = Multimodal.encodeVideo(frames.reverse, fps = 4)
     assert(!java.util.Arrays.equals(origBytes, reencBytes),
       "containers must differ at byte level — that is what exact dedup misses")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .appName("videofp-spec").getOrCreate()
-    try {
-      import spark.implicits._
-      val media = Seq(Multimodal.MediaRow(1, "video/gvid", origBytes),
-        Multimodal.MediaRow(2, "video/gvid", reencBytes),
-        Multimodal.MediaRow(3, "video/gvid", reordered)).toDF()
-      val got = Multimodal.videoSeqFingerprint(media, stride = 1).collect()
-        .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getString(3)))
-        .toMap
-      assert(got(1L)._1 == 3 && got(1L)._2 == 3)
-      assert(got(1L)._3 == got(2L)._3, "re-encoded identical frames must group")
-      assert(got(1L)._3 != got(3L)._3, "the fold must be order-sensitive")
-    } finally spark.stop()
+    import spark.implicits._
+    val media = Seq(Multimodal.MediaRow(1, "video/gvid", origBytes),
+      Multimodal.MediaRow(2, "video/gvid", reencBytes),
+      Multimodal.MediaRow(3, "video/gvid", reordered)).toDF()
+    val got = Multimodal.videoSeqFingerprint(media, stride = 1).collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getInt(2), r.getString(3)))
+      .toMap
+    assert(got(1L)._1 == 3 && got(1L)._2 == 3)
+    assert(got(1L)._3 == got(2L)._3, "re-encoded identical frames must group")
+    assert(got(1L)._3 != got(3L)._3, "the fold must be order-sensitive")
   }
 }

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Dedup.paragraphDedup against a scalar reimplementation: first
   * occurrence (by doc_id, position) survives, later exact repeats drop
   * regardless of position, documents rebuild in paragraph order, and a
   * fully-deduplicated document hashes as the empty string. */
-class ParagraphDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("para-dedup-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ParagraphDedupSpec extends AnyFunSuite with SharedSpark {
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -1,141 +1,122 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** Quality contracts for the probabilistic pipeline operators, checked
   * against their exact counterparts on the sf0.001 corpus. */
-class PipelineQualitySpec extends AnyFunSuite {
+class PipelineQualitySpec extends AnyFunSuite with SharedSpark {
+
+  override protected def cpus = 8
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def withSpark[T](f: SparkSession => T): T = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("pipeline-quality")
-      .getOrCreate()
-    try f(spark) finally spark.stop()
-  }
-
   test("minhash LSH recalls nearly all exact-Jaccard near-dup pairs") {
-    withSpark { spark =>
-      val docs = graft.Tables.documents(spark, sf).select("doc_id", "text", "lang")
-      val w = filter(split(col("text"), " "), x => x =!= "")
-      val corpus = docs.unionByName(docs.select((col("doc_id") + 1000000L).as("doc_id"),
-        array_join(slice(w, lit(1), greatest(size(w) - 3, lit(1))), " ").as("text"),
-        col("lang")))
-      // exact pairs, unbucketed (single global bucket = ground truth)
-      val exact = Dedup.ngramJaccardPairs(corpus.withColumn("one", lit(1)),
-          "doc_id", "text", "one", 2, 0.8)
-        .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val lsh = Dedup.minhashLshPairs(corpus, "doc_id", "text", 2, 64, 4, 0.8)
-        .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(exact.nonEmpty)
-      // LSH output is verified with exact Jaccard → no false positives
-      assert(lsh.subsetOf(exact), s"false positives: ${lsh.diff(exact).take(5)}")
-      val recall = lsh.size.toDouble / exact.size
-      info(s"exact=${exact.size} lsh=${lsh.size} recall=$recall")
-      // 16 bands × 4 rows at J>=0.8: theoretical recall >99.9%
-      assert(recall >= 0.95, s"recall $recall below contract")
-    }
+    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text", "lang")
+    val w = filter(split(col("text"), " "), x => x =!= "")
+    val corpus = docs.unionByName(docs.select((col("doc_id") + 1000000L).as("doc_id"),
+      array_join(slice(w, lit(1), greatest(size(w) - 3, lit(1))), " ").as("text"),
+      col("lang")))
+    // exact pairs, unbucketed (single global bucket = ground truth)
+    val exact = Dedup.ngramJaccardPairs(corpus.withColumn("one", lit(1)),
+        "doc_id", "text", "one", 2, 0.8)
+      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val lsh = Dedup.minhashLshPairs(corpus, "doc_id", "text", 2, 64, 4, 0.8)
+      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(exact.nonEmpty)
+    // LSH output is verified with exact Jaccard → no false positives
+    assert(lsh.subsetOf(exact), s"false positives: ${lsh.diff(exact).take(5)}")
+    val recall = lsh.size.toDouble / exact.size
+    info(s"exact=${exact.size} lsh=${lsh.size} recall=$recall")
+    // 16 bands × 4 rows at J>=0.8: theoretical recall >99.9%
+    assert(recall >= 0.95, s"recall $recall below contract")
   }
 
   test("LSH ANN top-k agrees with brute force on rank-1 for most queries") {
-    withSpark { spark =>
-      val e = graft.Tables.embeddings(spark, sf)
-      val q = e.where(col("vec_id") < 20)
-      val exact1 = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", 1)
-        .select("query_id", "neighbor_id", "sim").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      val lsh = Similarity.lshTopK(e, q, "vec_id", "embedding", 1, 8)
-        .select("query_id", "neighbor_id", "sim").collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      // structural: LSH never reports a better-than-exact similarity
-      lsh.foreach { case (qid, (_, sim)) =>
-        assert(sim <= exact1(qid)._2 + 1e-9,
-          s"query $qid: lsh sim $sim beats exact ${exact1(qid)._2}")
-      }
-      info(s"rank-1 agreement: ${lsh.count { case (k, v) => exact1.get(k).contains(v) }}/${lsh.size}")
+    val e = graft.Tables.embeddings(spark, sf)
+    val q = e.where(col("vec_id") < 20)
+    val exact1 = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", 1)
+      .select("query_id", "neighbor_id", "sim").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val lsh = Similarity.lshTopK(e, q, "vec_id", "embedding", 1, 8)
+      .select("query_id", "neighbor_id", "sim").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    // structural: LSH never reports a better-than-exact similarity
+    lsh.foreach { case (qid, (_, sim)) =>
+      assert(sim <= exact1(qid)._2 + 1e-9,
+        s"query $qid: lsh sim $sim beats exact ${exact1(qid)._2}")
     }
+    info(s"rank-1 agreement: ${lsh.count { case (k, v) => exact1.get(k).contains(v) }}/${lsh.size}")
   }
 
   test("IVF ANN: recall@10 vs brute force, and never better-than-exact sims") {
-    withSpark { spark =>
-      val e = graft.Tables.embeddings(spark, sf)
-      val q = e.where(col("vec_id") < 20)
-      def topSet(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exact = topSet(Similarity.bruteForceTopK(e, q, "vec_id", "embedding", 10))
-      val ivf = topSet(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 8))
-      val recall = ivf.intersect(exact).size.toDouble / exact.size
-      info(s"IVF recall@10 = $recall (${ivf.intersect(exact).size}/${exact.size})")
-      // random 96-dim embeddings are a worst case for coarse quantization;
-      // probing half the cells must still recover a solid majority
-      assert(recall >= 0.5, s"IVF recall $recall below contract")
-      assert(ivf.size == exact.size) // k results per query regardless
-    }
+    val e = graft.Tables.embeddings(spark, sf)
+    val q = e.where(col("vec_id") < 20)
+    def topSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = topSet(Similarity.bruteForceTopK(e, q, "vec_id", "embedding", 10))
+    val ivf = topSet(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 8))
+    val recall = ivf.intersect(exact).size.toDouble / exact.size
+    info(s"IVF recall@10 = $recall (${ivf.intersect(exact).size}/${exact.size})")
+    // random 96-dim embeddings are a worst case for coarse quantization;
+    // probing half the cells must still recover a solid majority
+    assert(recall >= 0.5, s"IVF recall $recall below contract")
+    assert(ivf.size == exact.size) // k results per query regardless
   }
 
   test("IVF+SQ8: near-identical to full-precision IVF; similarities within the quantization step") {
-    withSpark { spark =>
-      val e = graft.Tables.embeddings(spark, sf)
-      val q = e.where(col("vec_id") < 20)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "neighbor_id", "sim").collect()
-          .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-      val full = rows(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 8))
-      val sq8 = rows(Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 8, dims = e.head.getSeq[Float](1).length))
-      // same candidate sets (identical cells/probes), so the retrieved
-      // pairs overlap near-perfectly; quantization can only swap borderline
-      // ranks
-      val overlap = sq8.keySet.intersect(full.keySet).size.toDouble / full.size
-      info(s"IVF+SQ8 vs IVF pair overlap = $overlap")
-      // measured 0.995 on the current synth corpus; 0.95 leaves headroom
-      // for testdata regeneration while still pinning the published claim
-      assert(overlap >= 0.95, s"overlap $overlap")
-      // on shared pairs, the SQ8 similarity sits within a coarse bound of
-      // the full-precision one (64 dims x half-step per dim)
-      sq8.keySet.intersect(full.keySet).foreach { k =>
-        assert(math.abs(sq8(k) - full(k)) < 0.05, s"$k: ${sq8(k)} vs ${full(k)}")
-      }
+    val e = graft.Tables.embeddings(spark, sf)
+    val q = e.where(col("vec_id") < 20)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "sim").collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val full = rows(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 8))
+    val sq8 = rows(Similarity.ivfSq8TopK(e, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 8, dims = e.head.getSeq[Float](1).length))
+    // same candidate sets (identical cells/probes), so the retrieved
+    // pairs overlap near-perfectly; quantization can only swap borderline
+    // ranks
+    val overlap = sq8.keySet.intersect(full.keySet).size.toDouble / full.size
+    info(s"IVF+SQ8 vs IVF pair overlap = $overlap")
+    // measured 0.995 on the current synth corpus; 0.95 leaves headroom
+    // for testdata regeneration while still pinning the published claim
+    assert(overlap >= 0.95, s"overlap $overlap")
+    // on shared pairs, the SQ8 similarity sits within a coarse bound of
+    // the full-precision one (64 dims x half-step per dim)
+    sq8.keySet.intersect(full.keySet).foreach { k =>
+      assert(math.abs(sq8(k) - full(k)) < 0.05, s"$k: ${sq8(k)} vs ${full(k)}")
     }
   }
 
   test("IVF+PQ: codes reconstruct well enough to keep most of full-precision IVF's pairs") {
-    withSpark { spark =>
-      val e = graft.Tables.embeddings(spark, sf)
-      val q = e.where(col("vec_id") < 20)
-      val dims = e.head.getSeq[Float](1).length
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "neighbor_id", "sim").collect()
-          .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-      val full = rows(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 8))
-      val pq = rows(Similarity.ivfPqTopK(e, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 8, m = 16, ksub = 64, dims = dims))
-      assert(pq.size == full.size) // k per query regardless of compression
-      // PQ is far lossier than SQ8 by design (m sub-codes per vector vs
-      // 1 byte/dim) and UNIFORM RANDOM embeddings are its adversarial
-      // case — codebooks shrink toward subspace means, so ranking decays
-      // much faster than on real clustered embeddings (m=8, ksub=16
-      // measured 0.39 here; m=16, ksub=64 — 12 bytes/vector, 21x —
-      // measured 0.67). The contract pins the majority bound at the
-      // latter config
-      val overlap = pq.keySet.intersect(full.keySet).size.toDouble / full.size
-      info(s"IVF+PQ vs IVF pair overlap = $overlap")
-      assert(overlap >= 0.5, s"overlap $overlap below contract")
-      // reconstructed similarities stay in a sane band on shared pairs
-      pq.keySet.intersect(full.keySet).foreach { k =>
-        assert(math.abs(pq(k) - full(k)) < 0.5, s"$k: ${pq(k)} vs ${full(k)}")
-      }
+    val e = graft.Tables.embeddings(spark, sf)
+    val q = e.where(col("vec_id") < 20)
+    val dims = e.head.getSeq[Float](1).length
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "sim").collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val full = rows(Similarity.ivfTopK(e, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 8))
+    val pq = rows(Similarity.ivfPqTopK(e, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 8, m = 16, ksub = 64, dims = dims))
+    assert(pq.size == full.size) // k per query regardless of compression
+    // PQ is far lossier than SQ8 by design (m sub-codes per vector vs
+    // 1 byte/dim) and UNIFORM RANDOM embeddings are its adversarial
+    // case — codebooks shrink toward subspace means, so ranking decays
+    // much faster than on real clustered embeddings (m=8, ksub=16
+    // measured 0.39 here; m=16, ksub=64 — 12 bytes/vector, 21x —
+    // measured 0.67). The contract pins the majority bound at the
+    // latter config
+    val overlap = pq.keySet.intersect(full.keySet).size.toDouble / full.size
+    info(s"IVF+PQ vs IVF pair overlap = $overlap")
+    assert(overlap >= 0.5, s"overlap $overlap below contract")
+    // reconstructed similarities stay in a sane band on shared pairs
+    pq.keySet.intersect(full.keySet).foreach { k =>
+      assert(math.abs(pq(k) - full(k)) < 0.5, s"$k: ${pq(k)} vs ${full(k)}")
     }
   }
 
@@ -144,92 +125,86 @@ class PipelineQualitySpec extends AnyFunSuite {
     // cluster structure, residual energy is small, so the same code
     // budget buys finer resolution. Uniform-random corpora hide this
     // (residual ≈ vector); a CLUSTERED corpus shows it.
-    withSpark { spark =>
-      import spark.implicits._
-      val rnd = new scala.util.Random(5)
-      val dims = 16
-      val centers = Array.fill(16)(Array.fill(dims)((rnd.nextDouble() * 10 - 5).toFloat))
-      val vecs = (1L to 500L).map { id =>
-        val c = centers(rnd.nextInt(centers.length))
-        (id, c.map(x => x + (rnd.nextGaussian() * 0.3).toFloat))
-      }.toDF("vec_id", "embedding")
-      val q = vecs.where(col("vec_id") < 20)
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // nprobe = nlist ⇒ every variant sees ALL candidates: overlap
-      // differences measure quantization fidelity only
-      val full = rows(Similarity.ivfTopK(vecs, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 16))
-      val direct = rows(Similarity.ivfPqTopK(vecs, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 16, m = 8, ksub = 16, dims = dims))
-      val residual = rows(Similarity.ivfPqResidualTopK(vecs, q, "vec_id", "embedding", 10,
-        nlist = 16, nprobe = 16, m = 8, ksub = 16, dims = dims))
-      val od = direct.intersect(full).size.toDouble / full.size
-      val or = residual.intersect(full).size.toDouble / full.size
-      info(s"direct PQ overlap = $od, residual PQ overlap = $or")
-      assert(or > od, s"residual ($or) should beat direct ($od) on clustered data")
-      assert(or >= 0.6, s"residual overlap $or below contract")
-    }
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val dims = 16
+    val centers = Array.fill(16)(Array.fill(dims)((rnd.nextDouble() * 10 - 5).toFloat))
+    val vecs = (1L to 500L).map { id =>
+      val c = centers(rnd.nextInt(centers.length))
+      (id, c.map(x => x + (rnd.nextGaussian() * 0.3).toFloat))
+    }.toDF("vec_id", "embedding")
+    val q = vecs.where(col("vec_id") < 20)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // nprobe = nlist ⇒ every variant sees ALL candidates: overlap
+    // differences measure quantization fidelity only
+    val full = rows(Similarity.ivfTopK(vecs, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 16))
+    val direct = rows(Similarity.ivfPqTopK(vecs, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 16, m = 8, ksub = 16, dims = dims))
+    val residual = rows(Similarity.ivfPqResidualTopK(vecs, q, "vec_id", "embedding", 10,
+      nlist = 16, nprobe = 16, m = 8, ksub = 16, dims = dims))
+    val od = direct.intersect(full).size.toDouble / full.size
+    val or = residual.intersect(full).size.toDouble / full.size
+    info(s"direct PQ overlap = $od, residual PQ overlap = $or")
+    assert(or > od, s"residual ($or) should beat direct ($od) on clustered data")
+    assert(or >= 0.6, s"residual overlap $or below contract")
   }
 
   test("simhash pairs are within the declared Hamming bound and symmetric-free") {
-    withSpark { spark =>
-      val docs = graft.Tables.documents(spark, sf).select("doc_id", "text", "lang")
-      val pairs = Dedup.simhashPairs(docs.unionByName(
-          docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"), col("lang"))),
-          "doc_id", "text", 3)
-        .collect()
-      assert(pairs.nonEmpty)
-      pairs.foreach { r =>
-        assert(r.getAs[Int]("hamming") <= 3)
-        assert(r.getAs[Long]("a_id") < r.getAs[Long]("b_id"))
-      }
-      // identical texts hash identically: every (doc, copy) pair at distance 0
-      val zero = pairs.count(_.getAs[Int]("hamming") == 0)
-      assert(zero >= 500, s"expected all 500 identical-copy pairs at distance 0, got $zero")
+    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text", "lang")
+    val pairs = Dedup.simhashPairs(docs.unionByName(
+        docs.select((col("doc_id") + 1000000L).as("doc_id"), col("text"), col("lang"))),
+        "doc_id", "text", 3)
+      .collect()
+    assert(pairs.nonEmpty)
+    pairs.foreach { r =>
+      assert(r.getAs[Int]("hamming") <= 3)
+      assert(r.getAs[Long]("a_id") < r.getAs[Long]("b_id"))
     }
+    // identical texts hash identically: every (doc, copy) pair at distance 0
+    val zero = pairs.count(_.getAs[Int]("hamming") == 0)
+    assert(zero >= 500, s"expected all 500 identical-copy pairs at distance 0, got $zero")
   }
 
   test("containment join is exact: matches brute-force, catches what Jaccard misses") {
     // The pigeonhole prefix + size + positional filters in containmentJoin
     // claim zero false negatives for the ASYMMETRIC measure. Stress with
     // short probes cut from long docs (containment ≈ 1, Jaccard ≈ 0).
-    withSpark { spark =>
-      import spark.implicits._
-      val rnd = new scala.util.Random(99)
-      val vocab = Vector.tabulate(30)(i => s"w$i")
-      def doc(len: Int): String =
-        Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      val corpus = (1 to 80).map(i => (i.toLong, doc(30 + rnd.nextInt(60))))
-      // probes: leading words of every 4th doc (true quotes), plus noise
-      val probes = corpus.collect { case (id, t) if id % 4 == 0 =>
-        (id + 5000L, t.split(" ").take(8 + rnd.nextInt(6)).mkString(" "))
-      } ++ (1 to 10).map(i => (9000L + i, doc(10)))
-      val got = Dedup.containmentJoin(probes.toDF("doc_id", "text"),
-          corpus.toDF("doc_id", "text"), "doc_id", "text", 3, 0.8)
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-      def grams(t: String): Set[String] =
-        t.split(" ").filter(_.nonEmpty).sliding(3).filter(_.length == 3)
-          .map(_.mkString(" ")).toSet
-      val want = (for {
-        (qi, qt) <- probes; (ci, ct) <- corpus
-        qg = grams(qt); cg = grams(ct)
-        if qg.nonEmpty && cg.nonEmpty && qi != ci
-        c = (qg & cg).size.toDouble / qg.size
-        r = BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        if r >= 0.8
-      } yield ((qi, ci), r)).toMap
-      assert(want.nonEmpty, "fixture generated no qualifying pairs")
-      // every true quote's source must be present — the asymmetric catch
-      assert(corpus.collect { case (id, _) if id % 4 == 0 => id }
-        .forall(id => want.contains((id + 5000L, id))))
-      assert(got.keySet == want.keySet,
-        s"missing=${(want.keySet -- got.keySet).take(5)} " +
-          s"extra=${(got.keySet -- want.keySet).take(5)}")
-      want.foreach { case (k, c) =>
-        assert(math.abs(got(k) - c) < 1e-6, s"containment mismatch at $k")
-      }
+    import spark.implicits._
+    val rnd = new scala.util.Random(99)
+    val vocab = Vector.tabulate(30)(i => s"w$i")
+    def doc(len: Int): String =
+      Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    val corpus = (1 to 80).map(i => (i.toLong, doc(30 + rnd.nextInt(60))))
+    // probes: leading words of every 4th doc (true quotes), plus noise
+    val probes = corpus.collect { case (id, t) if id % 4 == 0 =>
+      (id + 5000L, t.split(" ").take(8 + rnd.nextInt(6)).mkString(" "))
+    } ++ (1 to 10).map(i => (9000L + i, doc(10)))
+    val got = Dedup.containmentJoin(probes.toDF("doc_id", "text"),
+        corpus.toDF("doc_id", "text"), "doc_id", "text", 3, 0.8)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    def grams(t: String): Set[String] =
+      t.split(" ").filter(_.nonEmpty).sliding(3).filter(_.length == 3)
+        .map(_.mkString(" ")).toSet
+    val want = (for {
+      (qi, qt) <- probes; (ci, ct) <- corpus
+      qg = grams(qt); cg = grams(ct)
+      if qg.nonEmpty && cg.nonEmpty && qi != ci
+      c = (qg & cg).size.toDouble / qg.size
+      r = BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if r >= 0.8
+    } yield ((qi, ci), r)).toMap
+    assert(want.nonEmpty, "fixture generated no qualifying pairs")
+    // every true quote's source must be present — the asymmetric catch
+    assert(corpus.collect { case (id, _) if id % 4 == 0 => id }
+      .forall(id => want.contains((id + 5000L, id))))
+    assert(got.keySet == want.keySet,
+      s"missing=${(want.keySet -- got.keySet).take(5)} " +
+        s"extra=${(got.keySet -- want.keySet).take(5)}")
+    want.foreach { case (k, c) =>
+      assert(math.abs(got(k) - c) < 1e-6, s"containment mismatch at $k")
     }
   }
 
@@ -239,104 +214,100 @@ class PipelineQualitySpec extends AnyFunSuite {
     // seeded random corpora engineered to stress the filter edges: tiny
     // vocabulary (dense gram sharing), mixed doc lengths (size-ratio
     // boundary), exact twins and 1-2 word truncations (J at/near 0.8).
-    withSpark { spark =>
-      import spark.implicits._
-      val rnd = new scala.util.Random(42)
-      val vocab = Vector.tabulate(25)(i => s"w$i")
-      def doc(len: Int): String =
-        Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      for (trial <- 1 to 3) {
-        val base = (1 to 120).map { i =>
-          (i.toLong, doc(4 + rnd.nextInt(40)), s"b${i % 2}")
-        }
-        val twins = base.collect { case (id, text, b) if id % 3 == 0 =>
-          val w = text.split(" ")
-          (id + 10000L, w.dropRight(1 + rnd.nextInt(2)).mkString(" "), b)
-        }
-        val corpus = (base ++ twins).toDF("doc_id", "text", "lang")
-        val got = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", "lang", 2, 0.8)
-          .select("a_id", "b_id", "jaccard").collect()
-          .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-        // brute force on the driver, same gram definition (distinct word 2-grams)
-        def grams(t: String): Set[String] =
-          t.split(" ").filter(_.nonEmpty).sliding(2).filter(_.length == 2)
-            .map(_.mkString(" ")).toSet
-        val rows = (base ++ twins).map { case (id, t, b) => (id, grams(t), b) }
-        val want = (for {
-          (ia, ga, ba) <- rows; (ib, gb, bb) <- rows
-          if ia < ib && ba == bb && ga.nonEmpty && gb.nonEmpty
-          inter = (ga & gb).size.toDouble
-          j = inter / (ga.size + gb.size - inter)
-          if BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble >= 0.8
-        } yield ((ia, ib),
-          BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toMap
-        assert(want.nonEmpty, s"trial $trial generated no qualifying pairs")
-        assert(got.keySet == want.keySet,
-          s"trial $trial: missing=${(want.keySet -- got.keySet).take(5)} " +
-            s"extra=${(got.keySet -- want.keySet).take(5)}")
-        want.foreach { case (k, j) =>
-          assert(math.abs(got(k) - j) < 1e-6, s"trial $trial: jaccard mismatch at $k")
-        }
+    import spark.implicits._
+    val rnd = new scala.util.Random(42)
+    val vocab = Vector.tabulate(25)(i => s"w$i")
+    def doc(len: Int): String =
+      Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+    for (trial <- 1 to 3) {
+      val base = (1 to 120).map { i =>
+        (i.toLong, doc(4 + rnd.nextInt(40)), s"b${i % 2}")
+      }
+      val twins = base.collect { case (id, text, b) if id % 3 == 0 =>
+        val w = text.split(" ")
+        (id + 10000L, w.dropRight(1 + rnd.nextInt(2)).mkString(" "), b)
+      }
+      val corpus = (base ++ twins).toDF("doc_id", "text", "lang")
+      val got = Dedup.ngramJaccardPairs(corpus, "doc_id", "text", "lang", 2, 0.8)
+        .select("a_id", "b_id", "jaccard").collect()
+        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      // brute force on the driver, same gram definition (distinct word 2-grams)
+      def grams(t: String): Set[String] =
+        t.split(" ").filter(_.nonEmpty).sliding(2).filter(_.length == 2)
+          .map(_.mkString(" ")).toSet
+      val rows = (base ++ twins).map { case (id, t, b) => (id, grams(t), b) }
+      val want = (for {
+        (ia, ga, ba) <- rows; (ib, gb, bb) <- rows
+        if ia < ib && ba == bb && ga.nonEmpty && gb.nonEmpty
+        inter = (ga & gb).size.toDouble
+        j = inter / (ga.size + gb.size - inter)
+        if BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble >= 0.8
+      } yield ((ia, ib),
+        BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toMap
+      assert(want.nonEmpty, s"trial $trial generated no qualifying pairs")
+      assert(got.keySet == want.keySet,
+        s"trial $trial: missing=${(want.keySet -- got.keySet).take(5)} " +
+          s"extra=${(got.keySet -- want.keySet).take(5)}")
+      want.foreach { case (k, j) =>
+        assert(math.abs(got(k) - j) < 1e-6, s"trial $trial: jaccard mismatch at $k")
       }
     }
   }
 
   test("MMR matches the scalar greedy reference and genuinely diversifies") {
-    withSpark { spark =>
-      val e = graft.Tables.embeddings(spark, sf)
-      val got = Similarity.mmrTopK(e, e.where(col("vec_id") < 3),
-          "vec_id", "embedding", candK = 12, k = 4, lambda = 0.7)
-        .collect()
-        .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3)))
-        .toMap
+    val e = graft.Tables.embeddings(spark, sf)
+    val got = Similarity.mmrTopK(e, e.where(col("vec_id") < 3),
+        "vec_id", "embedding", candK = 12, k = 4, lambda = 0.7)
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(2)) -> (r.getLong(1), r.getDouble(3)))
+      .toMap
 
-      // scalar reference: same rounded-6 cosine (identical fold order as
-      // the native expression), same greedy argmax with id tie-break
-      val vecs = e.select("vec_id", "embedding").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-      def cos(a: Array[Float], b: Array[Float]): Double = {
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < a.length) { val x = a(i).toDouble; val y = b(i).toDouble
-          dot += x * y; na += x * x; nb += y * y; i += 1 }
-        BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-      val lam = 0.7; val oneMinus = 1.0 - 0.7
-      val want = (0L until 3L).flatMap { q =>
-        val rel = vecs.keys.filter(_ != q).toSeq
-          .map(d => d -> cos(vecs(q), vecs(d)))
-          .sortBy { case (d, s) => (-s, d) }.take(12)
-        val selected = scala.collection.mutable.ArrayBuffer[Long]()
-        (1 to 4).map { r =>
-          val scoredRem = rel.filterNot(t => selected.contains(t._1)).map {
-            case (d, s) =>
-              val ms = if (selected.isEmpty) 0.0
-                else selected.map(sd => cos(vecs(d), vecs(sd))).max
-              (d, lam * s - oneMinus * ms)
-          }
-          val (bd, bs) = scoredRem.minBy { case (d, sc) => (-sc, d) }
-          selected += bd
-          (q, r) -> (bd, BigDecimal(bs).setScale(9,
-            BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-      }.toMap
-      assert(got == want)
-
-      // diversification: with a near-duplicate of the top hit injected as
-      // a candidate, plain top-k keeps both copies adjacent, MMR pushes
-      // the copy out of the early picks
-      val top1 = got((0L, 1))._1
-      val dup = e.where(col("vec_id") === top1)
-        .select((col("vec_id") + 7000000L).as("vec_id"),
-          transform(col("embedding"), (x, i) =>
-            when(i === 0, x + lit(0.001f)).otherwise(x)).as("embedding"),
-          col("label"))
-      val corpus2 = e.unionByName(dup)
-      val mmr2 = Similarity.mmrTopK(corpus2, e.where(col("vec_id") === 0),
-          "vec_id", "embedding", candK = 12, k = 4, lambda = 0.7)
-        .collect().map(r => r.getLong(1)).toSet
-      assert(mmr2.contains(top1) ^ mmr2.contains(top1 + 7000000L),
-        s"MMR kept both near-identical copies in 4 picks: $mmr2")
+    // scalar reference: same rounded-6 cosine (identical fold order as
+    // the native expression), same greedy argmax with id tie-break
+    val vecs = e.select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) { val x = a(i).toDouble; val y = b(i).toDouble
+        dot += x * y; na += x * x; nb += y * y; i += 1 }
+      BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
+    val lam = 0.7; val oneMinus = 1.0 - 0.7
+    val want = (0L until 3L).flatMap { q =>
+      val rel = vecs.keys.filter(_ != q).toSeq
+        .map(d => d -> cos(vecs(q), vecs(d)))
+        .sortBy { case (d, s) => (-s, d) }.take(12)
+      val selected = scala.collection.mutable.ArrayBuffer[Long]()
+      (1 to 4).map { r =>
+        val scoredRem = rel.filterNot(t => selected.contains(t._1)).map {
+          case (d, s) =>
+            val ms = if (selected.isEmpty) 0.0
+              else selected.map(sd => cos(vecs(d), vecs(sd))).max
+            (d, lam * s - oneMinus * ms)
+        }
+        val (bd, bs) = scoredRem.minBy { case (d, sc) => (-sc, d) }
+        selected += bd
+        (q, r) -> (bd, BigDecimal(bs).setScale(9,
+          BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
+    }.toMap
+    assert(got == want)
+
+    // diversification: with a near-duplicate of the top hit injected as
+    // a candidate, plain top-k keeps both copies adjacent, MMR pushes
+    // the copy out of the early picks
+    val top1 = got((0L, 1))._1
+    val dup = e.where(col("vec_id") === top1)
+      .select((col("vec_id") + 7000000L).as("vec_id"),
+        transform(col("embedding"), (x, i) =>
+          when(i === 0, x + lit(0.001f)).otherwise(x)).as("embedding"),
+        col("label"))
+    val corpus2 = e.unionByName(dup)
+    val mmr2 = Similarity.mmrTopK(corpus2, e.where(col("vec_id") === 0),
+        "vec_id", "embedding", candK = 12, k = 4, lambda = 0.7)
+      .collect().map(r => r.getLong(1)).toSet
+    assert(mmr2.contains(top1) ^ mmr2.contains(top1 + 7000000L),
+      s"MMR kept both near-identical copies in 4 picks: $mmr2")
   }
 }

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** Projection.project against a scalar reimplementation (same implicit
   * sign matrix, fixed-point fold), the JL distance-preservation sanity
   * property, and the power-of-four dimension guard. */
-class ProjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("projection-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class ProjectionSpec extends AnyFunSuite with SharedSpark {
 
   private def scalarProject(v: Seq[Float], outDims: Int): Seq[Double] =
     (0 until outDims).map { j =>

@@ -1,21 +1,11 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Gopher and C4 rule filters: every branch of both keep flags flipped by
   * an engineered fixture, plus the map-only plan shape. */
-class QualityRulesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("quality-rules-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class QualityRulesSpec extends AnyFunSuite with SharedSpark {
 
   test("gopherRules: each rule rejects independently; integer boundaries are exact") {
     import spark.implicits._

@@ -1,22 +1,12 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Retrieval.bm25TopK against a scalar BM25 with the same constants and
   * fold order, including absent query terms, non-matching docs, and
   * score-tie determinism. */
-class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("retrieval-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class RetrievalSpec extends AnyFunSuite with SharedSpark {
 
   private def scalarBm25(docs: Seq[(Long, String)], query: String,
                          k1: Double = 1.2, b: Double = 0.75): Map[Long, Double] = {

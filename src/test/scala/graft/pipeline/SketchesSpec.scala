@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** Count-Min sketch invariants: one-sided error (never underestimates),
   * exactness when the sketch is wide enough to avoid collisions, the
   * cell-wise mergeability that makes it shard/stream-composable, and the
   * zero estimate for untouched cells. */
-class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("sketches-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class SketchesSpec extends AnyFunSuite with SharedSpark {
 
   private def itemStream(rnd: scala.util.Random, n: Int) =
     (1 to n).map(_ => s"w${rnd.nextInt(80)}")

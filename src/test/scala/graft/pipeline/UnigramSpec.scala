@@ -1,20 +1,12 @@
 package graft.pipeline
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** Unigram.train against a single-threaded scalar EM (same seed rule,
   * same integer centi-nat scores, same Viterbi tie-break), plus hand
   * cases for the Viterbi itself and the prune semantics. */
-class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("unigram-spec")
-    .getOrCreate()
+class UnigramSpec extends AnyFunSuite with SharedSpark {
 
   test("viterbi picks the cheapest segmentation; ties break on fewer tokens") {
     val nll = Map("a" -> 300, "b" -> 300, "ab" -> 500, "abc" -> 700, "c" -> 300)
@@ -153,5 +145,4 @@ class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Set("s", "h", "o", "r", "t").subsetOf(got), got.toString)
   }
 
-  override def afterAll(): Unit = spark.stop()
 }

@@ -1,19 +1,12 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** Urls.canonicalUrl rule-by-rule on hand-built cases, and the dedup
   * flag's first-occurrence-wins contract. */
-class UrlsSpec extends AnyFunSuite {
-
-  private def session() = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("urls-spec")
-    .getOrCreate()
+class UrlsSpec extends AnyFunSuite with SharedSpark {
 
   private val cases: Seq[(String, String)] = Seq(
     // fragment stripped, scheme+host lowercased, www stripped, :443 dropped
@@ -41,41 +34,35 @@ class UrlsSpec extends AnyFunSuite {
     ("https://www.example.com/", "https://example.com/"))
 
   test("canonicalUrl: every normalization rule, case by case") {
-    val spark = session()
     import spark.implicits._
-    try {
-      val got = cases.map(_._1).toDF("url")
-        .select(Urls.canonicalUrl(col("url")).as("c"))
-        .collect().map(_.getString(0))
-      cases.zip(got).foreach { case ((in, want), have) =>
-        assert(have == want, s"in=$in")
-      }
-      // non-absolute and degenerate inputs → null (quarantine, not garbage)
-      val bad = Seq("not a url", "mailto:user@example.com", "://x", "https://")
-        .toDF("url")
-        .select(Urls.canonicalUrl(col("url")).as("c"))
-        .collect().map(r => Option(r.getString(0)))
-      assert(bad.forall(_.isEmpty), bad.mkString(","))
-    } finally spark.stop()
+    val got = cases.map(_._1).toDF("url")
+      .select(Urls.canonicalUrl(col("url")).as("c"))
+      .collect().map(_.getString(0))
+    cases.zip(got).foreach { case ((in, want), have) =>
+      assert(have == want, s"in=$in")
+    }
+    // non-absolute and degenerate inputs → null (quarantine, not garbage)
+    val bad = Seq("not a url", "mailto:user@example.com", "://x", "https://")
+      .toDF("url")
+      .select(Urls.canonicalUrl(col("url")).as("c"))
+      .collect().map(r => Option(r.getString(0)))
+    assert(bad.forall(_.isEmpty), bad.mkString(","))
   }
 
   test("dedupByCanonical: first id claims the key; host extracted") {
-    val spark = session()
     import spark.implicits._
-    try {
-      val df = Seq(
-        (1L, "https://WWW.Example.com/a?utm_source=x"),
-        (2L, "https://example.com:443/a/"),  // same canon as 1
-        (3L, "https://example.com/b"),
-        (4L, "http://example.com:8080/a")    // port differs → distinct
-      ).toDF("id", "url")
-      val got = Urls.dedupByCanonical(df, "id", "url")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3)))
-        .sortBy(_._1)
-      assert(got(0) == ((1L, "example.com", "https://example.com/a", 0)))
-      assert(got(1) == ((2L, "example.com", "https://example.com/a", 1)))
-      assert(got(2) == ((3L, "example.com", "https://example.com/b", 0)))
-      assert(got(3) == ((4L, "example.com", "http://example.com:8080/a", 0)))
-    } finally spark.stop()
+    val df = Seq(
+      (1L, "https://WWW.Example.com/a?utm_source=x"),
+      (2L, "https://example.com:443/a/"),  // same canon as 1
+      (3L, "https://example.com/b"),
+      (4L, "http://example.com:8080/a")    // port differs → distinct
+    ).toDF("id", "url")
+    val got = Urls.dedupByCanonical(df, "id", "url")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3)))
+      .sortBy(_._1)
+    assert(got(0) == ((1L, "example.com", "https://example.com/a", 0)))
+    assert(got(1) == ((2L, "example.com", "https://example.com/a", 1)))
+    assert(got(2) == ((3L, "example.com", "https://example.com/b", 0)))
+    assert(got(3) == ((4L, "example.com", "http://example.com:8080/a", 0)))
   }
 }

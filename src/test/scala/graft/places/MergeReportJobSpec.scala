@@ -1,9 +1,9 @@
 package graft.places
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 import graft.places.MergeReportJob.{GroupResult, ReportFeature}
+import graft.SharedSpark
 
 /** `MergeReportJob.run` against a driver-side replay of the reference's
   * report loop (MergePlaceBot.java:144-209) on a small planted report that
@@ -11,7 +11,11 @@ import graft.places.MergeReportJob.{GroupResult, ReportFeature}
   * mall, ambiguous and empty groups, and a deleted feature at the very last
   * position. The report is 48 features in 10 groups whose starts fall on
   * the edges of its 3- and 8-way input partitions. */
-class MergeReportJobSpec extends AnyFunSuite {
+class MergeReportJobSpec extends AnyFunSuite with SharedSpark {
+
+  override protected def cpus = 2
+  override protected def sparkConf = Seq(
+    "spark.sql.shuffle.partitions" -> "3")
 
   /** One planted place: its report id, whether it is closed, its offset in
     * meters north and east of its group's base point, and its tags. */
@@ -133,28 +137,20 @@ class MergeReportJobSpec extends AnyFunSuite {
   }
 
   test("planted report: run on 1, 3 and 8 partitions equals the driver-side replay") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "3")
-      .config("spark.ui.enabled", "false")
-      .appName("merge-report-job-spec")
-      .getOrCreate()
     import spark.implicits._
-    try {
-      assert(features.size == 48 && groupStarts.size == groups.size)
-      val expected = replay(features)
-      assert(expected.size == groups.size)
-      assert(expected.map(_.closedPlaces).sum == features.count(_.deleted.isDefined))
-      assert(expected.flatMap(_.mergedPairs).toSet == planted)
-      assert(expected.map(_.similarPlaces) == Seq(2, 1, 1, 1, 2, 1, 0, 1, 2, 2))
-      Seq(1, 3, 8).foreach { n =>
-        val rdd = spark.sparkContext.parallelize(features, n)
-        // every partition edge is a group start
-        val firsts = rdd.mapPartitions(it => it.take(1).map(_.ord)).collect().toSet
-        assert(firsts.size == n && firsts.subsetOf(groupStarts), s"$n partitions: $firsts")
-        val got = MergeReportJob.run(spark.createDataset(rdd)).collect().sortBy(_.groupId).toSeq
-        assert(got == expected, s"$n partitions")
-      }
-    } finally spark.stop()
+    assert(features.size == 48 && groupStarts.size == groups.size)
+    val expected = replay(features)
+    assert(expected.size == groups.size)
+    assert(expected.map(_.closedPlaces).sum == features.count(_.deleted.isDefined))
+    assert(expected.flatMap(_.mergedPairs).toSet == planted)
+    assert(expected.map(_.similarPlaces) == Seq(2, 1, 1, 1, 2, 1, 0, 1, 2, 2))
+    Seq(1, 3, 8).foreach { n =>
+      val rdd = spark.sparkContext.parallelize(features, n)
+      // every partition edge is a group start
+      val firsts = rdd.mapPartitions(it => it.take(1).map(_.ord)).collect().toSet
+      assert(firsts.size == n && firsts.subsetOf(groupStarts), s"$n partitions: $firsts")
+      val got = MergeReportJob.run(spark.createDataset(rdd)).collect().sortBy(_.groupId).toSeq
+      assert(got == expected, s"$n partitions")
+    }
   }
 }

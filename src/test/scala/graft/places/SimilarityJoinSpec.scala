@@ -1,22 +1,15 @@
 package graft.places
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 import graft.text.{SimilarityJoin, TextFunctions}
+import graft.SharedSpark
 
 /** The distributed checkNames pair generator must reproduce the driver-side
   * brute force exactly — including all-fuzzy pairs with no shared token
   * (the case naive shared-token blocking misses), differently-tokenized
   * nospace matches, and punctuation-only tokens. */
-class SimilarityJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("similarity-join")
-    .getOrCreate()
+class SimilarityJoinSpec extends AnyFunSuite with SharedSpark {
 
   private val vocab: Seq[String] = Seq(
     "rose blue", "rosy blue", "rose", "rosy",          // fuzzy single word

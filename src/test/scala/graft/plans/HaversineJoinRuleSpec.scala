@@ -1,9 +1,9 @@
 package graft.plans
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.SharedSpark
 import graft.geo.GeoFunctions
 
 /** The distance-join optimizer rule: a naive `haversine_m(...) < r` join
@@ -11,32 +11,11 @@ import graft.geo.GeoFunctions
   * return exactly the brute-force pair set — including across OLC cell
   * borders, the antimeridian, near-polar latitudes, and null coordinates.
   */
-class HaversineJoinRuleSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class HaversineJoinRuleSpec extends AnyFunSuite with SharedSpark {
 
-  // symmetric to the clean-slate build below: do not leak the
-  // extensions-enabled session to later suites either
-  override def afterAll(): Unit = spark.stop()
-
-  private lazy val spark = {
-    // this suite NEEDS its own session config (the extensions injection
-    // below); a session leaked by an earlier suite would be returned by
-    // getOrCreate without it and every rule assertion would fail
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .foreach(_.stop())
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // end-to-end through the cluster deployment path: the rule and the
-      // native functions arrive via SparkSessionExtensions injection
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("haversine-join-rule")
-      .getOrCreate()
-  }
+  // end-to-end through the cluster deployment path: the rule and the
+  // native functions arrive via SparkSessionExtensions injection
+  override protected def sparkConf = Seq("spark.sql.extensions" -> "graft.GraftExtensions")
 
   /** Deterministic scatter crossing 20° OLC-cell borders (lat/lon 0),
     * plus antimeridian straddlers, near-polar points, and nulls. */

@@ -1,26 +1,16 @@
 package graft.plans
 
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.AsofJoin
+import graft.SharedSpark
 
 /** NativeAsofJoin (the custom LogicalPlan/Strategy/SparkPlan form)
   * against both a brute-force reference and the union+window
   * composition, including ties, hot keys, null keys/timestamps, and the
   * physical-plan shape (AsofJoinExec present, children sorted). */
-class NativeAsofJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("native-asof-spec")
-    .getOrCreate()
-
-  override def afterAll(): Unit = spark.stop()
+class NativeAsofJoinSpec extends AnyFunSuite with SharedSpark {
 
   private def fixture(seed: Int, n: Int, hotFrac: Double = 0.0) = {
     import spark.implicits._

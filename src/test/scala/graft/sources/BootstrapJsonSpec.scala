@@ -1,21 +1,17 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** A11: bootstrap JSON op arrays (reference:
   * OpenPlaceReviewsDbBoot.java:86-93, bootstrap/opr-osm.json) read as a
   * multiLine JSON source into the operations frame shape. */
-class BootstrapJsonSpec extends AnyFunSuite {
+class BootstrapJsonSpec extends AnyFunSuite with SharedSpark {
+
+  override protected def cpus = 2
 
   test("multiLine json array of ops → typed operations frame") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("bootstrap-json-spec")
-      .getOrCreate()
     val f = java.nio.file.Files.createTempFile("bootstrap", ".json")
     java.nio.file.Files.writeString(f,
       """[
@@ -39,6 +35,5 @@ class BootstrapJsonSpec extends AnyFunSuite {
     val osmId = place.where(col("c.placetype") === "cafe")
       .select(col("c.source.osm")(0)("id")).head.getLong(0)
     assert(osmId == 101L)
-    spark.stop()
   }
 }

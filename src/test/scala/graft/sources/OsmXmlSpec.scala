@@ -2,10 +2,13 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.OsmXml.{OsmDiff, OsmEntity, OsmMember}
+import graft.SharedSpark
 
 /** A1/A2: OSM XML entity + augmented-diff parsing, render roundtrip, and
   * the file-based Dataset source (one task per chunk file). */
-class OsmXmlSpec extends AnyFunSuite {
+class OsmXmlSpec extends AnyFunSuite with SharedSpark {
+
+  override protected def cpus = 2
 
   private val nodeXml =
     """<?xml version="1.0" encoding="UTF-8"?>
@@ -103,12 +106,6 @@ class OsmXmlSpec extends AnyFunSuite {
   }
 
   test("file source: chunk files → Dataset, plus D8 way→node link resolution") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("osmxml-spec")
-      .getOrCreate()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("osmxml").toFile
     // two chunk files, like the reference's overpass_cache directory (A4)
@@ -137,6 +134,5 @@ class OsmXmlSpec extends AnyFunSuite {
     val avgLat = resolved.agg(org.apache.spark.sql.functions.avg($"lat")).head.getDouble(0)
     assert(math.abs(avgLat - 10.0005) < 1e-9)
     ents.unpersist()
-    spark.stop()
   }
 }

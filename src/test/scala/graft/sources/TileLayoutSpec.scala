@@ -1,8 +1,8 @@
 package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.SharedSpark
 
 /** A7 at scale: the reference's tile index becomes PHYSICAL LAYOUT —
   * `partitionBy("tileid")` parquet, so a tile query is partition pruning,
@@ -10,15 +10,11 @@ import org.apache.spark.sql.functions._
   * that make it work at 100 TB: (1) a tileid predicate prunes the file
   * listing to the matching directory, (2) results are identical to the
   * unpartitioned scan. */
-class TileLayoutSpec extends AnyFunSuite {
+class TileLayoutSpec extends AnyFunSuite with SharedSpark {
+
+  override protected def cpus = 2
 
   test("partitionBy(tileid) layout: pruned reads, identical results") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("tile-layout-spec")
-      .getOrCreate()
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("tilelayout").toFile
     val out = new java.io.File(dir, "places").getAbsolutePath
@@ -44,6 +40,5 @@ class TileLayoutSpec extends AnyFunSuite {
       .select($"key").as[Long].collect().sorted
     val got = pruned.select($"key").as[Long].collect().sorted
     assert(got.sameElements(expect))
-    spark.stop()
   }
 }

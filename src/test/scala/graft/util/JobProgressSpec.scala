@@ -1,20 +1,13 @@
 package graft.util
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import graft.SharedSpark
 
 /** E6 progress counters: a monitored action reports complete, non-zero
   * task totals, record counts, and fraction 1.0 when done — and a
   * detached listener stops counting (the per-run scoping the reference's
   * per-bot counters have). */
-class JobProgressSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("job-progress")
-    .getOrCreate()
+class JobProgressSpec extends AnyFunSuite with SharedSpark {
 
   test("attached listener reports full progress for a monitored action") {
     import spark.implicits._

@@ -11,6 +11,9 @@
 # <query> may be a comma-separated list of queries.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+# both sides on the same core count (RunOne's default has changed over
+# time: 8 cores, later min(32, nproc))
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 Q="$1"; BEFORE="$2"; AFTER="$3"; BLOCKS="${4:-2}"; TIMES="${5:-3}"; SF="${6:-/root/testdata/sf0.1}"
 LOG="$(mktemp)"
 trap 'rm -f "$LOG"' EXIT

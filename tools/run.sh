@@ -14,8 +14,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# session settings (UTC, no UI) come from graft.GraftSession
 exec java $ADD_OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-32g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
